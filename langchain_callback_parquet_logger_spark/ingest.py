@@ -7,11 +7,16 @@ declarative Spark transform:
     (P2, the 7-column log row) → JSON payload assembly (F1) →
     date-partitioned parquet (sinks.py)
 
-The reference does this row-by-row in Python with a lock-serialized buffer
-(`logger.py:418-440`); here stages 2-6 of its lifecycle collapse into one
-Catalyst-planned job — filtering is predicate-pushdown, JSON assembly is
-codegen'd `to_json`, and the micro-batch buffer becomes either one batch job
-or a Structured Streaming trigger (streaming/ingest.py).
+For batch ingest and streaming the stages collapse into one Catalyst-planned
+job: filtering is predicate pushdown, JSON assembly is codegen'd `to_json`,
+and the micro-batch becomes one batch job or a Structured Streaming trigger
+(streaming/ingest.py).
+
+The live logger's flush (logger.py) is the one path that skips Spark, as the
+reference does (`logger.py:446-463`): a buffer of 100 rows costs a few ms in
+Python and Arrow, where a Spark job costs hundreds. `normalize_rows` is that
+path's projection, the Arrow twin of `normalize_events`; the two write the
+same rows, byte for byte, which tests/test_flush_parity.py pins.
 
 Reference citations: logger.py:168-187 (payload IR), logger.py:228-239 (row
 projection), logger.py:241-249 (event filter), tagging.py:85-98 (custom-id
@@ -20,9 +25,13 @@ extraction), config.py:161 (tag prefix).
 
 from __future__ import annotations
 
+import datetime as dt
 import json
+import re
 from typing import Iterable, Mapping, Sequence
+from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -174,6 +183,106 @@ def _splice_json_sections(envelope: Column, data_col: Column, raw_col: Column) -
         raw_col.isNotNull(), F.concat(F.lit(',"raw":'), raw_col)
     ).otherwise(F.lit(""))
     return F.concat(head, data_part, raw_part, F.lit("}"))
+
+
+# ---------------------------------------------------------------------------
+# The same projection in Python and Arrow, for the live logger's flush.
+# Input: buffered raw event rows in RAW_EVENT_DDL column order. Output: the
+# rows normalize_events + to_date("timestamp") would produce.
+# ---------------------------------------------------------------------------
+def session_zone(spark: SparkSession) -> dt.tzinfo:
+    """``spark.sql.session.timeZone`` as a tzinfo: a region id such as
+    ``Asia/Kolkata``, or a fixed offset such as ``+05:30`` or ``GMT-8``."""
+    name = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        return ZoneInfo(name)
+    except (ZoneInfoNotFoundError, ValueError):
+        pass
+    m = re.fullmatch(r"(?:UTC|GMT|UT)?([+-])(\d{1,2})(?::?(\d{2}))?", name)
+    if m is None:
+        raise ValueError(f"unsupported spark.sql.session.timeZone: {name!r}")
+    offset = dt.timedelta(hours=int(m[2]), minutes=int(m[3] or 0))
+    return dt.timezone(offset if m[1] == "+" else -offset)
+
+
+# A JSON escape in json.dumps output: an escaped backslash (matched so that
+# the text after it is not taken for an escape) or a \u00XX control escape.
+_ESCAPE = re.compile(r"\\(?:\\|u00([0-9a-f]{2}))")
+
+
+def _spark_json(obj: object) -> str:
+    """Compact JSON exactly as Spark's ``to_json`` (Jackson) writes it.
+    Both leave non-ASCII unescaped and use the same short escapes; they
+    differ only in the hex case of ``\\u00XX`` escapes, which Jackson
+    writes in uppercase."""
+    s = json.dumps(obj, ensure_ascii=False, separators=(",", ":"))
+    if "\\u00" in s:
+        s = _ESCAPE.sub(lambda m: "\\u00" + m[1].upper() if m[1] else m[0], s)
+    return s
+
+
+def _iso_micros(ts: dt.datetime, zone: dt.tzinfo) -> str:
+    """``date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")`` in ``zone``."""
+    s = ts.astimezone(zone).isoformat(timespec="microseconds")
+    return s[:-6] + "Z" if s.endswith("+00:00") else s
+
+
+def normalize_rows(
+    rows: Sequence[tuple],
+    zone: dt.tzinfo,
+    logger_metadata: Mapping[str, object] | None = None,
+    with_date: bool = True,
+) -> pa.Table:
+    """The ``normalize_events`` projection of raw event rows (tuples in
+    ``RAW_EVENT_DDL`` order, timestamps timezone-aware) as a pyarrow
+    Table: the 7 log columns, plus the ``date`` partition string when
+    ``with_date``. ``zone`` is the session time zone, which sets the
+    payload timestamp's offset and the date. Rows are not filtered, and
+    ``metadata`` maps keep their key order, as in ``normalize_events``."""
+    meta_json = json.dumps(dict(logger_metadata or {}), separators=(",", ":"))
+    parents, custom_ids, payloads, dates = [], [], [], []
+    for ts, run_id, parent, event_type, tags, metadata, data, raw in rows:
+        parent = parent or ""
+        custom_id = next(
+            (t[len(CUSTOM_ID_PREFIX):] for t in tags
+             if t is not None and t.startswith(CUSTOM_ID_PREFIX)),
+            "",
+        )
+        stamp = _iso_micros(ts, zone)
+        envelope = _spark_json({
+            "event_type": event_type,
+            "timestamp": stamp,
+            "execution": {
+                "run_id": run_id,
+                "parent_run_id": parent,
+                "custom_id": custom_id,
+                "tags": tags,
+                "metadata": metadata,
+            },
+        })
+        # the splice of _splice_json_sections
+        payload = [envelope[:-1]]
+        if data is not None:
+            payload += (',"data":', data)
+        if raw is not None:
+            payload += (',"raw":', raw)
+        payload.append("}")
+        parents.append(parent)
+        custom_ids.append(custom_id)
+        payloads.append("".join(payload))
+        dates.append(stamp[:10])
+    arrays = {
+        "timestamp": pa.array([r[0] for r in rows], pa.timestamp("us", tz="UTC")),
+        "run_id": pa.array([r[1] for r in rows], pa.string()),
+        "parent_run_id": pa.array(parents, pa.string()),
+        "custom_id": pa.array(custom_ids, pa.string()),
+        "event_type": pa.array([r[3] for r in rows], pa.string()),
+        "logger_metadata": pa.array([meta_json] * len(rows), pa.string()),
+        "payload": pa.array(payloads, pa.string()),
+    }
+    if with_date:
+        arrays["date"] = pa.array(dates, pa.string())
+    return pa.table(arrays)
 
 
 # Raw event-file schema shared by the batch and streaming sources.

@@ -1,21 +1,35 @@
-"""Live event capture: a LangChain-compatible callback handler backed by the
-Spark engine.
+"""Live event capture: a LangChain-compatible callback handler that writes
+the 7-column event log.
 
 API parity with the reference's ``ParquetLogger`` (logger.py:33-491 in
 /root/reference): 12 ``on_*`` handlers, event-type filtering, a size-bounded
 buffer with manual/context/atexit flush, date partitioning, and the
 ``{event_type, timestamp, execution, data, raw}`` payload envelope.
 
-Spark-first differences (deliberate, SURVEY.md §3.1):
-- The buffer holds *raw event rows*, not pre-serialized payloads; flush runs
-  the declarative ``normalize_events`` transform + partitioned parquet write,
-  so the same Catalyst plan serves live capture, batch ingest, and streaming.
+Differences from the reference (deliberate):
+- The buffer holds raw event rows. A flush builds the log columns in Python
+  and Arrow (``ingest.normalize_rows``, which produces the same rows, byte
+  for byte, as the ``normalize_events`` Spark transform used by batch ingest
+  and streaming) and hands the table to ``ParquetSink.write``: one snappy
+  parquet file per date partition per flush, and no Spark job, which would
+  block the flushing callback for hundreds of ms per 100 rows. The flush
+  needs no live JVM, so the atexit flush works after Spark has stopped.
+- The date partition and the payload timestamp use the session time zone
+  (``spark.sql.session.timeZone``), read once when the logger is built.
+- Sinks: local paths, ``file://``, and ``s3a://``/``s3://`` (boto3
+  ``put_object`` per file, credentials from the boto3 default chain, not
+  ``fs.s3a.*``). Any other scheme raises ValueError when the logger is
+  built; use ``sinks.write_log`` on a Spark frame for Hadoop-only stores.
 - No lock-serialized I/O: the reference writes while holding its buffer lock
-  (logger.py:418-440); here the lock only guards the tiny in-memory list
-  swap — the write happens outside it, parallel across partitions.
-- Event dicts are serialized with a best-effort duck-typed cascade matching
-  the reference's behavior (model_dump → to_dict → __dict__ → str,
-  logger.py:103-150) before they enter the JVM.
+  (logger.py:418-440); here the lock only guards the buffer swap.
+- Event dicts are converted with a best-effort duck-typed cascade matching
+  the reference (model_dump → to_dict → __dict__ → str, logger.py:103-150).
+  A handler converts each argument once and serializes the result without
+  walking it again; the public ``log_event`` converts its arguments itself.
+  One edge case changes: the second walk counted depth from the payload's
+  root, one level above each argument, so it turned the 21st nesting level
+  of an argument into a ``str``; that level now keeps its shape, and only
+  deeper levels are cut.
 
 LangChain itself is optional: the handler duck-types BaseCallbackHandler's
 method surface, so it works as a callback when langchain-core is installed
@@ -32,15 +46,9 @@ from typing import Any, Iterable, Literal, Mapping, Sequence
 
 from pyspark.sql import SparkSession
 
-from .ingest import normalize_events
+from .ingest import normalize_rows, session_zone
 from .schema import DEFAULT_EVENT_TYPES
 from .sinks import CompositeSink, ParquetSink, create_sink
-
-_RAW_EVENT_SCHEMA = (
-    "timestamp timestamp, run_id string, parent_run_id string, "
-    "event_type string, tags array<string>, metadata map<string,string>, "
-    "data string, raw string"
-)
 
 
 def to_jsonable(obj: Any, _depth: int = 0) -> Any:
@@ -70,10 +78,14 @@ def to_jsonable(obj: Any, _depth: int = 0) -> Any:
     return str(obj)
 
 
-def safe_json_dumps(obj: Any) -> str:
-    """Second defensive layer (reference logger.py:152-166)."""
+def safe_json_dumps(obj: Any, walked: bool = False) -> str:
+    """Second defensive layer (reference logger.py:152-166). ``walked``
+    says ``obj`` is already ``to_jsonable`` output, which is not walked
+    again."""
     try:
-        return json.dumps(to_jsonable(obj), separators=(",", ":"), default=str)
+        return json.dumps(
+            obj if walked else to_jsonable(obj), separators=(",", ":"), default=str
+        )
     except Exception:
         return json.dumps({"serialization_error": str(obj)[:1000]})
 
@@ -83,14 +95,12 @@ def _error_payload(error: BaseException) -> dict:
     return {"message": str(error), "type": type(error).__name__}
 
 
-def _extract_llm_end_data(response: Any) -> dict:
+def _extract_llm_end_data(r: Any) -> dict:
     """Pull response text + usage/response metadata off the first generation
-    (reference logger.py:196-215, 289-307), tolerating malformed shapes
-    (tests/test_usage_metadata.py:142-167)."""
-    data: dict[str, Any] = {}
+    of a converted response (reference logger.py:196-215, 289-307),
+    tolerating malformed shapes (tests/test_usage_metadata.py:142-167)."""
+    data: dict[str, Any] = {"response": r}
     try:
-        r = to_jsonable(response)
-        data["response"] = r
         gens = r.get("generations") if isinstance(r, dict) else None
         first = None
         if isinstance(gens, list) and gens:
@@ -115,7 +125,8 @@ def _extract_llm_end_data(response: Any) -> dict:
 
 
 class SparkParquetLogger:
-    """Buffered event logger writing date-partitioned parquet through Spark.
+    """Buffered event logger writing date-partitioned parquet, one file
+    per partition per flush.
 
     Usage (mirrors the reference README):
 
@@ -158,9 +169,18 @@ class SparkParquetLogger:
             DEFAULT_EVENT_TYPES
         )
         self.logger_metadata = dict(logger_metadata or {})
+        self.partition_on = partition_on
         self.sink: ParquetSink | CompositeSink = create_sink(
             base_dir, s3_dir, partition_on=partition_on
         )
+        legs = self.sink.sinks if isinstance(self.sink, CompositeSink) else [self.sink]
+        for leg in legs:
+            leg.arrow_store()  # an unsupported scheme fails here, not at a flush
+        self._zone = session_zone(spark)
+        # pyarrow looks for pandas on first use, by an import that fails once
+        # the interpreter is shutting down, where the atexit flush can be
+        # the first use: make it now.
+        normalize_rows([], self._zone)
         self._buffer: list[tuple] = []
         self._lock = threading.Lock()
         atexit.register(self.flush)
@@ -185,15 +205,33 @@ class SparkParquetLogger:
         146-159) — those events skip the event_types filter."""
         if not _bypass_filter and event_type not in self.event_types:
             return
+        self._append(
+            event_type, run_id, parent_run_id, tags, metadata,
+            safe_json_dumps(data) if data is not None else None,
+            safe_json_dumps(raw) if raw is not None else None,
+        )
+
+    def _append(
+        self,
+        event_type: str,
+        run_id: Any,
+        parent_run_id: Any,
+        tags: Sequence[str] | None,
+        metadata: Mapping[str, Any] | None,
+        data: str | None,
+        raw: str | None,
+    ) -> None:
+        """Buffer one row whose ``data``/``raw`` are JSON text; flush when
+        the buffer threshold is reached."""
         row = (
             dt.datetime.now(dt.timezone.utc),
             str(run_id) if run_id is not None else "",
             str(parent_run_id) if parent_run_id is not None else None,
             event_type,
-            list(tags or []),
+            [t if t is None else str(t) for t in tags or []],
             {str(k): str(v) for k, v in (metadata or {}).items()},
-            safe_json_dumps(data) if data is not None else None,
-            safe_json_dumps(raw) if raw is not None else None,
+            data,
+            raw,
         )
         with self._lock:
             self._buffer.append(row)
@@ -202,20 +240,16 @@ class SparkParquetLogger:
             self.flush()
 
     def flush(self) -> None:
-        """Swap the buffer under the lock, write outside it."""
+        """Swap the buffer under the lock; build and write it outside."""
         with self._lock:
             if not self._buffer:
                 return
             batch, self._buffer = self._buffer, []
-        df = self.spark.createDataFrame(batch, _RAW_EVENT_SCHEMA)
-        normalized = normalize_events(
-            df,
-            logger_metadata=self.logger_metadata,
-            # rows were already filtered at capture; pass-through here keeps
-            # bypass-injected events intact
-            event_types=[r[3] for r in batch],
+        table = normalize_rows(
+            batch, self._zone, self.logger_metadata,
+            with_date=self.partition_on == "date",
         )
-        self.sink.write(normalized)
+        self.sink.write(table)
 
     def __enter__(self) -> "SparkParquetLogger":
         return self
@@ -224,103 +258,122 @@ class SparkParquetLogger:
         self.flush()
 
     # -- the 12 LangChain handlers (reference logger.py:252-415) -----------
+    # Each converts its arguments once, and only for a captured event type.
 
     def on_llm_start(self, serialized: Any, prompts: Any, **kw: Any) -> None:
+        if "llm_start" not in self.event_types:
+            return
+        s, p, kw_j = to_jsonable(serialized), to_jsonable(prompts), _raw_kwargs(kw)
         self._handle(
             "llm_start",
             kw,
             data={
-                "prompts": to_jsonable(prompts),
-                "llm_type": (serialized or {}).get("_type")
-                if isinstance(serialized, Mapping)
-                else None,
-                "serialized": to_jsonable(serialized),
-                "invocation_params": to_jsonable(kw.get("invocation_params")),
+                "prompts": p,
+                "llm_type": s.get("_type") if isinstance(serialized, Mapping) else None,
+                "serialized": s,
+                "invocation_params": kw_j.get("invocation_params"),
             },
-            raw={"serialized": to_jsonable(serialized), "prompts": to_jsonable(prompts), **_raw_kwargs(kw)},
+            raw={"serialized": s, "prompts": p, **kw_j},
         )
 
     def on_chat_model_start(self, serialized: Any, messages: Any, **kw: Any) -> None:
+        if "chat_model_start" not in self.event_types:
+            return
+        s, m = to_jsonable(serialized), to_jsonable(messages)
         self._handle(
             "chat_model_start",
             kw,
-            data={"messages": to_jsonable(messages), "serialized": to_jsonable(serialized)},
-            raw={"serialized": to_jsonable(serialized), "messages": to_jsonable(messages), **_raw_kwargs(kw)},
+            data={"messages": m, "serialized": s},
+            raw={"serialized": s, "messages": m, **_raw_kwargs(kw)},
         )
 
     def on_llm_end(self, response: Any, **kw: Any) -> None:
+        if "llm_end" not in self.event_types:
+            return
+        r = to_jsonable(response)
         self._handle(
             "llm_end",
             kw,
-            data=_extract_llm_end_data(response),
-            raw={"response": to_jsonable(response), **_raw_kwargs(kw)},
+            data=_extract_llm_end_data(r),
+            raw={"response": r, **_raw_kwargs(kw)},
         )
 
     def on_llm_error(self, error: BaseException, **kw: Any) -> None:
-        self._handle(
-            "llm_error",
-            kw,
-            data={"error": _error_payload(error)},
-            raw=_raw_kwargs(kw),
-        )
+        if "llm_error" in self.event_types:
+            self._handle(
+                "llm_error", kw, data={"error": _error_payload(error)}, raw=_raw_kwargs(kw)
+            )
 
     def on_chain_start(self, serialized: Any, inputs: Any, **kw: Any) -> None:
+        if "chain_start" not in self.event_types:
+            return
+        i = to_jsonable(inputs)
         self._handle(
             "chain_start",
             kw,
-            data={"inputs": to_jsonable(inputs)},
-            raw={"serialized": to_jsonable(serialized), "inputs": to_jsonable(inputs), **_raw_kwargs(kw)},
+            data={"inputs": i},
+            raw={"serialized": to_jsonable(serialized), "inputs": i, **_raw_kwargs(kw)},
         )
 
     def on_chain_end(self, outputs: Any, **kw: Any) -> None:
-        self._handle(
-            "chain_end", kw, data={"outputs": to_jsonable(outputs)}, raw=_raw_kwargs(kw)
-        )
+        if "chain_end" in self.event_types:
+            self._handle(
+                "chain_end", kw, data={"outputs": to_jsonable(outputs)}, raw=_raw_kwargs(kw)
+            )
 
     def on_chain_error(self, error: BaseException, **kw: Any) -> None:
-        self._handle(
-            "chain_error", kw, data={"error": _error_payload(error)}, raw=_raw_kwargs(kw)
-        )
+        if "chain_error" in self.event_types:
+            self._handle(
+                "chain_error", kw, data={"error": _error_payload(error)}, raw=_raw_kwargs(kw)
+            )
 
     def on_tool_start(self, serialized: Any, input_str: Any, **kw: Any) -> None:
+        if "tool_start" not in self.event_types:
+            return
+        i = to_jsonable(input_str)
         self._handle(
             "tool_start",
             kw,
-            data={"input_str": to_jsonable(input_str)},
-            raw={"serialized": to_jsonable(serialized), "input_str": to_jsonable(input_str), **_raw_kwargs(kw)},
+            data={"input_str": i},
+            raw={"serialized": to_jsonable(serialized), "input_str": i, **_raw_kwargs(kw)},
         )
 
     def on_tool_end(self, output: Any, **kw: Any) -> None:
-        self._handle(
-            "tool_end", kw, data={"output": to_jsonable(output)}, raw=_raw_kwargs(kw)
-        )
+        if "tool_end" in self.event_types:
+            self._handle(
+                "tool_end", kw, data={"output": to_jsonable(output)}, raw=_raw_kwargs(kw)
+            )
 
     def on_tool_error(self, error: BaseException, **kw: Any) -> None:
-        self._handle(
-            "tool_error", kw, data={"error": _error_payload(error)}, raw=_raw_kwargs(kw)
-        )
+        if "tool_error" in self.event_types:
+            self._handle(
+                "tool_error", kw, data={"error": _error_payload(error)}, raw=_raw_kwargs(kw)
+            )
 
     def on_agent_action(self, action: Any, **kw: Any) -> None:
-        self._handle(
-            "agent_action", kw, data={"action": to_jsonable(action)}, raw=_raw_kwargs(kw)
-        )
+        if "agent_action" in self.event_types:
+            self._handle(
+                "agent_action", kw, data={"action": to_jsonable(action)}, raw=_raw_kwargs(kw)
+            )
 
     def on_agent_finish(self, finish: Any, **kw: Any) -> None:
-        self._handle(
-            "agent_finish", kw, data={"finish": to_jsonable(finish)}, raw=_raw_kwargs(kw)
-        )
+        if "agent_finish" in self.event_types:
+            self._handle(
+                "agent_finish", kw, data={"finish": to_jsonable(finish)}, raw=_raw_kwargs(kw)
+            )
 
     # -- plumbing ----------------------------------------------------------
 
     def _handle(self, event_type: str, kw: Mapping[str, Any], data: dict, raw: dict) -> None:
-        self.log_event(
+        """Buffer a handler's event; ``data`` and ``raw`` are converted."""
+        self._append(
             event_type,
-            run_id=kw.get("run_id"),
-            parent_run_id=kw.get("parent_run_id"),
-            tags=[str(t) for t in (kw.get("tags") or [])],
-            metadata=kw.get("metadata"),
-            data={k: v for k, v in data.items() if v is not None},
-            raw=raw,
+            kw.get("run_id"),
+            kw.get("parent_run_id"),
+            [str(t) for t in kw.get("tags") or []],
+            kw.get("metadata"),
+            safe_json_dumps({k: v for k, v in data.items() if v is not None}, walked=True),
+            safe_json_dumps(raw, walked=True),
         )
 
 

@@ -7,10 +7,14 @@ Spark-first rewrite of the reference's storage layer
 - S3/S4/S5: `write_log` — snappy parquet, hive `date=YYYY-MM-DD/` partition
   dirs derived from the event timestamp (reference logger.py:466-470), or a
   flat layout when ``partition_on=None`` (tests/test_core.py:117-159).
-- S6: object stores are just path schemes here (`s3a://bucket/prefix`);
-  retries/atomicity come from the Hadoop committer instead of the
-  reference's hand-rolled put_object retry loop (storage.py:81-101). The
-  error/continue policy survives as ``on_failure``.
+- S6: for Spark frames, object stores are just path schemes
+  (`s3a://bucket/prefix`) and atomicity comes from the Hadoop committer.
+  The live logger hands `ParquetSink.write` a pyarrow Table instead, which
+  pyarrow writes as one file per date partition, as the reference does:
+  published with a temp file and `os.replace` locally, and with boto3
+  `put_object` (`S3ObjectSink`) on `s3a://`/`s3://` (storage.py:81-101).
+  The retry budget and the error/continue policy (``on_failure``) cover
+  both.
 - S7: `CompositeSink` fans every batch out to all backends
   (storage.py:113-127).
 - S8: `exists` probe (storage.py:43-45,103-110).
@@ -25,10 +29,17 @@ partition-pruned at read time.
 
 from __future__ import annotations
 
+import functools
 import logging
+import os
+import uuid
 from dataclasses import dataclass, field
-from typing import Literal, Sequence
+from typing import Callable, Literal, Sequence
+from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,10 +69,25 @@ def render_output_path(
     return f"{base_dir.rstrip('/')}/{rel}"
 
 
+@dataclass(frozen=True)
+class _ArrowWrite:
+    """One write of a pyarrow Table, and the file name that all of its
+    attempts, on every leg of a composite sink, publish under: a retry
+    replaces what a failed attempt published rather than adding to it."""
+
+    table: pa.Table
+    name: str
+
+    @classmethod
+    def of(cls, table: pa.Table) -> "_ArrowWrite":
+        return cls(_utc_micros(table), f"part-{uuid.uuid4().hex}.parquet")
+
+
 @dataclass
 class ParquetSink:
-    """One storage backend. `base_dir` may be any Hadoop-supported scheme
-    (local path, file://, s3a://, hdfs://…) — the code path is identical."""
+    """One storage backend. For a Spark frame, `base_dir` may be any
+    Hadoop-supported scheme (local path, file://, s3a://, hdfs://…). A
+    pyarrow Table goes to a local path, file://, s3a:// or s3://."""
 
     base_dir: str
     partition_on: Literal["date"] | None = "date"
@@ -71,18 +97,48 @@ class ParquetSink:
     # continue → log and keep going (storage.py:94-98)
     on_failure: Literal["error", "continue"] = "error"
     # whole-write retry budget (reference storage.py:81-101 retries
-    # put_object; here the unit is the Spark write job). Idempotence
-    # caveat: "a failed attempt commits nothing" holds for JOB-level
-    # failures under FileOutputCommitter algorithm v1 (tasks stage to
-    # _temporary; the job commit is the only publish point). Under
-    # committer v2 (task commits move files directly) or a driver-side
-    # error raised AFTER the job committed, a retry in mode='append' can
-    # duplicate rows — on such setups set retry_attempts=1 or force
+    # put_object; here the unit is one write: a Spark job, or the files of
+    # one Arrow table). An Arrow retry republishes under the same names, so
+    # it never duplicates rows. Idempotence caveat for frames: "a failed
+    # attempt commits nothing" holds for JOB-level failures under
+    # FileOutputCommitter algorithm v1 (tasks stage to _temporary; the job
+    # commit is the only publish point). Under committer v2 (task commits
+    # move files directly) or a driver-side error raised AFTER the job
+    # committed, a retry in mode='append' can duplicate rows — on such
+    # setups set retry_attempts=1 or force
     # mapreduce.fileoutputcommitter.algorithm.version=1 (Spark's default).
     retry_attempts: int = 3
     retry_backoff: float = 0.0  # seconds; 2**attempt multiplier when > 0
+    _put: Callable[[bytes, str], None] | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
 
-    def _write_once(self, df: DataFrame) -> None:
+    def arrow_store(self) -> Callable[[bytes, str], None]:
+        """``put(body, relpath)``, which publishes one file of an Arrow
+        write under ``base_dir``. Raises ValueError for a scheme pyarrow
+        writes do not support."""
+        if self._put is None:
+            url = urlparse(self.base_dir)
+            if url.scheme in ("", "file"):
+                root = url.path if url.scheme else self.base_dir
+                self._put = functools.partial(_publish_local, root)
+            elif url.scheme in ("s3a", "s3"):
+                # the outer retry loop owns retries and the failure policy
+                self._put = S3ObjectSink(
+                    url.netloc, url.path.strip("/"), retry_attempts=1
+                ).put_bytes
+            else:
+                raise ValueError(
+                    f"Arrow writes support local paths, file://, s3a:// and "
+                    f"s3://, not {self.base_dir!r}; for a Hadoop-only store, "
+                    f"write a Spark frame with write_log(df, {self.base_dir!r})"
+                )
+        return self._put
+
+    def _write_once(self, df: DataFrame | _ArrowWrite) -> None:
+        if isinstance(df, _ArrowWrite):
+            self._write_arrow(df)
+            return
         writer = df.write.mode(self.mode).option("compression", self.compression)
         if self.partition_on == "date":
             dated = df.withColumn("date", F.to_date("timestamp"))
@@ -91,9 +147,38 @@ class ParquetSink:
             ).partitionBy("date")
         writer.parquet(self.base_dir)
 
-    def write(self, df: DataFrame) -> None:
+    def _write_arrow(self, write: _ArrowWrite) -> None:
+        """One parquet file per date partition, named ``date=YYYY-MM-DD``
+        like Spark's; the ``date`` column is dropped from the file, as
+        Spark drops partition columns."""
+        put = self.arrow_store()
+        table = write.table
+        if self.partition_on == "date":
+            dates = table["date"]
+            if dates.null_count:
+                raise ValueError("cannot partition rows with a null date")
+            table = table.drop_columns(["date"])
+            parts = [
+                (f"date={d}/{write.name}", table.filter(pc.equal(dates, d)))
+                for d in pc.unique(dates).to_pylist()
+            ]
+        else:
+            parts = [(write.name, table)]
+        for rel, part in parts:
+            buf = pa.BufferOutputStream()
+            pq.write_table(part, buf, compression=self.compression)
+            put(buf.getvalue().to_pybytes(), rel)
+
+    def write(self, df: DataFrame | pa.Table | _ArrowWrite) -> None:
+        """Write a Spark frame with a Spark job, or a pyarrow Table with
+        pyarrow (append only; a ``date`` column when partitioned by date),
+        both under the retry budget and ``on_failure`` policy."""
         import time as _time
 
+        if isinstance(df, pa.Table):
+            df = _ArrowWrite.of(df)
+        if isinstance(df, _ArrowWrite) and self.mode != "append":
+            raise ValueError(f"Arrow writes append; mode {self.mode!r} needs a Spark frame")
         last: Exception | None = None
         attempts = max(1, self.retry_attempts)
         for attempt in range(attempts):
@@ -122,6 +207,34 @@ class ParquetSink:
         p = jvm.org.apache.hadoop.fs.Path(path)
         fs = p.getFileSystem(conf)
         return bool(fs.exists(p))
+
+
+_UTC_MICROS = pa.timestamp("us", tz="UTC")
+
+
+def _utc_micros(table: pa.Table) -> pa.Table:
+    """Store ``timestamp`` as TIMESTAMP(MICROS, UTC-adjusted), which Spark
+    reads as TimestampType (a naive timestamp would read as TIMESTAMP_NTZ)."""
+    i = table.schema.get_field_index("timestamp")
+    if i < 0 or table.schema.field(i).type == _UTC_MICROS:
+        return table
+    return table.set_column(i, "timestamp", table["timestamp"].cast(_UTC_MICROS))
+
+
+def _publish_local(root: str, body: bytes, rel: str) -> None:
+    """Write ``root/rel`` atomically: a reader sees the whole file or none.
+    The temp file is dot-prefixed, which Spark and pyarrow readers skip."""
+    path = os.path.join(root, rel)
+    folder, name = os.path.split(path)
+    os.makedirs(folder, exist_ok=True)
+    tmp = os.path.join(folder, f".{name}.tmp")
+    try:
+        with open(tmp, "wb") as f:
+            f.write(body)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
 
 
 @dataclass
@@ -240,7 +353,9 @@ class CompositeSink:
 
     sinks: Sequence[ParquetSink] = field(default_factory=list)
 
-    def write(self, df: DataFrame) -> None:
+    def write(self, df: DataFrame | pa.Table) -> None:
+        if isinstance(df, pa.Table):
+            df = _ArrowWrite.of(df)  # the same file names on every leg
         for sink in self.sinks:
             sink.write(df)
 

@@ -382,9 +382,24 @@ def test_gather_max_bytes_derivation(spark, monkeypatch):
     # memory-string grammar
     assert S._parse_mem_bytes("16g") == 16 * 1024**3
     assert S._parse_mem_bytes("512m") == 512 * 1024**2
-    assert S._parse_mem_bytes("1024") == 1024
+    assert S._parse_mem_bytes("1024") == 1024 * 1024**2  # unitless is MiB
     assert S._parse_mem_bytes("2t") == 2 * 1024**4
     assert S._parse_mem_bytes("nonsense") is None
+
+
+def test_parse_mem_bytes_reads_units_as_spark_does():
+    """spark.driver.memory follows JavaUtils.byteStringAsMb: a bare number
+    is MiB, a trailing b is bytes, and kb/mb/gb/tb/pb equal k/m/g/t/p."""
+    mib = 1024**2
+    assert S._parse_mem_bytes("2048") == 2048 * mib
+    assert S._parse_mem_bytes(" 4096 ") == 4096 * mib
+    assert S._parse_mem_bytes("1024b") == 1024
+    assert S._parse_mem_bytes("1024B") == 1024
+    assert S._parse_mem_bytes("2gb") == S._parse_mem_bytes("2G") == 2 * 1024**3
+    assert S._parse_mem_bytes("3kb") == 3 * 1024
+    assert S._parse_mem_bytes("1p") == 1024**5
+    assert S._parse_mem_bytes("1.5g") is None
+    assert S._parse_mem_bytes("") is None
 
 
 def test_kmeans_fit_centroids_unchanged_by_materialization(spark, sf_dir):

@@ -172,38 +172,6 @@ def main() -> None:
         for name in names:
             one(name)
 
-    # Cold-vs-warm annotation for the r3→r4 dedup-family regressions
-    # (q_exact_dedup 1.7×, q_minhash_dedup 2.3×, q_dedup_clusters 1.8×,
-    # q_simhash_pairs 2.6×): round 4 changed the methodology to release
-    # tracked caches between reps, so every rep pays the full cold-cache
-    # pipeline cost, where r3's reps re-hit the previous rep's persisted
-    # blocks. This block records BOTH numbers: a cold rep (current
-    # methodology) is already in `runs`; here each query runs twice
-    # back-to-back WITHOUT an intervening release, and the second, warm
-    # rep emulates the r3 measurement. warm ≈ the r3 number names the
-    # regression as methodology, not plan; warm ≈ cold means the query
-    # doesn't benefit from resident caches and the delta needs another
-    # explanation (see ref_scan_sec for uniform environment drift).
-    warm_annotated = [
-        "q_exact_dedup",
-        "q_minhash_dedup",
-        "q_dedup_clusters",
-        "q_simhash_pairs",
-    ]
-    warm: dict[str, float] = {}
-    for name in warm_annotated:
-        if name not in qs or name in errors:
-            continue
-        try:
-            qs[name](spark, sf_dir).count()  # populate tracked caches
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()  # warm rep: caches resident
-            warm[name] = round(time.perf_counter() - t0, 3)
-        except Exception as e:  # noqa: BLE001
-            errors.setdefault(name, f"warm-annotation {type(e).__name__}: {e}")
-        finally:
-            release_caches()
-
     # Steady-state annotation for the streaming lifecycles (round-13
     # verdict #8): their cold medians include a fresh-JVM first drain
     # (micro-batch startup, state-store init) whose variance the r13
@@ -218,6 +186,10 @@ def main() -> None:
         "q_stream_hourly_counts",
     ]
     steady: dict[str, float] = {}
+    # kept apart from `errors` (the timed reps' failures, counted in the
+    # summary's n_errors): an annotation run failing says nothing about
+    # the cold medians
+    annotation_errors: dict[str, str] = {}
     for name in steady_annotated:
         if name not in qs or name in errors:
             continue
@@ -227,7 +199,7 @@ def main() -> None:
             qs[name](spark, sf_dir).count()  # steady-state drain
             steady[name] = round(time.perf_counter() - t0, 3)
         except Exception as e:  # noqa: BLE001
-            errors.setdefault(name, f"steady-annotation {type(e).__name__}: {e}")
+            annotation_errors[name] = f"{type(e).__name__}: {e}"
         finally:
             release_caches()
 
@@ -293,16 +265,13 @@ def main() -> None:
                 "ref_scan_sec": ref_runs,
                 "ref_scan_median_sec": ref_median,
                 "queries": timings,
-                # Named cause record for the r3→r4 dedup-family deltas:
-                # warm rep = caches resident (r3-style measurement);
-                # compare against the cold median in `queries`.
-                "warm_cache_annotation": warm,
                 # Streaming steady-state (post-first-drain) re-run next
                 # to the cold median in `queries` — see steady_annotated.
                 "steady_state_annotation": steady,
                 "runs": {n: [round(t, 3) for t in ts] for n, ts in runs.items()},
                 "rows": counts,
                 "errors": errors,
+                "annotation_errors": annotation_errors,
             },
             f,
             indent=1,

@@ -460,10 +460,9 @@ def _gather_idx(g_ids: np.ndarray, wanted: np.ndarray, what: str) -> np.ndarray:
 
 def gather_pair_scores(
     candidates: DataFrame,
-    base: DataFrame | None = None,
+    bc,
     prefixes: tuple[int, ...] = (),
     loose_min: float | None = None,
-    bc=None,
 ) -> DataFrame:
     """(vec_a, vec_b) id pairs -> (vec_a, vec_b, sim_raw[, p{n}_raw ...])
     by GATHERING both vectors from a broadcast corpus matrix — the
@@ -483,17 +482,9 @@ def gather_pair_scores(
     matrix is collected from the same cached kernel frame); both arms are
     pinned equal by tests, so the size gate can never change results.
 
-    ``bc`` is an optional prebuilt broadcast of :func:`collect_corpus`'s
-    triple — callers that build several gather consumers per generation
-    (similarity._gather_corpus_bc memoizes one) pass it to avoid the
-    advice-r13 re-collect-per-consumer trap; when absent the corpus is
-    collected from ``base`` here, as before."""
-    spark = candidates.sparkSession
-    if bc is None:
-        bc = spark.sparkContext.broadcast(collect_corpus(base))
-        from ..plans.session import track_unpersistable
-
-        track_unpersistable(bc)
+    ``bc`` is a broadcast of :func:`collect_corpus`'s triple
+    (similarity._gather_corpus_bc memoizes one per corpus, so several
+    gather consumers never re-collect it)."""
     pcols = [f"p{p}_raw" for p in prefixes]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -640,14 +631,7 @@ def probe_topk_candidates(
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         g_ids, g_M, g_nrm = bc.value  # one copy per worker process
         n, d = g_M.shape
-        # transposed contiguous corpus, built once per worker process
-        # (the broadcast value is registry-cached across tasks)
-        cache = _MT_CACHE
-        MT = cache.get(id(g_M))
-        if MT is None:
-            MT = np.ascontiguousarray(g_M.T)
-            cache.clear()
-            cache[id(g_M)] = MT
+        MT = _transposed(g_M)
         block = max(16, _PAIR_BLOCK_BYTES // (8 * max(n, 1)))
         for batch in batches:
             if batch.num_rows == 0:
@@ -683,10 +667,19 @@ def probe_topk_candidates(
     return probes.mapInArrow(fn, "probe_id bigint, nb_id bigint, sim_raw double")
 
 
-# per-worker cache of the transposed corpus for probe_topk_candidates
-# (single entry: keyed by the broadcast matrix's object id, which the
-# PySpark broadcast registry keeps stable across tasks in one worker)
-_MT_CACHE: dict[int, np.ndarray] = {}
+# per-worker (matrix, transpose) entry for probe_topk_candidates: the
+# broadcast value is registry-cached across tasks, so one worker process
+# transposes each corpus once.  The entry holds the matrix itself, so its
+# id cannot be recycled by a new corpus while the entry lives.
+_MT_ENTRY: tuple[np.ndarray, np.ndarray] | None = None
+
+
+def _transposed(M: np.ndarray) -> np.ndarray:
+    """Contiguous ``M.T``, reused while ``M`` is the same object."""
+    global _MT_ENTRY
+    if _MT_ENTRY is None or _MT_ENTRY[0] is not M:
+        _MT_ENTRY = (M, np.ascontiguousarray(M.T))
+    return _MT_ENTRY[1]
 
 
 def exploded_band_rows(base: DataFrame, *payload: str) -> DataFrame:

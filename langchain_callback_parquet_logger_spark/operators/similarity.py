@@ -24,6 +24,8 @@ Tie-breaks are explicit (`sim DESC, vec_id ASC`) so top-k is deterministic.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -79,9 +81,9 @@ def dot(a: Column, b: Column) -> Column:
     expressions, which looks like the thing to optimize away — round 12
     tried, expanding the fold into d chained GetArrayItem products so
     whole-stage codegen would compile it. Measured result (committed as
-    DOTKERNEL_AB_r13.json, tools/dot_kernel_ab.py): ONE expanded 64-term
-    dot inside a join consume chain generates a 15-24 KB whole-stage
-    method; HotSpot refuses to JIT methods over 8,000 bytecode bytes
+    DOTKERNEL_AB_r13.json): ONE expanded 64-term dot inside a join
+    consume chain generates a 15-24 KB whole-stage method; HotSpot
+    refuses to JIT methods over 8,000 bytecode bytes
     (-XX:DontCompileHugeMethods), so the ENTIRE stage — scan, join,
     aggregate included — fell back to the JVM bytecode interpreter.
     Compiled-stage-plus-interpreted-fold beats interpreted-everything at
@@ -577,44 +579,23 @@ def gather_max_bytes(spark: SparkSession) -> int:
     return min(max(driver_mem // 8, 64 * 1024 * 1024), 2 * 1024**3)
 
 
-# (generation, emb, capped) per (app_id, sf_dir) — see _banded_emb.  The
-# applicationId in the key means a frame cached under a stopped session
-# can never be handed to a NEW session in the same process (sessions
-# recycle memory but not DataFrame lineage); the stale entry is simply
-# never hit again and costs only its dict slot.
-_BANDED_EMB_MEMO: dict[
-    tuple[str, str], tuple[int, DataFrame, DataFrame, int]
-] = {}
-
-# (generation, broadcast) per (app_id, sf_dir) — the gather-arm corpus
-# broadcast, memoized exactly like _BANDED_EMB_MEMO (advice r13 #5: the
-# collect + broadcast used to run eagerly at plan-construction time in
-# EVERY gather consumer, so one query building two gather frames — e.g.
-# q_ann_recall_audit's banded + exact legs — re-collected the corpus and
-# tracked a second identical broadcast).  release_caches() bumps the
-# generation, and the tracked broadcast is unpersisted with everything
-# else, so nothing survives a bench rep.
-_GATHER_BC_MEMO: dict[tuple[str, str], tuple[int, object]] = {}
-
-
 def _gather_corpus_bc(spark: SparkSession, sf_dir: str):
     """One broadcast of the collected (ids, matrix, norms) corpus triple
-    per (application, sf_dir, cache generation).  Caller gates on
-    :func:`gather_max_bytes` — see EMB_GATHER_FALLBACK_BYTES."""
-    from ..plans.session import cache_generation, track_unpersistable
+    per (application, sf_dir) until release_caches(), memoized like
+    :func:`_banded_emb`: one query building two gather frames (e.g.
+    q_ann_recall_audit's banded + exact legs) collects the corpus once
+    and tracks one broadcast.  Caller gates on :func:`gather_max_bytes`
+    — see EMB_GATHER_FALLBACK_BYTES."""
+    from ..plans.session import memo_tracked, track_unpersistable
 
     from .arrowkernels import collect_corpus
 
-    gen = cache_generation()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GATHER_BC_MEMO.get(key)
-    if hit is not None and hit[0] == gen:
-        return hit[1]
-    emb, _ = _banded_emb(spark, sf_dir)
-    bc = spark.sparkContext.broadcast(collect_corpus(emb))
-    track_unpersistable(bc)
-    _GATHER_BC_MEMO[key] = (gen, bc)
-    return bc
+    def build():
+        emb = _banded_emb(spark, sf_dir).emb
+        return track_unpersistable(spark.sparkContext.broadcast(collect_corpus(emb)))
+
+    key = ("gather_bc", spark.sparkContext.applicationId, sf_dir)
+    return memo_tracked(key, build)
 
 
 # Lookup used by the stored-index meta table (indexes.py pins the band
@@ -659,7 +640,13 @@ def _cap_buckets(bands: DataFrame) -> DataFrame:
     return bands.join(over, ["band_idx", "band_val"], "left_anti")
 
 
-def _banded_emb(spark: SparkSession, sf_dir: str):
+class BandedEmb(NamedTuple):
+    emb: DataFrame  # (vec_id, emb, nrm), cached
+    capped: DataFrame  # cap-filtered band rows with the vector payload, cached
+    n: int  # corpus count: picks the band family and gates the gather arm
+
+
+def _banded_emb(spark: SparkSession, sf_dir: str) -> BandedEmb:
     """Shared LSH front end for q_embedding_dedup / q_ann_join /
     q_matryoshka_probe: the normalized embedding frame (vec_id, emb,
     nrm) and its exploded, CAP-FILTERED band signature frame, both
@@ -679,22 +666,21 @@ def _banded_emb(spark: SparkSession, sf_dir: str):
     stats).  The DuckDB oracle branches on the same COUNT(*) inside
     the SQL, so both engines always pick the same family.
 
-    The triple is MEMOIZED per (applicationId, sf_dir) within a cache
-    generation so a session running several consumers without an
-    intervening release_caches() shares one cached copy instead of
-    materializing duplicate blocks of identical data; release_caches()
-    bumps the generation, invalidating the memo along with the blocks
-    it tracks, and the applicationId keeps frames from a stopped
-    session out of any successor session in the same process."""
-    from ..plans.session import cache_generation, cache_tracked, spread
+    The result is memo_tracked per (applicationId, sf_dir), so a session
+    running several consumers without an intervening release_caches()
+    shares one cached copy instead of materializing duplicate blocks of
+    identical data; release_caches() drops the memo along with the
+    blocks it holds."""
+    from ..plans.session import memo_tracked
+
+    key = ("banded_emb", spark.sparkContext.applicationId, sf_dir)
+    return memo_tracked(key, lambda: _build_banded_emb(spark, sf_dir))
+
+
+def _build_banded_emb(spark: SparkSession, sf_dir: str) -> BandedEmb:
+    from ..plans.session import cache_tracked, spread
 
     from .arrowkernels import band_signature_frame, exploded_band_rows
-
-    gen = cache_generation()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BANDED_EMB_MEMO.get(key)
-    if hit is not None and hit[0] == gen:
-        return hit[1], hit[2]
 
     scan = spread(
         load_table(spark, sf_dir, "embeddings"), EMB_SPREAD_MIN_BYTES
@@ -719,8 +705,7 @@ def _banded_emb(spark: SparkSession, sf_dir: str):
     # never re-joins the embedding table per candidate — see
     # _lsh_scored_pairs for why that double id-join is fatal at scale.
     capped = cache_tracked(_cap_buckets(exploded_band_rows(base, "emb", "nrm")))
-    _BANDED_EMB_MEMO[key] = (gen, emb, capped, n)
-    return emb, capped
+    return BandedEmb(emb, capped, n)
 
 
 def _lsh_scored_pairs(capped: DataFrame, symmetric: bool) -> DataFrame:
@@ -909,15 +894,13 @@ def _scored_pair_frame(
     choice."""
     from .arrowkernels import gather_pair_scores, pair_score_frame
 
-    emb, bands = _banded_emb(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _BANDED_EMB_MEMO[key][3]
+    _, bands, n = _banded_emb(spark, sf_dir)
     if n * (EMB_DIM + 2) * 8 <= gather_max_bytes(spark):
         return gather_pair_scores(
             _lsh_candidate_pairs(bands, symmetric=symmetric),
+            _gather_corpus_bc(spark, sf_dir),
             prefixes=prefixes,
             loose_min=loose_min,
-            bc=_gather_corpus_bc(spark, sf_dir),
         )
     return pair_score_frame(
         _lsh_scored_pairs(bands, symmetric=symmetric),
@@ -1647,9 +1630,8 @@ ANN_AUDIT_MOD = 20  # 5% probe sample
 
 
 def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb, _ = _banded_emb(spark, sf_dir)
+    emb, _, n = _banded_emb(spark, sf_dir)
     is_probe = F.col("vec_id") % ANN_AUDIT_MOD == 0
-    n = _BANDED_EMB_MEMO[(spark.sparkContext.applicationId, sf_dir)][3]
     if n * (EMB_DIM + 2) * 8 <= gather_max_bytes(spark):
         # Exact leg through the Arrow gather kernel (round-13 verdict #1
         # — this was the last interpreted per-pair fold in the embedding

@@ -250,7 +250,7 @@ def run_concurrently(*thunks):
 # ---------------------------------------------------------------------------
 
 _TRACKED_CACHES: list[DataFrame] = []
-_CACHE_GENERATION = 0
+_MEMOS: dict = {}
 
 
 def cache_tracked(df: DataFrame) -> DataFrame:
@@ -268,21 +268,25 @@ def track_unpersistable(obj):
     return obj
 
 
-def cache_generation() -> int:
-    """Monotone counter bumped by every release_caches() call. Builders
-    that MEMOIZE a cache_tracked frame across invocations (e.g. the
-    shared LSH band index consumed by both q_embedding_dedup and
-    q_ann_join) key their memo on this: a stale generation means the
-    memoized frame was unpersisted and must be rebuilt, while within one
-    generation the two queries share a single cached copy instead of
-    materializing duplicate blocks of identical data."""
-    return _CACHE_GENERATION
+def memo_tracked(key, build):
+    """``build()``'s result, built once per ``key`` until the next
+    release_caches().  For builders whose result holds tracked caches
+    (e.g. the banded LSH front end shared by q_embedding_dedup and
+    q_ann_join): within one release cycle every consumer shares a single
+    cached copy, and because release_caches() drops the memo together
+    with the caches, an entry never outlives the blocks it holds.  Put
+    the applicationId in ``key`` so a frame built under a stopped
+    session is never handed to a successor session in the same
+    process."""
+    if key not in _MEMOS:
+        _MEMOS[key] = build()
+    return _MEMOS[key]
 
 
 def release_caches() -> int:
-    """Unpersist every tracked cache (non-blocking); returns count released."""
-    global _CACHE_GENERATION
-    _CACHE_GENERATION += 1
+    """Unpersist every tracked cache (non-blocking) and drop every
+    memo_tracked entry; returns the count of caches released."""
+    _MEMOS.clear()
     n = 0
     while _TRACKED_CACHES:
         try:

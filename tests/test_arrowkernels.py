@@ -18,7 +18,10 @@ from langchain_callback_parquet_logger_spark.operators.arrowkernels import (
     centroid_assign_frame,
     pq_assign_frame,
 )
-from langchain_callback_parquet_logger_spark.plans.session import load_table
+from langchain_callback_parquet_logger_spark.plans.session import (
+    load_table,
+    release_caches,
+)
 
 
 def _bits(x: float) -> bytes:
@@ -168,8 +171,8 @@ def test_pair_score_frame_bit_identical_to_fold_projection(spark, sf_dir):
         pair_score_frame,
     )
 
-    S._BANDED_EMB_MEMO.clear()
-    _, bands = S._banded_emb(spark, sf_dir)
+    release_caches()
+    bands = S._banded_emb(spark, sf_dir).capped
     prefixes = S.MRL_PREFIXES
 
     full = S.dot(F.col("emb_a"), F.col("emb_b")) / (
@@ -197,10 +200,6 @@ def test_pair_score_frame_bit_identical_to_fold_projection(spark, sf_dir):
             for r in pair_score_frame(joined, prefixes=prefixes).collect()
         )
         assert want and want == got, (symmetric, len(want), len(got))
-    from langchain_callback_parquet_logger_spark.plans.session import (
-        release_caches,
-    )
-
     release_caches()
 
 
@@ -214,8 +213,9 @@ def test_gather_arm_bit_identical_to_payload_arm(spark, sf_dir):
         pair_score_frame,
     )
 
-    S._BANDED_EMB_MEMO.clear()
-    emb, bands = S._banded_emb(spark, sf_dir)
+    release_caches()
+    bands = S._banded_emb(spark, sf_dir).capped
+    bc = S._gather_corpus_bc(spark, sf_dir)
     prefixes = S.MRL_PREFIXES
     for symmetric in (False, True):
         gather = sorted(
@@ -223,7 +223,7 @@ def test_gather_arm_bit_identical_to_payload_arm(spark, sf_dir):
             + tuple(_bits(r[f"p{p}_raw"]) for p in prefixes)
             for r in gather_pair_scores(
                 S._lsh_candidate_pairs(bands, symmetric=symmetric),
-                emb,
+                bc,
                 prefixes=prefixes,
             ).collect()
         )
@@ -238,10 +238,6 @@ def test_gather_arm_bit_identical_to_payload_arm(spark, sf_dir):
             .collect()
         )
         assert gather and gather == payload, (symmetric, len(gather), len(payload))
-    from langchain_callback_parquet_logger_spark.plans.session import (
-        release_caches,
-    )
-
     release_caches()
 
 
@@ -298,12 +294,11 @@ def test_probe_topk_kernel_matches_fold_cross_join(spark, sf_dir):
         probe_topk_candidates,
     )
     from langchain_callback_parquet_logger_spark.plans.session import (
-        release_caches,
         track_unpersistable,
     )
 
-    S._BANDED_EMB_MEMO.clear()
-    emb, _ = S._banded_emb(spark, sf_dir)
+    release_caches()
+    emb = S._banded_emb(spark, sf_dir).emb
     is_probe = F.col("vec_id") % S.ANN_AUDIT_MOD == 0
     k = S.ANN_JOIN_K
 
@@ -471,3 +466,26 @@ def test_seq_dot_panel_bit_identical_to_fold():
             want = _fold_dot_panel(P, MT[:, sl])
             got = _seq_dot_panel(P, MT[:, sl])
             assert (got.view(np.int64) == want.view(np.int64)).all(), (b, sl)
+
+
+def test_transpose_cache_never_serves_a_recycled_id():
+    """probe_topk_candidates' per-worker transpose must belong to the
+    matrix it is asked for, even when a new corpus would land at the
+    address (and so the id) of a freed one.  An id-keyed cache fails
+    this on the first recycled id; the (matrix, transpose) entry holds
+    the matrix, so its id stays taken while the entry lives."""
+    import numpy as np
+
+    from langchain_callback_parquet_logger_spark.operators.arrowkernels import (
+        _transposed,
+    )
+
+    M = np.arange(32, dtype=np.float64).reshape(8, 4)
+    assert np.array_equal(_transposed(M), M.T)
+    freed = id(M)
+    del M
+    for i in range(1, 1000):
+        M = np.full((8, 4), float(i))
+        if id(M) == freed:
+            break
+    assert np.array_equal(_transposed(M), M.T)

@@ -1564,7 +1564,7 @@ def test_emb_bucket_cap_clears_graded_fixtures(spark, sf_dir):
         if d != sf_dir and os.path.isdir(d)
     ]
     for d in dirs:
-        emb, _ = S._banded_emb(spark, d)
+        emb = S._banded_emb(spark, d).emb
         planes = S._dedup_band_family(emb.count())
         # the RAW (pre-cap) census — _banded_emb's band frame is already
         # cap-filtered, so measuring it could never trip
@@ -1618,7 +1618,7 @@ def test_adaptive_wide_band_path_matches_oracle(spark, sf_dir, monkeypatch):
         )
         # the wide branch actually engaged: 16-bit band values exist
         # above the 8-bit narrow space (memo hit — no rebuild)
-        _, capped = S._banded_emb(spark, sf_dir)
+        capped = S._banded_emb(spark, sf_dir).capped
         max_val = capped.agg(F.max("band_val")).first()[0]
     finally:
         sess.release_caches()  # the wide-family memo must not leak out
@@ -1655,7 +1655,7 @@ def test_adaptive_xwide_band_path_matches_oracle(spark, sf_dir, monkeypatch):
         )
         # the xwide branch actually engaged: 24-bit band values exist
         # above the 16-bit wide space (memo hit — no rebuild)
-        _, capped = S._banded_emb(spark, sf_dir)
+        capped = S._banded_emb(spark, sf_dir).capped
         max_val = capped.agg(F.max("band_val")).first()[0]
     finally:
         sess.release_caches()  # the xwide-family memo must not leak out

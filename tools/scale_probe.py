@@ -591,7 +591,7 @@ def main() -> None:
         "  with one deterministic division (the q_cost_attribution money",
         "  convention).",
         "",
-        "## Round 10 — 100x probe (SCALE100_r10.json, tools/scale100_probe.py)",
+        "## Round 10 — 100x probe (SCALE100_r10.json)",
         "",
         "big100/big10 on the same bijective-relabeling replicas (10x more",
         "data; linear target ~10x). 14 watch-zone + family-head queries",

@@ -58,7 +58,6 @@ from .operators.temporal import asof_join
 from .sinks import (
     CompositeSink,
     ParquetSink,
-    S3ObjectSink,
     compact_logs,
     create_sink,
     render_output_path,
@@ -84,7 +83,6 @@ __all__ = [
     "filter_event_types",
     "normalize_events",
     "ParquetSink",
-    "S3ObjectSink",
     "CompositeSink",
     "create_sink",
     "render_output_path",

@@ -2,9 +2,9 @@
 (reference config.py:8-157) so a migrating user keeps their field names,
 with each knob re-pointed at the Spark-native mechanism:
 
-- ``S3Config``        → an ``s3a://`` output directory for the parquet sink
-                        (hadoop-aws owns retries; the error/continue policy
-                        survives as the sink's on_failure flag).
+- ``S3Config``        → the sink's ``s3a://`` leg: bucket and prefix become
+                        its path, and retry_attempts and on_failure its
+                        retry budget and error/continue policy.
 - ``StorageConfig``   → sink factory + path templating inputs
                         (sinks.create_sink / sinks.render_output_path).
 - ``ProcessingConfig``→ batch_run / normalize_events knobs. buffer_size maps
@@ -62,12 +62,12 @@ assert set(EventType.all_events()) == set(EVENT_TYPES)
 class S3Config:
     """Remote sink target (reference config.py:35-46). In Spark the bucket
     and prefix collapse into one ``s3a://`` path string handed to the same
-    parquet writer as local output — no separate upload code path."""
+    parquet sink as local output, under the same retry loop."""
 
     bucket: str
     prefix: str = "langchain-logs/"
     on_failure: Literal["error", "continue"] = "error"
-    retry_attempts: int = 3  # informational: hadoop-aws owns retry policy
+    retry_attempts: int = 3
 
     @property
     def s3a_dir(self) -> str:
@@ -136,14 +136,19 @@ class StorageConfig:
     s3_config: S3Config | None = None
 
     def create_sink(self, partition_on: Literal["date"] | None = "date"):
-        from .sinks import create_sink
+        from .sinks import ParquetSink, combine
 
-        return create_sink(
-            base_dir=self.output_dir,
-            s3_dir=self.s3_config.s3a_dir if self.s3_config else None,
-            partition_on=partition_on,
-            s3_on_failure=self.s3_config.on_failure if self.s3_config else "error",
+        legs = (
+            [ParquetSink(self.output_dir, partition_on=partition_on)]
+            if self.output_dir else []
         )
+        s3 = self.s3_config
+        if s3 is not None:
+            legs.append(ParquetSink(
+                s3.s3a_dir, partition_on=partition_on,
+                on_failure=s3.on_failure, retry_attempts=s3.retry_attempts,
+            ))
+        return combine(legs)
 
 
 @dataclass(frozen=True)

@@ -255,7 +255,12 @@ class SparkParquetLogger:
         return self
 
     def __exit__(self, *exc: Any) -> None:
-        self.flush()
+        try:
+            self.flush()
+        finally:
+            # the atexit hook would keep this logger and its sink alive
+            # until the interpreter exits
+            atexit.unregister(self.flush)
 
     # -- the 12 LangChain handlers (reference logger.py:252-415) -----------
     # Each converts its arguments once, and only for a captured event type.

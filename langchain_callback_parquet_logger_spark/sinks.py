@@ -11,10 +11,11 @@ Spark-first rewrite of the reference's storage layer
   (`s3a://bucket/prefix`) and atomicity comes from the Hadoop committer.
   The live logger hands `ParquetSink.write` a pyarrow Table instead, which
   pyarrow writes as one file per date partition, as the reference does:
-  published with a temp file and `os.replace` locally, and with boto3
-  `put_object` (`S3ObjectSink`) on `s3a://`/`s3://` (storage.py:81-101).
-  The retry budget and the error/continue policy (``on_failure``) cover
-  both.
+  published with a temp file and `os.replace` locally, and with one boto3
+  `put_object` per file on `s3a://`/`s3://` (storage.py:81-101).
+  `ParquetSink.write` is the one retry loop for both kinds of write: the
+  reference's N attempts with `2**attempt` s between them, then the
+  error/continue policy (``on_failure``).
 - S7: `CompositeSink` fans every batch out to all backends
   (storage.py:113-127).
 - S8: `exists` probe (storage.py:43-45,103-110).
@@ -32,6 +33,8 @@ from __future__ import annotations
 import functools
 import logging
 import os
+import threading
+import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Callable, Literal, Sequence
@@ -46,6 +49,10 @@ from pyspark.sql import functions as F
 logger = logging.getLogger(__name__)
 
 DEFAULT_PATH_TEMPLATE = "{job_category}/{job_subcategory}/v{job_version_safe}"
+_COMPRESSION = "snappy"
+# The wait between write attempts; tests substitute it to run retries
+# without the reference schedule's seconds of sleep.
+_sleep = time.sleep
 
 
 def sanitize_version(version: str | None) -> str:
@@ -92,15 +99,15 @@ class ParquetSink:
     base_dir: str
     partition_on: Literal["date"] | None = "date"
     mode: str = "append"
-    compression: str = "snappy"
     # error  → propagate write failures (reference S3Config.on_failure='error')
     # continue → log and keep going (storage.py:94-98)
     on_failure: Literal["error", "continue"] = "error"
-    # whole-write retry budget (reference storage.py:81-101 retries
-    # put_object; here the unit is one write: a Spark job, or the files of
-    # one Arrow table). An Arrow retry republishes under the same names, so
-    # it never duplicates rows. Idempotence caveat for frames: "a failed
-    # attempt commits nothing" holds for JOB-level failures under
+    # whole-write retry budget, with the reference's schedule
+    # (storage.py:81-101): 2**attempt s between attempts, none after the
+    # last. The unit is one write: a Spark job, or the files of one Arrow
+    # table. An Arrow retry republishes under the same names, so it never
+    # duplicates rows. Idempotence caveat for frames: "a failed attempt
+    # commits nothing" holds for JOB-level failures under
     # FileOutputCommitter algorithm v1 (tasks stage to _temporary; the job
     # commit is the only publish point). Under committer v2 (task commits
     # move files directly) or a driver-side error raised AFTER the job
@@ -108,7 +115,6 @@ class ParquetSink:
     # setups set retry_attempts=1 or force
     # mapreduce.fileoutputcommitter.algorithm.version=1 (Spark's default).
     retry_attempts: int = 3
-    retry_backoff: float = 0.0  # seconds; 2**attempt multiplier when > 0
     _put: Callable[[bytes, str], None] | None = field(
         default=None, init=False, repr=False, compare=False
     )
@@ -123,10 +129,7 @@ class ParquetSink:
                 root = url.path if url.scheme else self.base_dir
                 self._put = functools.partial(_publish_local, root)
             elif url.scheme in ("s3a", "s3"):
-                # the outer retry loop owns retries and the failure policy
-                self._put = S3ObjectSink(
-                    url.netloc, url.path.strip("/"), retry_attempts=1
-                ).put_bytes
+                self._put = _S3Put(url.netloc, url.path.strip("/"))
             else:
                 raise ValueError(
                     f"Arrow writes support local paths, file://, s3a:// and "
@@ -139,12 +142,11 @@ class ParquetSink:
         if isinstance(df, _ArrowWrite):
             self._write_arrow(df)
             return
-        writer = df.write.mode(self.mode).option("compression", self.compression)
         if self.partition_on == "date":
-            dated = df.withColumn("date", F.to_date("timestamp"))
-            writer = dated.write.mode(self.mode).option(
-                "compression", self.compression
-            ).partitionBy("date")
+            df = df.withColumn("date", F.to_date("timestamp"))
+        writer = df.write.mode(self.mode).option("compression", _COMPRESSION)
+        if self.partition_on == "date":
+            writer = writer.partitionBy("date")
         writer.parquet(self.base_dir)
 
     def _write_arrow(self, write: _ArrowWrite) -> None:
@@ -166,15 +168,13 @@ class ParquetSink:
             parts = [(write.name, table)]
         for rel, part in parts:
             buf = pa.BufferOutputStream()
-            pq.write_table(part, buf, compression=self.compression)
+            pq.write_table(part, buf, compression=_COMPRESSION)
             put(buf.getvalue().to_pybytes(), rel)
 
     def write(self, df: DataFrame | pa.Table | _ArrowWrite) -> None:
         """Write a Spark frame with a Spark job, or a pyarrow Table with
         pyarrow (append only; a ``date`` column when partitioned by date),
         both under the retry budget and ``on_failure`` policy."""
-        import time as _time
-
         if isinstance(df, pa.Table):
             df = _ArrowWrite.of(df)
         if isinstance(df, _ArrowWrite) and self.mode != "append":
@@ -187,8 +187,8 @@ class ParquetSink:
                 return
             except Exception as e:  # noqa: BLE001 — policy applied below
                 last = e
-                if attempt + 1 < attempts and self.retry_backoff:
-                    _time.sleep(self.retry_backoff * (2**attempt))
+                if attempt + 1 < attempts:
+                    _sleep(2**attempt)
         if self.on_failure == "continue":
             logger.error(
                 "sink write failed after %d attempts (continuing): %s: %s",
@@ -237,109 +237,28 @@ def _publish_local(root: str, body: bytes, rel: str) -> None:
             os.unlink(tmp)
 
 
-@dataclass
-class S3ObjectSink:
-    """S6 — driver-side object upload via boto3, for environments where the
-    cluster writes locally (or hadoop-aws is unavailable) and a finished
-    artifact — a compacted log file, a checkpoint, a small export — is
-    shipped to S3 afterwards. Behavioral parity with the reference's
-    S3Storage (storage.py:48-110): key = ``prefix + filepath``, per-object
-    retry budget with ``2**attempt`` backoff, ``on_failure`` error|continue
-    policy, head_object existence probe.
+class _S3Put:
+    """``put(body, relpath)`` for an ``s3a://``/``s3://`` leg: one boto3
+    ``put_object`` per file, under key ``prefix/relpath`` (``relpath`` at
+    the bucket root), with credentials from the boto3 default chain. The
+    leg's ``ParquetSink.write`` owns retries and the failure policy."""
 
-    This is NOT the bulk-data path — distributed parquet writes go through
-    :class:`ParquetSink` with an ``s3a://`` base_dir so every task uploads
-    its own files in parallel. A driver-side put_object is the right tool
-    only for single finished objects, which is exactly the reference's use
-    case (one buffered batch per flush).
-    """
+    def __init__(self, bucket: str, prefix: str) -> None:
+        self.bucket = bucket
+        self.prefix = prefix
+        self._client = None
+        # boto3 builds clients through a default session that is not
+        # thread-safe, and concurrent callbacks can flush at once
+        self._lock = threading.Lock()
 
-    bucket: str
-    prefix: str = "langchain-logs/"
-    on_failure: Literal["error", "continue"] = "error"
-    retry_attempts: int = 3
-    endpoint_url: str | None = None  # minio/moto endpoint for tests
-    client: object | None = None  # injectable for tests; lazy boto3 otherwise
-    _sleep: object = None  # injectable time.sleep for tests
-
-    def __post_init__(self) -> None:
-        if self.prefix and not self.prefix.endswith("/"):
-            self.prefix += "/"  # reference config.py:43-46
-
-    def _client(self):
-        if self.client is None:
-            try:
+    def __call__(self, body: bytes, rel: str) -> None:
+        with self._lock:
+            if self._client is None:
                 import boto3
-            except ImportError as e:  # pragma: no cover - boto3 is baked in
-                raise ImportError(
-                    "boto3 is required for S3ObjectSink"
-                ) from e
-            kwargs = {"endpoint_url": self.endpoint_url} if self.endpoint_url else {}
-            self.client = boto3.client("s3", **kwargs)
-        return self.client
 
-    def key_for(self, filepath: str) -> str:
-        return f"{self.prefix}{filepath}"
-
-    def put_bytes(self, body: bytes, filepath: str) -> None:
-        """Upload one object with the reference's retry loop
-        (storage.py:81-101)."""
-        import time as _time
-
-        sleep = self._sleep or _time.sleep
-        attempts = max(1, self.retry_attempts)
-        for attempt in range(attempts):
-            try:
-                self._client().put_object(
-                    Bucket=self.bucket, Key=self.key_for(filepath), Body=body
-                )
-                return
-            except Exception as e:  # noqa: BLE001 — policy applied below
-                if attempt == attempts - 1:
-                    msg = (
-                        f"Failed to upload to S3 after {attempts} attempts: {e}"
-                    )
-                    if self.on_failure == "error":
-                        raise RuntimeError(msg) from e
-                    logger.error("S3 upload failed (continuing): %s", msg)
-                    return
-                sleep(2**attempt)
-
-    def put_file(self, local_path: str, filepath: str | None = None) -> None:
-        import os
-
-        with open(local_path, "rb") as f:
-            body = f.read()
-        self.put_bytes(body, filepath or os.path.basename(local_path))
-
-    def put_dir(self, local_dir: str, dest_prefix: str = "") -> list[str]:
-        """Ship a Spark-written output directory (part files + nested
-        ``date=.../`` partition dirs) preserving relative layout; returns
-        the uploaded keys. Hidden bookkeeping files (_SUCCESS, .crc) are
-        skipped."""
-        import os
-
-        keys: list[str] = []
-        for root, _dirs, files in os.walk(local_dir):
-            for fn in sorted(files):
-                if fn.startswith(("_", ".")):
-                    continue
-                full = os.path.join(root, fn)
-                rel = os.path.relpath(full, local_dir)
-                dest = f"{dest_prefix}{rel}" if dest_prefix else rel
-                self.put_file(full, dest)
-                keys.append(self.key_for(dest))
-        return keys
-
-    def exists(self, filepath: str) -> bool:
-        """head_object probe (reference storage.py:103-110)."""
-        try:
-            self._client().head_object(
-                Bucket=self.bucket, Key=self.key_for(filepath)
-            )
-            return True
-        except Exception:  # noqa: BLE001 — mirror reference's bare-except
-            return False
+                self._client = boto3.client("s3")
+        key = f"{self.prefix}/{rel}" if self.prefix else rel
+        self._client.put_object(Bucket=self.bucket, Key=key, Body=body)
 
 
 @dataclass
@@ -347,8 +266,9 @@ class CompositeSink:
     """S7 — write every batch to ALL backends (reference storage.py:113-127).
 
     Matches the reference's best-effort semantics when a backend is marked
-    ``on_failure='continue'``; for true exactly-once multi-sink use the
-    streaming path's idempotent foreachBatch instead (SURVEY.md §7 hard #4).
+    ``on_failure='continue'``. A pyarrow Table is published under the same
+    file names on every leg and every attempt, so a retry never duplicates
+    its rows; a Spark frame has the committer's guarantees (ParquetSink).
     """
 
     sinks: Sequence[ParquetSink] = field(default_factory=list)
@@ -364,17 +284,16 @@ def create_sink(
     base_dir: str | None = None,
     s3_dir: str | None = None,
     partition_on: Literal["date"] | None = "date",
-    s3_on_failure: Literal["error", "continue"] = "error",
 ) -> ParquetSink | CompositeSink:
     """Factory mirroring the reference's create_storage (storage.py:130-148):
     local-only, remote-only, or composite local+remote."""
-    sinks: list[ParquetSink] = []
-    if base_dir:
-        sinks.append(ParquetSink(base_dir, partition_on=partition_on))
-    if s3_dir:
-        sinks.append(
-            ParquetSink(s3_dir, partition_on=partition_on, on_failure=s3_on_failure)
-        )
+    return combine([
+        ParquetSink(d, partition_on=partition_on) for d in (base_dir, s3_dir) if d
+    ])
+
+
+def combine(sinks: Sequence[ParquetSink]) -> ParquetSink | CompositeSink:
+    """One leg as itself, several as a CompositeSink."""
     if not sinks:
         raise ValueError("at least one of base_dir/s3_dir is required")
     return sinks[0] if len(sinks) == 1 else CompositeSink(sinks)

@@ -14,9 +14,10 @@ The transform between source and sink is the SAME ``normalize_events`` the
 batch path uses — one declarative pipeline, three execution modes (live
 callback, batch job, stream).
 
-Multi-sink fan-out (S7, reference storage.py:113-127) uses foreachBatch:
-within a micro-batch, each sink write is idempotent per epoch; a persisted
-batch frame avoids recomputing the source per sink.
+The stream writes one checkpointed file sink. Multi-sink fan-out (S7,
+reference storage.py:113-127) is the live logger's ``CompositeSink``; a
+foreachBatch fan-out would not be exactly-once, because a replayed epoch
+appends its rows to every sink again.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..ingest import RAW_EVENT_DDL, normalize_events
-from ..sinks import ParquetSink
+from ..operators.queries import SESSION_GAP_US
 
 
 def read_event_stream(
@@ -72,40 +73,6 @@ def stream_to_log(
     )
     if partition_on == "date":
         writer = writer.partitionBy("date")
-    if trigger == "availableNow":
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger)
-    return writer.start()
-
-
-def stream_to_sinks(
-    events: DataFrame,
-    sinks: list[ParquetSink],
-    checkpoint_dir: str,
-    logger_metadata: Mapping[str, object] | None = None,
-    event_types: Iterable[str] | None = None,
-    trigger: Literal["availableNow"] | str = "availableNow",
-) -> StreamingQuery:
-    """S7 — composite fan-out via foreachBatch. The micro-batch frame is
-    persisted once so N sinks don't recompute the source N times."""
-    normalized = normalize_events(
-        events, logger_metadata=logger_metadata, event_types=event_types
-    )
-
-    def _write_all(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for sink in sinks:
-                sink.write(batch_df)
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        normalized.writeStream.foreachBatch(_write_all)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
     if trigger == "availableNow":
         writer = writer.trigger(availableNow=True)
     else:
@@ -431,14 +398,14 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Same fixpoint as the lag-based batch sessionization: a session break is
 # a gap strictly greater than 30 minutes (session_window treats an event
 # exactly at gap distance as extending the session).
-ORACLE_STREAM_SESSION_WINDOW = """
+ORACLE_STREAM_SESSION_WINDOW = f"""
 WITH flagged AS (
   SELECT user_id,
          CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
                    IS NULL
                OR epoch_us(ts) - lag(epoch_us(ts))
                    OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   >= 1800000000
+                   > {SESSION_GAP_US}
               THEN 1 ELSE 0 END AS new_session
   FROM events
 )

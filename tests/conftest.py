@@ -49,6 +49,17 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture()
+def sink_sleeps(monkeypatch):
+    """The waits ``ParquetSink.write`` asks for between attempts, recorded
+    instead of slept."""
+    from langchain_callback_parquet_logger_spark import sinks
+
+    sleeps: list[float] = []
+    monkeypatch.setattr(sinks, "_sleep", sleeps.append)
+    return sleeps
+
+
 UTC = dt.timezone.utc
 
 

@@ -54,9 +54,14 @@ def test_storage_config_sink_factory():
     local_only = StorageConfig(output_dir="/tmp/x").create_sink()
     assert isinstance(local_only, ParquetSink)
     both = StorageConfig(
-        output_dir="/tmp/x", s3_config=S3Config("bkt", on_failure="continue")
+        output_dir="/tmp/x",
+        s3_config=S3Config("bkt", on_failure="continue", retry_attempts=5),
     ).create_sink()
     assert isinstance(both, CompositeSink)
+    local, s3 = both.sinks
+    assert (local.on_failure, local.retry_attempts) == ("error", 3)
+    assert s3.base_dir == "s3a://bkt/langchain-logs"
+    assert (s3.on_failure, s3.retry_attempts) == ("continue", 5)
 
 
 def test_llm_config_factory_and_metadata():

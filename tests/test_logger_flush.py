@@ -1,17 +1,20 @@
 """The live logger's flush as written files: one parquet file per date
 partition per flush, the failure policy seen from the flushing callback,
 atomic and idempotent publishing, the S3 leg, the atexit flush, and a log
-tree mixing Spark-written and Arrow-written flushes."""
+tree mixing Spark-written and Arrow-written flushes. Tests that fail a
+write record the waits between attempts instead of sleeping them."""
 
 from __future__ import annotations
 
 import datetime as dt
+import gc
 import json
 import os
 import subprocess
 import sys
 import textwrap
 import threading
+import weakref
 
 import pyarrow.parquet as pq
 import pytest
@@ -101,17 +104,18 @@ def test_concurrent_callbacks_lose_and_duplicate_no_rows(spark, tmp_path):
     assert sorted(run_ids) == sorted(f"t{k}-{i}" for k in range(len(threads)) for i in range(300))
 
 
-def test_flush_error_policy_raises_from_the_callback(spark, tmp_path):
+def test_flush_error_policy_raises_from_the_callback(spark, tmp_path, sink_sleeps):
     logger = SparkParquetLogger(spark, str(tmp_path / "logs"), buffer_size=2)
     logger.sink = FailingSink(str(tmp_path / "logs"), fail_times=99, retry_attempts=2)
     log_llm_starts(logger, 1)
     with pytest.raises(RuntimeError, match="after 2 attempts"):
         log_llm_starts(logger, 1)
     assert logger.sink.calls == 2
+    assert sink_sleeps == [1]
     assert not (tmp_path / "logs").exists()
 
 
-def test_flush_continue_policy_logs_and_carries_on(spark, tmp_path, caplog):
+def test_flush_continue_policy_logs_and_carries_on(spark, tmp_path, caplog, sink_sleeps):
     out = tmp_path / "logs"
     logger = SparkParquetLogger(spark, str(out), buffer_size=2)
     logger.sink = FailingSink(str(out), fail_times=2, retry_attempts=2, on_failure="continue")
@@ -123,7 +127,7 @@ def test_flush_continue_policy_logs_and_carries_on(spark, tmp_path, caplog):
     ]
 
 
-def test_failing_remote_leg_under_continue_keeps_local_rows(spark, tmp_path):
+def test_failing_remote_leg_under_continue_keeps_local_rows(spark, tmp_path, sink_sleeps):
     logger = SparkParquetLogger(spark, str(tmp_path / "local"), buffer_size=3)
     logger.sink = CompositeSink([
         ParquetSink(str(tmp_path / "local")),
@@ -152,7 +156,8 @@ def test_failed_attempt_leaves_no_visible_file(spark, tmp_path, monkeypatch):
     assert read_log_dataset(spark, str(out)).count() == 10
 
 
-def test_retry_after_a_partial_publish_does_not_duplicate_rows(spark, tmp_path):
+def test_retry_after_a_partial_publish_does_not_duplicate_rows(spark, tmp_path,
+                                                              sink_sleeps):
     """A flush across midnight writes two partitions; the first attempt
     publishes one and fails on the other, and the retry publishes both
     under the same names."""
@@ -187,18 +192,20 @@ def test_s3_leg_round_trips_under_moto(spark, tmp_path, monkeypatch):
     for k, v in {"AWS_ACCESS_KEY_ID": "testing", "AWS_SECRET_ACCESS_KEY": "testing",
                  "AWS_DEFAULT_REGION": "us-east-1"}.items():
         monkeypatch.setenv(k, v)
-    with moto.mock_aws():
-        client = boto3.client("s3")
-        client.create_bucket(Bucket="logs-bucket")
-        local = tmp_path / "local"
-        with SparkParquetLogger(spark, str(local), s3_dir="s3a://logs-bucket/llm/",
-                                buffer_size=100) as logger:
-            log_llm_starts(logger, 7)
-        keys = [o["Key"] for o in client.list_objects_v2(Bucket="logs-bucket")["Contents"]]
-        assert [f"llm/{f}" for f in files_under(local)] == keys
-        body = client.get_object(Bucket="logs-bucket", Key=keys[0])["Body"].read()
-    assert body == (local / files_under(local)[0]).read_bytes()  # the same bytes
-    assert pq.read_table(local / files_under(local)[0]).num_rows == 7
+    for bucket, s3_dir, prefix in [("logs-bucket", "s3a://logs-bucket/llm/", "llm/"),
+                                   ("root-bucket", "s3a://root-bucket", "")]:
+        with moto.mock_aws():
+            client = boto3.client("s3")
+            client.create_bucket(Bucket=bucket)
+            local = tmp_path / bucket
+            with SparkParquetLogger(spark, str(local), s3_dir=s3_dir,
+                                    buffer_size=100) as logger:
+                log_llm_starts(logger, 7)
+            keys = [o["Key"] for o in client.list_objects_v2(Bucket=bucket)["Contents"]]
+            assert [f"{prefix}{f}" for f in files_under(local)] == keys
+            body = client.get_object(Bucket=bucket, Key=keys[0])["Body"].read()
+        assert body == (local / files_under(local)[0]).read_bytes()  # the same bytes
+        assert pq.read_table(local / files_under(local)[0]).num_rows == 7
 
 
 def test_unsupported_scheme_fails_when_the_logger_is_built(spark):
@@ -236,6 +243,20 @@ def test_atexit_flush_writes_the_partial_buffer_without_a_jvm(tmp_path):
     assert len(files) == 1
     rows = pq.read_table(out / files[0]).to_pylist()
     assert sorted(r["run_id"] for r in rows) == ["exit0", "exit1", "exit2"]
+
+
+def test_closed_logger_is_not_kept_alive_by_atexit(spark, tmp_path):
+    """Leaving the ``with`` block flushes and drops the atexit hook, which
+    would otherwise hold the logger and its sink until the interpreter
+    exits."""
+    out = tmp_path / "logs"
+    with SparkParquetLogger(spark, str(out), buffer_size=100) as logger:
+        log_llm_starts(logger, 3)
+    ref = weakref.ref(logger)
+    del logger
+    gc.collect()
+    assert ref() is None
+    assert read_log_dataset(spark, str(out)).count() == 3
 
 
 def test_mixed_spark_and_arrow_tree_reads_and_compacts(spark, tmp_path):

@@ -1,74 +1,63 @@
-"""S6 coverage: S3 key layout, retry budget, error/continue policy, and an
-optional live s3a:// round-trip.
+"""S6 coverage: the S3 leg of ``ParquetSink`` — key layout, retry budget
+with the reference's backoff, error/continue policy, and an optional live
+s3a:// round-trip.
 
 The reference tests these behaviors against a mocked boto3 client
-(/root/reference/tests/test_s3_integration.py:13-243). Here the same
+(its tests/test_s3_integration.py:13-243). Here the same
 behaviors run against moto's in-process S3 (real bucket/key semantics, real
-bytes round-tripped) plus stub clients for the failure-injection cases. The
-distributed s3a:// path needs the hadoop-aws jar and an endpoint — the
-final test exercises it when SPARK_GRAFT_S3_ENDPOINT is set (minio/moto
-server) and skips cleanly in sandboxes without either.
+bytes round-tripped), with a flaky client standing in for boto3's in the
+failure-injection cases. The waits between attempts are recorded, not
+slept. The distributed s3a:// path needs the hadoop-aws jar and an
+endpoint — the final test exercises it when SPARK_GRAFT_S3_ENDPOINT is set
+(minio/moto server) and skips cleanly in sandboxes without either.
 """
 
 from __future__ import annotations
 
-import io
+import datetime as dt
 import os
 
+import pyarrow as pa
 import pytest
 
-from langchain_callback_parquet_logger_spark.sinks import ParquetSink, S3ObjectSink
+from langchain_callback_parquet_logger_spark.sinks import ParquetSink
 
 moto = pytest.importorskip("moto")
 import boto3  # noqa: E402
 
+UTC = dt.timezone.utc
+
 
 @pytest.fixture()
-def s3_bucket():
+def s3_bucket(monkeypatch):
+    for k, v in {"AWS_ACCESS_KEY_ID": "testing", "AWS_SECRET_ACCESS_KEY": "testing",
+                 "AWS_DEFAULT_REGION": "us-east-1"}.items():
+        monkeypatch.setenv(k, v)
     with moto.mock_aws():
-        client = boto3.client("s3", region_name="us-east-1")
+        client = boto3.client("s3")
         client.create_bucket(Bucket="test-bucket")
         yield client
 
 
+def _keys(client) -> list[str]:
+    listing = client.list_objects_v2(Bucket="test-bucket")
+    return sorted(o["Key"] for o in listing.get("Contents", []))
+
+
+def _table() -> pa.Table:
+    return pa.table({"timestamp": [dt.datetime(2024, 1, 1, tzinfo=UTC)],
+                     "run_id": ["r1"]})
+
+
 def test_upload_key_layout(s3_bucket):
-    """Key = prefix + filepath, prefix slash-normalized
+    """Key = prefix/filepath, or filepath at the bucket root
     (reference config.py:43-46, storage.py:73-75)."""
-    sink = S3ObjectSink(
-        bucket="test-bucket", prefix="test-prefix", client=s3_bucket
-    )
-    sink.put_bytes(b"payload", "logs_20240101.parquet")
-    keys = [
-        o["Key"]
-        for o in s3_bucket.list_objects_v2(Bucket="test-bucket")["Contents"]
-    ]
-    assert keys == ["test-prefix/logs_20240101.parquet"]
-
-
-def test_parquet_bytes_roundtrip(s3_bucket, spark, tmp_path):
-    """A Spark-written parquet dir ships to S3 preserving layout, and the
-    bytes read back are valid parquet with the original rows."""
-    import pyarrow.parquet as pq
-
-    out = str(tmp_path / "log")
-    df = spark.range(100).selectExpr("id", "id * 2 AS doubled")
-    df.coalesce(1).write.parquet(out)
-
-    sink = S3ObjectSink(bucket="test-bucket", prefix="ship/", client=s3_bucket)
-    keys = sink.put_dir(out, "run1/")
-    assert len(keys) == 1 and keys[0].startswith("ship/run1/part-")
-
-    body = s3_bucket.get_object(Bucket="test-bucket", Key=keys[0])["Body"].read()
-    table = pq.read_table(io.BytesIO(body))
-    assert table.num_rows == 100
-    assert sorted(table.column_names) == ["doubled", "id"]
-
-
-def test_exists_probe(s3_bucket):
-    sink = S3ObjectSink(bucket="test-bucket", prefix="p/", client=s3_bucket)
-    assert not sink.exists("a.parquet")
-    sink.put_bytes(b"x", "a.parquet")
-    assert sink.exists("a.parquet")
+    ParquetSink("s3a://test-bucket/test-prefix/", partition_on=None).write(_table())
+    [prefixed] = _keys(s3_bucket)
+    assert prefixed.startswith("test-prefix/part-") and prefixed.endswith(".parquet")
+    ParquetSink("s3://test-bucket", partition_on=None).write(_table())
+    [root] = set(_keys(s3_bucket)) - {prefixed}
+    assert root.startswith("part-") and "/" not in root
 
 
 class _FlakyClient:
@@ -88,64 +77,53 @@ class _FlakyClient:
             return self.delegate.put_object(**kwargs)
 
 
-def test_retry_then_success(s3_bucket):
-    flaky = _FlakyClient(2, delegate=s3_bucket)
-    sink = S3ObjectSink(
-        bucket="test-bucket",
-        retry_attempts=3,
-        client=flaky,
-        _sleep=lambda s: None,
-    )
-    sink.put_bytes(b"x", "retried.parquet")
-    assert flaky.calls == 3
-    # verify through the real moto client (the flaky wrapper has no
-    # head_object) that the third attempt actually landed the object
-    s3_bucket.head_object(
-        Bucket="test-bucket", Key="langchain-logs/retried.parquet"
-    )
+@pytest.fixture()
+def flaky(monkeypatch):
+    """Make the S3 leg's boto3 client a _FlakyClient(n_failures, delegate)."""
+
+    def install(n_failures: int, delegate=None) -> _FlakyClient:
+        client = _FlakyClient(n_failures, delegate)
+        monkeypatch.setattr(boto3, "client", lambda *a, **kw: client)
+        return client
+
+    return install
 
 
-def test_failure_error_mode_raises():
-    flaky = _FlakyClient(99)
-    sink = S3ObjectSink(
-        bucket="test-bucket",
-        retry_attempts=2,
-        on_failure="error",
-        client=flaky,
-        _sleep=lambda s: None,
-    )
-    with pytest.raises(RuntimeError, match="Failed to upload to S3"):
-        sink.put_bytes(b"x", "doomed.parquet")
-    assert flaky.calls == 2
+def test_retry_then_success(s3_bucket, flaky, sink_sleeps):
+    client = flaky(2, delegate=s3_bucket)
+    ParquetSink("s3a://test-bucket/langchain-logs", partition_on=None,
+                retry_attempts=3).write(_table())
+    assert client.calls == 3
+    # the third attempt landed exactly one object, read through moto itself
+    assert len(_keys(s3_bucket)) == 1
+    assert sink_sleeps == [1, 2]
 
 
-def test_failure_continue_mode_swallows(caplog):
-    flaky = _FlakyClient(99)
-    sink = S3ObjectSink(
-        bucket="test-bucket",
-        retry_attempts=2,
-        on_failure="continue",
-        client=flaky,
-        _sleep=lambda s: None,
-    )
+def test_failure_error_mode_raises(flaky, sink_sleeps):
+    client = flaky(99)
+    sink = ParquetSink("s3a://test-bucket/logs", partition_on=None,
+                       retry_attempts=2, on_failure="error")
+    with pytest.raises(RuntimeError, match="after 2 attempts"):
+        sink.write(_table())
+    assert client.calls == 2
+
+
+def test_failure_continue_mode_swallows(flaky, sink_sleeps, caplog):
+    client = flaky(99)
+    sink = ParquetSink("s3a://test-bucket/logs", partition_on=None,
+                       retry_attempts=2, on_failure="continue")
     with caplog.at_level("ERROR"):
-        sink.put_bytes(b"x", "doomed.parquet")  # must not raise
-    assert flaky.calls == 2
+        sink.write(_table())  # must not raise
+    assert client.calls == 2
     assert any("continuing" in r.message for r in caplog.records)
 
 
-def test_backoff_is_exponential():
-    sleeps: list[float] = []
-    flaky = _FlakyClient(99)
-    sink = S3ObjectSink(
-        bucket="test-bucket",
-        retry_attempts=3,
-        on_failure="continue",
-        client=flaky,
-        _sleep=sleeps.append,
-    )
-    sink.put_bytes(b"x", "doomed.parquet")
-    assert sleeps == [1, 2]  # 2**0, 2**1; no sleep after the final attempt
+def test_backoff_is_exponential(flaky, sink_sleeps):
+    flaky(99)
+    sink = ParquetSink("s3a://test-bucket/logs", partition_on=None,
+                       retry_attempts=3, on_failure="continue")
+    sink.write(_table())
+    assert sink_sleeps == [1, 2]  # 2**0, 2**1; no sleep after the final attempt
 
 
 def _hadoop_aws_available(spark) -> bool:

@@ -3,7 +3,8 @@
 Mirrors the reference's mocked-S3 policy tests
 (/root/reference/tests/test_s3_integration.py:50-141) with local-FS failure
 injection: the injection seam is ``ParquetSink._write_once`` (the whole
-Spark write job — the analog of one ``put_object`` call).
+Spark write job — the analog of one ``put_object`` call). Every test
+records the waits between attempts instead of sleeping them.
 """
 
 from __future__ import annotations
@@ -15,6 +16,8 @@ import pytest
 from langchain_callback_parquet_logger_spark.sinks import CompositeSink, ParquetSink
 
 UTC = dt.timezone.utc
+
+pytestmark = pytest.mark.usefixtures("sink_sleeps")
 
 
 def _log_frame(spark):
@@ -42,11 +45,12 @@ class FlakySink(ParquetSink):
         super()._write_once(df)
 
 
-def test_write_retries_then_succeeds(spark, tmp_path):
+def test_write_retries_then_succeeds(spark, tmp_path, sink_sleeps):
     out = str(tmp_path / "retry_ok")
     sink = FlakySink(out, fail_times=2, retry_attempts=3)
     sink.write(_log_frame(spark))
     assert sink.calls == 3  # two failures + one success
+    assert sink_sleeps == [1, 2]
     assert spark.read.parquet(out).count() == 1
 
 

@@ -413,3 +413,39 @@ def test_sessionize_drain_is_one_microbatch(spark, sf_dir):
         load_table(spark, sf_dir, "events").select("user_id").distinct().count()
     )
     assert got_users == want_users
+
+
+def test_stream_session_window_gap_rule_matches_its_oracle(spark, tmp_path):
+    """An event exactly 30 minutes after the previous one stays in its
+    session and one 30 minutes + 1 µs after it starts a new one, in
+    Spark's session_window and in the DuckDB oracle alike."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from langchain_callback_parquet_logger_spark.streaming.ingest import (
+        ORACLE_STREAM_SESSION_WINDOW,
+        q_stream_session_window,
+    )
+
+    t0 = dt.datetime(2024, 1, 1, 12)
+    gap, us = dt.timedelta(minutes=30), dt.timedelta(microseconds=1)
+    # user 1: an exact gap, then a gap of 30 min + 1 µs; user 2: one event
+    ts = [t0, t0 + gap, t0 + 2 * gap + us, t0]
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 2, 3, 4], pa.int64()),
+        "ts": pa.array(ts, pa.timestamp("us")),
+        "user_id": pa.array([1, 1, 1, 2], pa.int64()),
+        "event_type": ["click"] * 4,
+        "value": [0.0] * 4,
+        "props": ["{}"] * 4,
+    }), path)
+
+    got = sorted(tuple(r) for r in q_stream_session_window(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    want = sorted(con.execute(ORACLE_STREAM_SESSION_WINDOW).fetchall())
+    assert got == want == [(1, 2, 3), (2, 1, 1)]

@@ -39,7 +39,6 @@ from .schema import (
     CUSTOM_ID_DESC_PREFIX,
     CUSTOM_ID_PREFIX,
     DEFAULT_EVENT_TYPES,
-    LOG_COLUMNS,
 )
 
 
@@ -86,11 +85,6 @@ def with_tags(
         if custom_id_description:
             tag_list.append(f"{CUSTOM_ID_DESC_PREFIX}{custom_id_description}")
     return config
-
-
-def tags_column(tags: Sequence[str]) -> Column:
-    """Materialize a constant tags list as an ArrayType(StringType) column."""
-    return F.array(*[F.lit(t) for t in tags])
 
 
 # ---------------------------------------------------------------------------
@@ -208,6 +202,9 @@ def session_zone(spark: SparkSession) -> dt.tzinfo:
 # A JSON escape in json.dumps output: an escaped backslash (matched so that
 # the text after it is not taken for an escape) or a \u00XX control escape.
 _ESCAPE = re.compile(r"\\(?:\\|u00([0-9a-f]{2}))")
+# json.dumps(obj, ensure_ascii=False, separators=(",", ":")), without
+# building an encoder per call
+_encode = json.JSONEncoder(ensure_ascii=False, separators=(",", ":")).encode
 
 
 def _spark_json(obj: object) -> str:
@@ -215,7 +212,7 @@ def _spark_json(obj: object) -> str:
     Both leave non-ASCII unescaped and use the same short escapes; they
     differ only in the hex case of ``\\u00XX`` escapes, which Jackson
     writes in uppercase."""
-    s = json.dumps(obj, ensure_ascii=False, separators=(",", ":"))
+    s = _encode(obj)
     if "\\u00" in s:
         s = _ESCAPE.sub(lambda m: "\\u00" + m[1].upper() if m[1] else m[0], s)
     return s
@@ -314,7 +311,3 @@ def read_log_dataset(spark: SparkSession, path: str) -> DataFrame:
 def payload_field(payload: Column, json_path: str) -> Column:
     """F2 — ad-hoc JSON path extraction (README.md:221-224)."""
     return F.get_json_object(payload, json_path)
-
-
-def select_log_columns(df: DataFrame) -> DataFrame:
-    return df.select(*LOG_COLUMNS)

@@ -30,6 +30,15 @@ Differences from the reference (deliberate):
   root, one level above each argument, so it turned the 21st nesting level
   of an argument into a ``str``; that level now keeps its shape, and only
   deeper levels are cut.
+- Conversion dispatches on the exact type first: JSON scalars are returned
+  as they are, and an exact ``dict``, ``list`` or ``tuple`` is walked
+  without the cascade's ``isinstance`` checks (a runtime check against
+  ``typing.Mapping`` costs about a µs per node). Subclasses and all other
+  types take the cascade, so the JSON text is the cascade's, byte for byte.
+  On the benchmark's callback stream, about three fifths of a captured
+  callback then goes to encoding ``data`` and ``raw`` (one prebuilt
+  encoder, mostly escaping prompt and response text), and most of the
+  rest to converting the arguments and buffering the row.
 
 LangChain itself is optional: the handler duck-types BaseCallbackHandler's
 method surface, so it works as a callback when langchain-core is installed
@@ -42,6 +51,7 @@ import atexit
 import datetime as dt
 import json
 import threading
+from collections import abc
 from typing import Any, Iterable, Literal, Mapping, Sequence
 
 from pyspark.sql import SparkSession
@@ -51,17 +61,34 @@ from .schema import DEFAULT_EVENT_TYPES
 from .sinks import CompositeSink, ParquetSink, create_sink
 
 
+# The JSON scalars, which conversion returns as they are.
+_SCALARS = frozenset({str, int, float, bool, type(None)})
+
+
 def to_jsonable(obj: Any, _depth: int = 0) -> Any:
     """Duck-typed best-effort conversion to JSON-serializable values,
     behaviorally matching the reference's cascade (logger.py:103-150):
-    Pydantic v2 ``model_dump`` → ``to_dict`` → ``__dict__`` → ``str``."""
+    Pydantic v2 ``model_dump`` → ``to_dict`` → ``__dict__`` → ``str``.
+    The exact types callbacks mostly carry (JSON scalars, ``dict``,
+    ``list``, ``tuple``) are dispatched first; subclasses and every other
+    type take the cascade."""
     if _depth > 20:
         return str(obj)
-    if obj is None or isinstance(obj, (bool, int, float, str)):
+    t = type(obj)
+    if t in _SCALARS:
+        return obj
+    if t is dict:
+        return {
+            k if type(k) is str else str(k): to_jsonable(v, _depth + 1)
+            for k, v in obj.items()
+        }
+    if t is list or t is tuple:
+        return [to_jsonable(v, _depth + 1) for v in obj]
+    if isinstance(obj, (bool, int, float, str)):
         return obj
     if isinstance(obj, (dt.datetime, dt.date)):
         return obj.isoformat()
-    if isinstance(obj, Mapping):
+    if isinstance(obj, abc.Mapping):
         return {str(k): to_jsonable(v, _depth + 1) for k, v in obj.items()}
     if isinstance(obj, (list, tuple, set)):
         return [to_jsonable(v, _depth + 1) for v in obj]
@@ -78,14 +105,17 @@ def to_jsonable(obj: Any, _depth: int = 0) -> Any:
     return str(obj)
 
 
+# json.dumps(obj, separators=(",", ":"), default=str), without building an
+# encoder per call
+_encode = json.JSONEncoder(separators=(",", ":"), default=str).encode
+
+
 def safe_json_dumps(obj: Any, walked: bool = False) -> str:
     """Second defensive layer (reference logger.py:152-166). ``walked``
     says ``obj`` is already ``to_jsonable`` output, which is not walked
     again."""
     try:
-        return json.dumps(
-            obj if walked else to_jsonable(obj), separators=(",", ":"), default=str
-        )
+        return _encode(obj if walked else to_jsonable(obj))
     except Exception:
         return json.dumps({"serialization_error": str(obj)[:1000]})
 
@@ -274,7 +304,7 @@ class SparkParquetLogger:
             kw,
             data={
                 "prompts": p,
-                "llm_type": s.get("_type") if isinstance(serialized, Mapping) else None,
+                "llm_type": s.get("_type") if isinstance(serialized, abc.Mapping) else None,
                 "serialized": s,
                 "invocation_params": kw_j.get("invocation_params"),
             },

@@ -12,7 +12,13 @@ Spark-first rewrite of the reference's storage layer
   The live logger hands `ParquetSink.write` a pyarrow Table instead, which
   pyarrow writes as one file per date partition, as the reference does:
   published with a temp file and `os.replace` locally, and with one boto3
-  `put_object` per file on `s3a://`/`s3://` (storage.py:81-101).
+  `put_object` per file on `s3a://`/`s3://` (storage.py:81-101). A flush
+  on one date, the usual case, is written as it is, without a filter
+  pass. The file carries dictionary pages and min/max statistics only on
+  the columns readers group or filter by: no dictionary on `timestamp`,
+  `run_id` or `payload`, and no statistics on the ~2.7 KB `payload`
+  strings, while `timestamp` keeps the statistics that compacted scans
+  skip files by.
   `ParquetSink.write` is the one retry loop for both kinds of write: the
   reference's N attempts with `2**attempt` s between them, then the
   error/continue policy (``on_failure``).
@@ -50,6 +56,10 @@ logger = logging.getLogger(__name__)
 
 DEFAULT_PATH_TEMPLATE = "{job_category}/{job_subcategory}/v{job_version_safe}"
 _COMPRESSION = "snappy"
+# An Arrow write's files (S6 above): dictionary pages on the columns whose
+# values repeat within a flush, min/max statistics on all but the payload.
+_DICTIONARY_COLUMNS = ["event_type", "logger_metadata", "parent_run_id", "custom_id"]
+_NO_STATISTICS_COLUMNS = {"payload"}
 # The wait between write attempts; tests substitute it to run retries
 # without the reference schedule's seconds of sleep.
 _sleep = time.sleep
@@ -160,15 +170,23 @@ class ParquetSink:
             if dates.null_count:
                 raise ValueError("cannot partition rows with a null date")
             table = table.drop_columns(["date"])
-            parts = [
-                (f"date={d}/{write.name}", table.filter(pc.equal(dates, d)))
-                for d in pc.unique(dates).to_pylist()
-            ]
+            days = pc.unique(dates).to_pylist()
+            if len(days) == 1:  # the usual flush: no filter pass
+                parts = [(f"date={days[0]}/{write.name}", table)]
+            else:
+                parts = [
+                    (f"date={d}/{write.name}", table.filter(pc.equal(dates, d)))
+                    for d in days
+                ]
         else:
             parts = [(write.name, table)]
+        statistics = [c for c in table.column_names if c not in _NO_STATISTICS_COLUMNS]
         for rel, part in parts:
             buf = pa.BufferOutputStream()
-            pq.write_table(part, buf, compression=_COMPRESSION)
+            pq.write_table(
+                part, buf, compression=_COMPRESSION,
+                use_dictionary=_DICTIONARY_COLUMNS, write_statistics=statistics,
+            )
             put(buf.getvalue().to_pybytes(), rel)
 
     def write(self, df: DataFrame | pa.Table | _ArrowWrite) -> None:

@@ -1,5 +1,6 @@
 """Examples stay importable always; full subprocess runs (each boots its
-own JVM, ~1 min total) only when SPARK_GRAFT_TEST_EXAMPLES=1."""
+own JVM, about 5 min in all on 4 cores) only when
+SPARK_GRAFT_TEST_EXAMPLES=1."""
 
 from __future__ import annotations
 

@@ -1,12 +1,15 @@
 """The live logger's flush as written files: one parquet file per date
 partition per flush, the failure policy seen from the flushing callback,
 atomic and idempotent publishing, the S3 leg, the atexit flush, and a log
-tree mixing Spark-written and Arrow-written flushes. Tests that fail a
-write record the waits between attempts instead of sleeping them."""
+tree mixing Spark-written and Arrow-written flushes, the per-flush file's
+layout, and the exact data/raw JSON text of the handlers. Tests that fail
+a write record the waits between attempts instead of sleeping them."""
 
 from __future__ import annotations
 
+import collections
 import datetime as dt
+import enum
 import gc
 import json
 import os
@@ -15,6 +18,7 @@ import sys
 import textwrap
 import threading
 import weakref
+from collections.abc import Mapping
 
 import pyarrow.parquet as pq
 import pytest
@@ -23,6 +27,7 @@ from langchain_callback_parquet_logger_spark import sinks
 from langchain_callback_parquet_logger_spark.ingest import (
     RAW_EVENT_DDL,
     normalize_events,
+    normalize_rows,
     read_log_dataset,
 )
 from langchain_callback_parquet_logger_spark.logger import SparkParquetLogger
@@ -293,6 +298,57 @@ def test_mixed_spark_and_arrow_tree_reads_and_compacts(spark, tmp_path):
     assert sorted(tuple(r) for r in read_log_dataset(spark, out).collect()) == before
 
 
+# --- the per-flush file ------------------------------------------------------
+
+
+def test_arrow_write_spanning_two_dates_writes_one_file_per_date(tmp_path):
+    rows = [
+        (dt.datetime(2024, 1, 1, 23, 59, tzinfo=UTC), "a", None, "llm_start", [], {}, None, None),
+        (dt.datetime(2024, 1, 2, 0, 1, tzinfo=UTC), "b", None, "llm_end", [], {}, None, None),
+        (dt.datetime(2024, 1, 1, 12, 0, tzinfo=UTC), "c", None, "llm_end", [], {}, None, None),
+    ]
+    out = tmp_path / "logs"
+    ParquetSink(str(out)).write(normalize_rows(rows, UTC))
+    files = files_under(out)
+    assert [f.split("/")[0] for f in files] == ["date=2024-01-01", "date=2024-01-02"]
+    assert [sorted(pq.read_table(out / f)["run_id"].to_pylist()) for f in files] == [
+        ["a", "c"], ["b"]
+    ]
+
+
+def test_logger_file_keeps_dictionary_and_statistics_off_the_payload(spark, tmp_path):
+    """Dictionary pages and min/max statistics only on the columns readers
+    group or filter by; timestamp's statistics carry compaction's file
+    skipping. Spark reads the tree with LOG_SCHEMA."""
+    out = tmp_path / "logs"
+    logger = SparkParquetLogger(spark, str(out), buffer_size=5)
+    for i in range(12):
+        logger.on_llm_start({"_type": "fake"}, [f"p{i}"], run_id=f"r{i}",
+                            parent_run_id="chain", tags=["logger_custom_id:c1"])
+    logger.flush()
+    files = files_under(out)
+    assert len(files) == 3
+    written = []
+    for f in files:
+        pf = pq.ParquetFile(out / f)
+        rg = pf.metadata.row_group(0)
+        chunks = {rg.column(i).path_in_schema: rg.column(i) for i in range(rg.num_columns)}
+        stamps = pf.read(columns=["timestamp"])["timestamp"].to_pylist()
+        ts = chunks["timestamp"].statistics
+        assert ts.has_min_max and (ts.min, ts.max) == (min(stamps), max(stamps))
+        assert chunks["event_type"].statistics.has_min_max
+        assert chunks["payload"].statistics is None
+        assert not chunks["payload"].has_dictionary_page
+        assert chunks["event_type"].has_dictionary_page
+        written += pf.read().to_pylist()
+    df = spark.read.schema(LOG_SCHEMA).parquet(str(out))
+    cols = [f.name for f in LOG_SCHEMA.fields if f.name != "timestamp"]
+    assert sorted(tuple(r[c] for c in cols) for r in df.collect()) == sorted(
+        tuple(r[c] for c in cols) for r in written
+    )
+    assert df.filter("timestamp IS NULL").count() == 0
+
+
 # --- each handler argument is converted once --------------------------------
 
 
@@ -327,3 +383,107 @@ def test_handler_keeps_an_argument_nested_21_levels(spark, tmp_path):
     logger = SparkParquetLogger(spark, str(tmp_path / "logs"), buffer_size=10**9)
     logger.on_llm_start({}, deep, run_id="r")
     assert json.loads(logger._buffer[0][6])["prompts"] == deep
+
+
+# --- golden data/raw text -----------------------------------------------------
+
+
+class _ItemsOverride(dict):
+    def items(self):
+        return [("overridden", True)]
+
+
+class _FrozenMapping(Mapping):
+    def __init__(self, d):
+        self._d = d
+
+    def __getitem__(self, k):
+        return self._d[k]
+
+    def __iter__(self):
+        return iter(self._d)
+
+    def __len__(self):
+        return len(self._d)
+
+
+class _Level(enum.IntEnum):
+    HIGH = 3
+
+
+class _Tag(str):
+    pass
+
+
+class _Model:
+    def model_dump(self):
+        return {"text": "hi", "n": (1, 2)}
+
+
+def _nested(levels: int):
+    deep = "leaf"
+    for _ in range(levels):
+        deep = [deep]
+    return deep
+
+
+def _golden_sample() -> dict:
+    return {
+        "ordered": collections.OrderedDict([("b", 1), ("a", [1.5, None])]),
+        "items_override": _ItemsOverride(x=1),
+        "mapping": _FrozenMapping({"k": "v", 2: "two"}),
+        "int_enum": _Level.HIGH,
+        "str_sub": _Tag("tagged"),
+        "keys": {1: "one", None: "none", (1, 2): "pair", "s": "é\x01"},
+        "bool_key": {True: "yes"},
+        "set": {3, 1, 2},
+        "tuple": (1, "a", (2,)),
+        "when": dt.datetime(2024, 1, 2, 3, 4, 5, 6, tzinfo=UTC),
+        "model": _Model(),
+        "nested21": _nested(21),
+        "nested22": _nested(22),
+    }
+
+
+def _golden_text(kept: int, cut21: str, cut22: str) -> str:
+    """The sample's JSON text; its nested lists keep ``kept`` levels and
+    the level below them is the ``str`` of the rest."""
+
+    def cut(rest: str) -> str:
+        return "[" * kept + rest + "]" * kept
+
+    return (
+        '{"ordered":{"b":1,"a":[1.5,null]},"items_override":{"overridden":true},'
+        '"mapping":{"k":"v","2":"two"},"int_enum":3,"str_sub":"tagged",'
+        r'"keys":{"1":"one","None":"none","(1, 2)":"pair","s":"\u00e9\u0001"},'
+        '"bool_key":{"True":"yes"},"set":[1,2,3],"tuple":[1,"a",[2]],'
+        '"when":"2024-01-02T03:04:05.000006+00:00","model":{"text":"hi","n":[1,2]},'
+        f'"nested21":{cut(cut21)},"nested22":{cut(cut22)}}}'
+    )
+
+
+# the sample as a whole argument or payload section, and one level below it
+SAMPLE_TOP = _golden_text(20, '''"['leaf']"''', '''"[['leaf']]"''')
+SAMPLE_BELOW = _golden_text(19, '''"[['leaf']]"''', '''"[[['leaf']]]"''')
+
+
+def test_handler_and_log_event_json_text_is_pinned(spark, tmp_path):
+    """The exact data/raw text of subclasses, non-dict mappings, enums,
+    non-str keys, sets, datetimes, model objects and the depth cut, as the
+    conversion cascade wrote it before exact types were dispatched first."""
+    logger = SparkParquetLogger(spark, str(tmp_path / "logs"), buffer_size=10**9,
+                                event_types=["llm_start", "chain_end"])
+    logger.on_llm_start(_FrozenMapping({"_type": "fake"}), [_golden_sample()], run_id="r",
+                        invocation_params=_golden_sample())
+    logger.on_chain_end(_golden_sample(), run_id="r")
+    logger.log_event("custom", run_id="r", data=_golden_sample(),
+                     raw={"wrapped": _golden_sample()}, _bypass_filter=True)
+    assert [(row[3], row[6], row[7]) for row in logger._buffer] == [
+        ("llm_start",
+         f'{{"prompts":[{SAMPLE_BELOW}],"llm_type":"fake","serialized":{{"_type":"fake"}},'
+         f'"invocation_params":{SAMPLE_TOP}}}',
+         f'{{"serialized":{{"_type":"fake"}},"prompts":[{SAMPLE_BELOW}],"run_id":"r",'
+         f'"invocation_params":{SAMPLE_TOP}}}'),
+        ("chain_end", f'{{"outputs":{SAMPLE_TOP}}}', '{"run_id":"r"}'),
+        ("custom", SAMPLE_TOP, f'{{"wrapped":{SAMPLE_BELOW}}}'),
+    ]

@@ -1,14 +1,16 @@
-"""Iterative graph operator: connected components over near-duplicate
-pairs — the step that turns pairwise dedup verdicts (q_ngram_jaccard,
+"""Iterative graph operators over near-duplicate pairs: connected
+components, integer PageRank and label propagation, the standard
+Pregel-style loops expressed in DataFrame ops (the reference has nothing
+iterative at all). All three start from one symmetric edge list,
+:func:`_symmetric_edges`, cached with ``cache_tracked``.
+
+Connected components turns pairwise dedup verdicts (q_ngram_jaccard,
 q_minhash_dedup, q_simhash_pairs) into disjoint duplicate CLUSTERS with
 one canonical document each, which is what a curation pipeline actually
-deletes against. The reference has nothing iterative at all; this is the
-standard Pregel-style min-label propagation expressed in DataFrame ops.
-
-Algorithm: every node starts labeled with itself; each round a node takes
-the minimum label among itself and its neighbors; converged when no label
-changes. Rounds needed = graph diameter (near-dup clusters are small and
-clique-ish, so 2-4 in practice).
+deletes against. Every node starts labeled with itself; each round a
+node takes the minimum label among itself and its neighbors; converged
+when no label changes. Rounds needed = graph diameter (near-dup clusters
+are small and clique-ish, so 2-4 in practice).
 
 Scale design:
 - Each round is ONE shuffle join (symmetric edge list ⋈ labels on the
@@ -19,9 +21,10 @@ Scale design:
   without it the plan doubles per iteration and the driver OOMs on plan
   size long before data is the problem (on a cluster, ``checkpoint()`` to
   reliable storage is the durable variant).
-- The convergence probe collects ONE scalar (changed-label count) per
-  round — a driver-side loop over aggregates, not over rows; this is the
-  legitimate use of an action inside an operator.
+- The changed-label count is OBSERVED (``DataFrame.observe``) on the
+  join that builds the new labels, so it arrives with the round's
+  checkpoint job: one Spark action per round, and the driver reads one
+  scalar, not rows.
 
 The declared query's oracle is a DuckDB recursive CTE computing the
 transitive closure and taking min over each reachable set — same fixpoint,
@@ -30,42 +33,73 @@ different engine, value-identical labels.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import _oracle_minhash, q_minhash_dedup
 
+CC_MAX_ROUNDS = 25
 
-def connected_components(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 25
+
+def _symmetric_edges(
+    edges: DataFrame, src: str, dst: str, self_loops: bool = False
 ) -> DataFrame:
-    """(src, dst) undirected edge list → (node, label) where label is the
-    smallest node id in the node's component."""
-    # Materialize the edge list BEFORE the symmetric union: both union
-    # branches reference `edges`, and without this the upstream plan (here:
-    # the whole near-dup pair computation) executes twice.
-    edges = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
+    """(src, dst) → cached distinct (u, v) holding both directions of every
+    edge, plus (u, u) and (v, v) when ``self_loops``.
+
+    The projected edge list is checkpointed eagerly BEFORE the union:
+    every union leg references it, and without the checkpoint the
+    upstream plan (here: the whole MinHash pair pipeline) executes once
+    PER LEG in the job that first materializes the cached result
+    (measured at sf0.1: q_dup_centrality 3.38 s and q_label_propagation
+    4.02 s, against 2.55 s and 2.56 s with it)."""
+    from ..plans.session import cache_tracked, scoped_conf
+
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
         eager=True
     )
-    sym = (
-        edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    legs = [e, e.select(F.col("v").alias("u"), F.col("u").alias("v"))]
+    if self_loops:
+        legs += [
+            e.select("u", F.col("u").alias("v")),
+            e.select(F.col("v").alias("u"), "v"),
+        ]
+    # A cached plan keeps the full shuffle width of its distinct() unless
+    # AQE may change its output partitioning; let it coalesce, so every
+    # round's scan of this small frame is one task, not one per partition.
+    with scoped_conf(
+        e.sparkSession,
+        {"spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true"},
+    ):
+        return cache_tracked(reduce(DataFrame.unionByName, legs).distinct())
+
+
+def connected_components(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """(src, dst) undirected edge list → (node, label) where label is the
+    smallest node id in the node's component. Raises RuntimeError when
+    no fixpoint is reached in CC_MAX_ROUNDS rounds."""
+    sym = _symmetric_edges(edges, src, dst)
     labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+        sym.select(F.col("u").alias("node")).distinct().withColumn("label", F.col("node"))
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         neighbor_min = (
             sym.join(labels, sym.v == labels.node)
             .groupBy("u")
             .agg(F.min("label").alias("nlabel"))
         )
-        new_labels = (
+        # Labels only fall, so the rows whose neighbour minimum undercuts
+        # the old label are exactly the rows that change this round.
+        changed = Observation()
+        labels = (
             labels.join(neighbor_min, labels.node == neighbor_min.u, "left")
+            .observe(
+                changed, F.count_if(F.col("nlabel") < F.col("label")).alias("n")
+            )
             .select(
                 "node",
                 F.least(
@@ -74,16 +108,9 @@ def connected_components(
             )
             .localCheckpoint(eager=True)
         )
-        changed = (
-            labels.withColumnRenamed("label", "old")
-            .join(new_labels, "node")
-            .filter(F.col("old") != F.col("label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if changed.get["n"] == 0:
             return labels
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+    raise RuntimeError(f"connected_components: no fixpoint in {CC_MAX_ROUNDS} rounds")
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,34 +178,20 @@ _TELEPORT = (PAGERANK_SCALE * (_DAMP_DEN - _DAMP_NUM)) // _DAMP_DEN
 
 
 def pagerank_integer(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = PAGERANK_ITERS,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """(src, dst) undirected edge list → (node, degree, rank_q) after
-    `iters` integer PageRank steps at the 1e9 fixed-point scale. The
-    symmetric graph has no dangling nodes (every node has in-degree
+    PAGERANK_ITERS integer PageRank steps at the 1e9 fixed-point scale.
+    The symmetric graph has no dangling nodes (every node has in-degree
     ≥ 1), so no dangling-mass correction is needed."""
     from ..plans.session import cache_tracked
 
-    # Materialize the edge list BEFORE the symmetric union (same fix
-    # connected_components has carried since r7): both union branches
-    # reference `e`, and without this the upstream plan — here the whole
-    # MinHash pair pipeline — executes once PER BRANCH in the job that
-    # first materializes the cached sym frame (measured round 14:
-    # q_dup_centrality 3.38 s -> the pr_total floor 2.55 s at sf0.1).
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=True
-    )
-    sym = cache_tracked(
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    )
+    sym = _symmetric_edges(edges, src, dst)
     deg = cache_tracked(sym.groupBy("u").agg(F.count("*").alias("deg")))
     ranks = deg.select(
         "u", F.lit(PAGERANK_SCALE).cast("bigint").alias("r")
     )
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         contrib = (
             sym.join(ranks, "u")
             .join(deg, "u")
@@ -277,9 +290,9 @@ LPA_ITERS = 4
 
 
 def label_propagation(
-    edges: DataFrame, src: str = "src", dst: str = "dst", iters: int = LPA_ITERS
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """(src, dst) undirected edge list → (node, label) after `iters`
+    """(src, dst) undirected edge list → (node, label) after LPA_ITERS
     synchronous mode-label rounds (ties → smallest label).
 
     Input self-loops are ABSORBED into the stabilizing self-vote: the
@@ -290,32 +303,16 @@ def label_propagation(
     q_label_propagation, whose MinHash pairs guarantee doc_a < doc_b;
     callers who need multigraph vote weights should pre-aggregate edge
     multiplicities instead of repeating edges.)"""
-    from ..plans.session import cache_tracked
-
-    # Materialize the edge list BEFORE the four-branch union (same fix
-    # connected_components has carried since r7): every branch
-    # references `e`, and without this the upstream MinHash pair
-    # pipeline executes once PER BRANCH in the job that materializes
-    # the cached sym frame (measured round 14: q_label_propagation
-    # 4.02 s -> the lpa_total floor 2.56 s at sf0.1).
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=True
-    )
     # The self-vote is encoded as a SELF-LOOP edge per node: the label
     # frame is then referenced exactly ONCE per round (plain neighbour
     # voting over the loop-augmented graph), so the iteration chain
     # stays a linear plan — a second reference per round would fan the
-    # label subtree out 2^iters times (r7 lesson).
-    sym = cache_tracked(
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .unionByName(e.select("u", F.col("u").alias("v")))
-        .unionByName(e.select(F.col("v").alias("u"), "v"))
-        .distinct()
-    )
+    # label subtree out 2^LPA_ITERS times (r7 lesson).
+    sym = _symmetric_edges(edges, src, dst, self_loops=True)
     labels = sym.select("u").distinct().select(
         "u", F.col("u").alias("label")
     )
-    for _ in range(iters):
+    for _ in range(LPA_ITERS):
         counts = (
             sym.join(
                 labels.select(

@@ -23,11 +23,6 @@ from pyspark.sql import functions as F
 
 from ..plans.session import load_table
 
-MEDIA_SCHEMA = (
-    "doc_id bigint, media binary, media_type string, width int, height int, "
-    "n_bytes bigint"
-)
-
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes bigint, mean_byte double, max_byte int, "
     "checksum string"

@@ -109,12 +109,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-_COSINE_SQL = (
-    "list_dot_product(a.emb, b.emb) / "
-    "(sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb)))"
-)
-
-
 def knn_bruteforce(
     embeddings: DataFrame, query: DataFrame, k: int = TOP_K
 ) -> DataFrame:
@@ -1267,7 +1261,7 @@ SELECT vec_id, sim FROM scored ORDER BY sim DESC, vec_id ASC LIMIT {TOP_K}
 # — the term you buy GPUs/ANN-assignment for in production, and the one
 # that parallelizes perfectly on a 1000-executor cluster. Sizing K costs
 # one scalar count() on the driver (same legitimacy as
-# connected_components' convergence probe).
+# connected_components' per-round changed-label count).
 # ---------------------------------------------------------------------------
 
 SEMDEDUP_THRESHOLD = 0.4  # calibrated so sf0.01 prunes a handful of vecs

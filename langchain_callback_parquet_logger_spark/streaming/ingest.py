@@ -189,27 +189,14 @@ def q_stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the same plan runs unchanged with a directory of arriving files
     and trigger=processingTime; state is bounded by the watermark."""
-    from ..plans.session import scoped_conf
-
     stream = _event_stream(spark, sf_dir)
     counts = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n"))
     )
-    sink_name = "q_stream_hourly_counts_sink"
-    # State partition width is pinned at the stream's first checkpoint;
-    # scope it to the drain size (see stateful.q_stream_sessionize).
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        query = (
-            counts.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(sink_name).select(
+    sink = drain(spark, counts, "q_stream_hourly_counts_sink", "complete")
+    return spark.table(sink).select(
         F.col("w.start").alias("hour_start"),
         "event_type",
         "n",
@@ -234,25 +221,13 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is one entry per live key; with a watermark
     (dropDuplicatesWithinWatermark) state is evicted after the lateness
     horizon, bounding it for unbounded streams."""
-    from ..plans.session import scoped_conf
-
     stream = (
         _event_stream(spark, sf_dir)
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    sink_name = "q_stream_dedup_sink"
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        query = (
-            stream.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
     return (
-        spark.table(sink_name)
+        spark.table(drain(spark, stream, "q_stream_dedup_sink", "append"))
         .groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n_users"))
     )
@@ -294,6 +269,28 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_ts(src)
 
 
+def drain(spark: SparkSession, frame: DataFrame, name: str, mode: str) -> str:
+    """Run the streaming ``frame`` to completion into the memory sink
+    ``name`` (``availableNow`` trigger, output mode ``mode``) and return
+    ``name`` for ``spark.table``.
+
+    The state partition count is fixed at the stream's first checkpoint;
+    a one-file drain wants few fat state partitions (each carries a
+    state-store provider), so the shuffle width is scoped to the drain."""
+    from ..plans.session import scoped_conf
+
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+        query = (
+            frame.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+    return name
+
+
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join: each purchase joined to the same user's
     clicks in the trailing hour — the streaming form of the banded range
@@ -305,8 +302,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The availableNow drain over a static table equals the batch interval
     join, so this stateful operator gets a full value oracle."""
-    from ..plans.session import scoped_conf
-
     purchases = (
         _event_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -329,18 +324,8 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
     )
-    sink_name = "q_stream_join_sink"
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
     return (
-        spark.table(sink_name)
+        spark.table(drain(spark, joined, "q_stream_join_sink", "append"))
         .groupBy("purchase_id")
         .agg(F.count("*").alias("n_clicks_1h"))
     )
@@ -369,24 +354,13 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     Drained availableNow over a static table, every session closes, so
     per-user session/event totals equal the batch lag-based rollup —
     full value oracle."""
-    from ..plans.session import scoped_conf
-
     stream = _event_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     sessions = stream.groupBy(
         F.col("user_id"), F.session_window("ts", "30 minutes")
     ).agg(F.count("*").alias("n_events"))
-    sink_name = "q_stream_session_window_sink"
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        query = (
-            sessions.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    sink = drain(spark, sessions, "q_stream_session_window_sink", "complete")
     return (
-        spark.table(sink_name)
+        spark.table(sink)
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_sessions"),
@@ -576,7 +550,6 @@ def q_stream_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the watermark — the quality dashboard a 100 TB ingest watches
     instead of re-scanning admitted batches."""
     from ..operators.analytic import EVENT_TYPES
-    from ..plans.session import scoped_conf
 
     enum_list = ", ".join(f"'{t}'" for t in EVENT_TYPES)
     stream = _event_stream(spark, sf_dir)
@@ -592,17 +565,8 @@ def q_stream_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("enum_ok"),
         )
     )
-    sink_name = "q_stream_quality_monitor_sink"
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        query = (
-            checks.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(sink_name).select(
+    sink = drain(spark, checks, "q_stream_quality_monitor_sink", "complete")
+    return spark.table(sink).select(
         F.col("w.start").alias("hour_start"),
         "n",
         F.expr("(1000000 * nn_value) div n").alias("completeness_ppm"),

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-SESSION_GAP_US = 30 * 60 * 1_000_000  # keep in sync with queries.SESSION_GAP_US
+from ..operators.queries import SESSION_GAP_US
 
 OUTPUT_SCHEMA = "user_id bigint, n_sessions bigint, n_events bigint"
 STATE_SCHEMA = "last_ts bigint, n_sessions bigint, n_events bigint"
@@ -89,26 +89,11 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store → memory sink) and return the final per-user counts.
     Counts are cumulative and monotone, so the last emission per user is
     the max."""
-    from ..plans.session import scoped_conf
-    from .ingest import _event_stream
+    from .ingest import _event_stream, drain
 
-    stream = _event_stream(spark, sf_dir)
-    sink_name = "q_stream_sessionize_sink"
-    # The state partition count is fixed at the stream's first checkpoint;
-    # a one-file drain wants few fat state partitions (each carries a
-    # state-store provider), so scope the shuffle width to the drain.
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        query = (
-            sessionize_stream(stream)
-            .writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = sessionize_stream(_event_stream(spark, sf_dir))
     return (
-        spark.table(sink_name)
+        spark.table(drain(spark, stream, "q_stream_sessionize_sink", "update"))
         .groupBy("user_id")
         .agg(
             F.max("n_sessions").alias("n_sessions"),
@@ -200,31 +185,20 @@ def q_stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (non-negative) value total are cumulative, so the final emission
     per user is the max."""
     from ..plans.session import scoped_conf
-    from .ingest import _event_stream
+    from .ingest import _event_stream, drain
 
     stream = _event_stream(spark, sf_dir)
-    sink_name = "q_stream_user_stats_sink"
-    with scoped_conf(
-        spark,
-        {
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            ),
-        },
-    ):
-        query = (
-            user_stats_stream(stream)
-            .writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
         )
-        query.awaitTermination()
+    }
+    with scoped_conf(spark, rocksdb):
+        sink = drain(
+            spark, user_stats_stream(stream), "q_stream_user_stats_sink", "update"
+        )
     return (
-        spark.table(sink_name)
+        spark.table(sink)
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),

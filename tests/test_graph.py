@@ -1,8 +1,11 @@
-"""Connected components (operators/graph.py): hand-built graphs pin the
-fixpoint semantics; the DuckDB recursive-CTE oracle pins values at sf0.01."""
+"""Graph operators (operators/graph.py): hand-built graphs pin the
+fixpoint semantics; the DuckDB oracles pin values at sf0.01."""
 
 from __future__ import annotations
 
+import pytest
+
+from langchain_callback_parquet_logger_spark.operators import graph as G
 from langchain_callback_parquet_logger_spark.operators.graph import (
     connected_components,
     q_dedup_clusters,
@@ -29,6 +32,44 @@ def test_chain_needs_multiple_rounds(spark):
     assert set(got.values()) == {1}
 
 
+def test_no_fixpoint_within_round_cap_raises(spark, monkeypatch):
+    # the diameter-6 chain needs more than two rounds to converge
+    monkeypatch.setattr(G, "CC_MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="no fixpoint in 2 rounds"):
+        _labels(spark, [(i, i + 1) for i in range(1, 7)])
+
+
+@pytest.mark.parametrize(
+    "op", ["connected_components", "pagerank_integer", "label_propagation"]
+)
+def test_edge_input_is_computed_once(spark, op):
+    """Every leg of the symmetric union reads the checkpointed edge list,
+    so the upstream edge plan runs once per edge row, not once per leg
+    (nor once per round)."""
+    from pyspark.sql import functions as F
+
+    from langchain_callback_parquet_logger_spark.plans.session import (
+        release_caches,
+    )
+
+    edges = [(i, i + 1) for i in range(1, 7)] + [(10, 11), (11, 12)]
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("bigint")
+    def counted(x):
+        evaluated.add(1)
+        return x
+
+    df = spark.createDataFrame(edges, "src bigint, dst bigint").select(
+        counted("src").alias("src"), "dst"
+    )
+    try:
+        getattr(G, op)(df, "src", "dst").collect()
+    finally:
+        release_caches()
+    assert evaluated.value == len(edges)
+
+
 def test_cycle_and_self_loop(spark):
     got = _labels(spark, [(5, 6), (6, 7), (7, 5), (9, 9)])
     assert got[5] == got[6] == got[7] == 5
@@ -47,7 +88,6 @@ def test_pagerank_integer_star_graph_ranks_hub_highest(spark):
     """On a star (0 joined to 1..5), the hub must out-rank every leaf,
     all leaves tie exactly (integer arithmetic — no float jitter), and
     the Spark result matches a pure-Python reference bit-for-bit."""
-    from langchain_callback_parquet_logger_spark.operators import graph as G
     from langchain_callback_parquet_logger_spark.plans.session import (
         release_caches,
     )
@@ -87,7 +127,6 @@ def test_label_propagation_matches_python_and_splits_bridged_cliques(spark):
     synchronous-LPA twin exactly, fuzzed over random graphs."""
     import random
 
-    from langchain_callback_parquet_logger_spark.operators import graph as G
     from langchain_callback_parquet_logger_spark.plans.session import (
         release_caches,
     )

@@ -228,10 +228,11 @@ COMMENTARY: dict[str, str] = {
     "q_dedup_clusters": (
         "Edges come from the MinHash+LSH path (linear candidate volume); "
         "each label-propagation round is ONE shuffle join + min-aggregate "
-        "with localCheckpoint truncating the lineage, and the driver "
-        "touches a single scalar per round. Rounds = cluster diameter "
-        "(small for near-dup cliques), so 100 TB costs a handful of "
-        "linear passes."
+        "with localCheckpoint truncating the lineage; the changed-label "
+        "count is observed on that checkpoint job, so a round is one Spark "
+        "action and the driver touches a single scalar. Rounds = cluster "
+        "diameter (small for near-dup cliques), so 100 TB costs a handful "
+        "of linear passes."
     ),
     "q_bpe_merge_candidates": (
         "One BPE-trainer iteration: linear adjacent-pair explode (codegen "

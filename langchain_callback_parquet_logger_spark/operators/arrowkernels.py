@@ -31,6 +31,18 @@ tests/test_arrowkernels.py).  ``np.dot``/BLAS matmul would NOT satisfy
 this (pairwise/SIMD-blocked summation reorders the adds); do not
 "optimize" the d-loop into one.
 
+Layout: each public ``*_frame`` / ``*_sims`` / ``*_scores`` /
+``*_candidates`` function only decodes Arrow batches, calls one private
+NumPy core and encodes the result.  The cores are ``_band_signatures``,
+``_pq_assign``, ``_centroid_assign``, ``_cluster_pairs``,
+``_pair_cosines`` (shared by both band re-rank arms, with one batch
+encoder ``_pair_batch``) and ``_probe_topk``.  They are built on two
+fold primitives: ``_row_dots`` (row-wise dots over a column prefix: norms,
+``|c|^2``, pair and prefix dots) and the panel pair ``_fold_dot_panel`` /
+``_seq_dot_panel`` (block x matrix dots).  PQ's ``(x - c)^2`` distance
+fold is the only other accumulation loop.  tests/test_kernel_cores.py
+proves every core against a scalar Python fold without a JVM.
+
 The embedding column crosses the boundary as Arrow — float32 storage is
 widened to float64 in NumPy (exact, same as Spark's array<double> cast)
 and passed back through, so downstream re-rank folds see the identical
@@ -48,16 +60,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _rows_f64(col: pa.Array | pa.ChunkedArray, d: int, what: str) -> np.ndarray:
+def _rows_f64(
+    col: pa.Array | pa.ChunkedArray, d: int | None, what: str
+) -> np.ndarray:
     """List-of-float column -> (n, d) float64 matrix, enforcing the fixed
     width loudly (the band/PQ planes are d-wide literal matrices; a ragged
-    or mismatched embedding must fail, not truncate — advice r12#1)."""
+    or mismatched embedding must fail, not truncate — advice r12#1).
+    ``d=None`` takes the width of the first row."""
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     if col.null_count:
         raise ValueError(f"{what}: embedding column contains nulls")
     flat = col.flatten()
     n = len(col)
+    d = len(col[0]) if d is None else d
     if len(flat) != n * d:
         raise ValueError(
             f"{what}: expected fixed width {d}, got {len(flat)} values for "
@@ -73,6 +89,95 @@ def _list_array(mat: np.ndarray, arrow_type: pa.DataType) -> pa.ListArray:
     return pa.ListArray.from_arrays(
         offsets, pa.array(np.ascontiguousarray(mat).ravel(), type=arrow_type)
     )
+
+
+def _nonempty(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """The batches with at least one row."""
+    return (b for b in batches if b.num_rows)
+
+
+def _id_column(df: DataFrame, emb_col: str) -> tuple[str, str]:
+    """The one pass-through id column beside ``emb_col``: (name, DDL type)."""
+    others = [c for c in df.columns if c != emb_col]
+    if len(others) != 1:
+        raise ValueError(f"expected one id column beside {emb_col!r}: {df.columns}")
+    return others[0], df.schema[others[0]].dataType.simpleString()
+
+
+def _row_dots(A: np.ndarray, B: np.ndarray, d: int | None = None) -> np.ndarray:
+    """Row-wise dots over the first ``d`` columns (all by default): the
+    sequential per-dim fold, vectorized across rows."""
+    acc = np.zeros(A.shape[0], dtype=np.float64)
+    for i in range(A.shape[1] if d is None else d):  # sequential (bit contract)
+        acc += A[:, i] * B[:, i]
+    return acc
+
+
+def _fold_dot_panel(P: np.ndarray, MTc: np.ndarray) -> np.ndarray:
+    """(b, d) x (d, c) -> (b, c) dot panel via the explicit sequential
+    per-dim fold — the module bit contract, spelled out."""
+    acc = np.zeros((P.shape[0], MTc.shape[1]), dtype=np.float64)
+    for i in range(P.shape[1]):  # sequential per-dim fold (bit contract)
+        acc += P[:, i, None] * MTc[i][None, :]
+    return acc
+
+
+_EINSUM_SEQ_OK: bool | None = None
+
+
+def _seq_dot_panel(P: np.ndarray, MTc: np.ndarray) -> np.ndarray:
+    """The fold panel, computed by ``einsum('pd,dn->pn')`` when safe.
+
+    With the summed dimension as the OUTER (non-contiguous) axis of the
+    second operand, NumPy's unoptimized einsum path accumulates over d
+    sequentially per output element — the exact fold order, measured
+    bit-identical on 3.2e10 random doubles and 4.1x faster than the
+    per-dim loop at the sf1 shape (fused multiply-add instead of three
+    2 MB array touches per dim).  That is an implementation detail of
+    this NumPy build, NOT an API guarantee (the 'nd,nd->n' form, where
+    the reduction IS the contiguous inner axis, takes an unrolled
+    multi-accumulator path and is NOT bit-identical) — so the first
+    call in each worker process PROVES the property on a small random
+    panel and the kernel falls back to the explicit fold if the build
+    ever changes.  tests/test_kernel_cores.py proves both arms per shape
+    class, and the Spark-level pins in tests/test_arrowkernels.py stay
+    the end-to-end guarantee either way."""
+    global _EINSUM_SEQ_OK
+    if _EINSUM_SEQ_OK is None:
+        rng = np.random.default_rng(0xC0FFEE)
+        tp = rng.standard_normal((3, 64))
+        tm = np.ascontiguousarray(rng.standard_normal((64, 257)))
+        want = _fold_dot_panel(tp, tm[:, 3:250])
+        got = np.einsum("pd,dn->pn", tp, tm[:, 3:250], optimize=False)
+        _EINSUM_SEQ_OK = bool(
+            (got.view(np.int64) == want.view(np.int64)).all()
+        )
+    if (
+        _EINSUM_SEQ_OK
+        # the property is proven for THIS operand layout only: output
+        # axis contiguous inner, summed d axis outer — any other stride
+        # pattern (e.g. an F-order operand, where d is the inner axis
+        # and einsum may take the unrolled path) uses the explicit fold
+        and MTc.strides[1] == MTc.itemsize
+        and MTc.strides[0] >= MTc.strides[1]
+        and P.flags.c_contiguous
+    ):
+        return np.einsum("pd,dn->pn", P, MTc, optimize=False)
+    return _fold_dot_panel(P, MTc)
+
+
+def _band_signatures(
+    X: np.ndarray, P: np.ndarray, n_bands: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(n, d) rows x C-contiguous (d, n_planes) planes -> (norms, (n,
+    n_bands) int32 band values packing each band's sign bits MSB-first)."""
+    n, band_bits = X.shape[0], P.shape[1] // n_bands
+    weights = np.array(
+        [1 << (band_bits - 1 - j) for j in range(band_bits)], dtype=np.int64
+    )
+    bits = (_seq_dot_panel(X, P) >= 0).astype(np.int64)
+    bands = bits.reshape(n, n_bands, band_bits) @ weights  # exact ints
+    return np.sqrt(_row_dots(X, X)), bands.astype(np.int32)
 
 
 def band_signature_frame(
@@ -92,42 +197,21 @@ def band_signature_frame(
     products (module docstring).  Consumers posexplode ``bands`` in the
     JVM so the vector payload crosses the Python boundary once per row,
     not once per band row."""
-    others = [c for c in df.columns if c != emb_col]
-    if len(others) != 1:
-        raise ValueError(f"expected one id column beside {emb_col!r}: {df.columns}")
-    id_col = others[0]
-    id_type = df.schema[id_col].dataType.simpleString()
-
+    id_col, id_type = _id_column(df, emb_col)
     # C-contiguous (d, n_planes): the d axis must be the OUTER stride so
     # _seq_dot_panel's verified einsum layout applies (see its docstring)
     P = np.ascontiguousarray(np.array(planes, dtype=np.float64).T)
-    d, n_planes = P.shape
-    band_bits = n_planes // n_bands
-    weights = np.array(
-        [1 << (band_bits - 1 - j) for j in range(band_bits)], dtype=np.int64
-    )
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            X = _rows_f64(batch.column(emb_col), d, "band_signature_frame")
-            n = X.shape[0]
-            # plane dots via the verified sequential-order panel (fused
-            # einsum when safe — see _seq_dot_panel; bit contract intact)
-            acc = _seq_dot_panel(X, P)
-            nrm_acc = np.zeros(n, dtype=np.float64)
-            for i in range(d):  # sequential per-dim accumulation (bit contract)
-                xi = X[:, i]
-                nrm_acc += xi * xi
-            bits = (acc >= 0).astype(np.int64)
-            bands = bits.reshape(n, n_bands, band_bits) @ weights  # exact ints
+        for batch in _nonempty(batches):
+            X = _rows_f64(batch.column(emb_col), P.shape[0], "band_signature_frame")
+            nrm, bands = _band_signatures(X, P, n_bands)
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column(id_col),
                     _list_array(X, pa.float64()),
-                    pa.array(np.sqrt(nrm_acc)),
-                    _list_array(bands.astype(np.int32), pa.int32()),
+                    pa.array(nrm),
+                    _list_array(bands, pa.int32()),
                 ],
                 names=[id_col, "emb", "nrm", "bands"],
             )
@@ -136,6 +220,32 @@ def band_signature_frame(
         kernel,
         f"{id_col} {id_type}, emb array<double>, nrm double, bands array<int>",
     )
+
+
+def _pq_assign(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(n, d) rows x (subspaces, codewords, subdim) codebook -> (err, code
+    strings); see :func:`pq_assign_frame`."""
+    n_sub, n_codes, subdim = C.shape
+    err = None
+    code_cols = []
+    for s in range(n_sub):
+        sub = X[:, s * subdim : (s + 1) * subdim]
+        dist = np.zeros((X.shape[0], n_codes), dtype=np.float64)
+        for i in range(subdim):  # sequential per-dim fold (bit contract)
+            diff = sub[:, i, None] - C[s, :, i]
+            dist += diff * diff
+        sub_err = dist.min(axis=1)
+        code_cols.append(dist.argmin(axis=1))  # first min = lowest c
+        err = sub_err if err is None else err + sub_err  # left-assoc
+    # Unicode width sized from the codebook: astype("U2") would
+    # silently truncate codeword indices >= 100 (advice r13 #3);
+    # with PQ_CODEWORDS=16 this is width 2 today, but a grown
+    # codebook must widen the strings, never corrupt them.
+    uw = f"U{len(str(n_codes - 1))}"
+    code = code_cols[0].astype(uw)
+    for c in code_cols[1:]:
+        code = np.char.add(np.char.add(code, ","), c.astype(uw))
+    return err, code
 
 
 def pq_assign_frame(
@@ -153,47 +263,35 @@ def pq_assign_frame(
     = ties to the smallest index, the ``min(struct(dist, c))`` /
     ``list_position`` tie-break both engines use); the total err is the
     left-associated sum over subspaces in order."""
-    others = [c for c in df.columns if c != emb_col]
-    if len(others) != 1:
-        raise ValueError(f"expected one key column beside {emb_col!r}: {df.columns}")
-    key_col = others[0]
-    key_type = df.schema[key_col].dataType.simpleString()
-
+    key_col, key_type = _id_column(df, emb_col)
     C = np.array(codebook, dtype=np.float64)  # (subspaces, codewords, subdim)
-    n_sub, n_codes, subdim = C.shape
-    d = n_sub * subdim
+    d = C.shape[0] * C.shape[2]
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
+        for batch in _nonempty(batches):
             X = _rows_f64(batch.column(emb_col), d, "pq_assign_frame")
-            n = X.shape[0]
-            err = None
-            code_cols = []
-            for s in range(n_sub):
-                sub = X[:, s * subdim : (s + 1) * subdim]
-                dist = np.zeros((n, n_codes), dtype=np.float64)
-                for i in range(subdim):  # sequential per-dim fold (bit contract)
-                    diff = sub[:, i, None] - C[s, :, i]
-                    dist += diff * diff
-                sub_err = dist.min(axis=1)
-                code_cols.append(dist.argmin(axis=1))  # first min = lowest c
-                err = sub_err if err is None else err + sub_err  # left-assoc
-            # Unicode width sized from the codebook: astype("U2") would
-            # silently truncate codeword indices >= 100 (advice r13 #3);
-            # with PQ_CODEWORDS=16 this is width 2 today, but a grown
-            # codebook must widen the strings, never corrupt them.
-            uw = f"U{len(str(n_codes - 1))}"
-            code = code_cols[0].astype(uw)
-            for c in code_cols[1:]:
-                code = np.char.add(np.char.add(code, ","), c.astype(uw))
+            err, code = _pq_assign(X, C)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(key_col), pa.array(err), pa.array(code.tolist())],
                 names=[key_col, "err", "code"],
             )
 
     return df.mapInArrow(kernel, f"{key_col} {key_type}, err double, code string")
+
+
+def _centroid_assign(
+    X: np.ndarray,
+    cids: np.ndarray,
+    M: np.ndarray,
+    c_sq: np.ndarray,
+    with_norm: bool = False,
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """(n, d) rows x ascending ``cids`` with their C-contiguous (d, K)
+    centroid matrix and ``|c|^2`` -> (nearest cid per row, row norms if
+    ``with_norm``); see :func:`centroid_assign_frame`."""
+    score = c_sq - 2.0 * _seq_dot_panel(X, M)
+    best = cids[np.argmin(score, axis=1)]  # ties -> lowest cid
+    return best, np.sqrt(_row_dots(X, X)) if with_norm else None
 
 
 def centroid_assign_frame(
@@ -215,57 +313,33 @@ def centroid_assign_frame(
     oracle's ``ROW_NUMBER OVER (ORDER BY score, cid)``.  Collecting the
     centroid frame is the same boundedness class as the broadcast it
     replaces (K rows, K always broadcast-sized by design)."""
-    others = [c for c in df.columns if c != emb_col]
-    if len(others) != 1:
-        raise ValueError(f"expected one id column beside {emb_col!r}: {df.columns}")
-    id_col = others[0]
-    id_type = df.schema[id_col].dataType.simpleString()
-
+    id_col, id_type = _id_column(df, emb_col)
     cents = sorted(centroids)  # ascending cid -> argmin ties to lowest cid
     cids = np.array([c[0] for c in cents], dtype=np.int64)
+    C = np.array([c[1] for c in cents], dtype=np.float64)
     # C-contiguous (d, K): d as the OUTER stride, the layout
     # _seq_dot_panel's verified einsum path requires (see its docstring)
-    M = np.ascontiguousarray(np.array([c[1] for c in cents], dtype=np.float64).T)
-    d, k = M.shape
-    # |c|^2 hoisted per centroid, same sequential fold as dot(c, c)
-    c_sq = np.zeros(k, dtype=np.float64)
-    for i in range(d):
-        c_sq += M[i] * M[i]
+    M = np.ascontiguousarray(C.T)
+    c_sq = _row_dots(C, C)  # |c|^2 hoisted per centroid
 
-    cid_type = "bigint"
     out_cols = [f"{id_col} {id_type}"]
     if keep_emb:
         out_cols.append("emb array<double>")
-    out_cols.append(f"cid {cid_type}")
+    out_cols.append("cid bigint")
     if with_norm:
         out_cols.append("nrm double")
+    names = [c.split(" ")[0] for c in out_cols]
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            X = _rows_f64(batch.column(emb_col), d, "centroid_assign_frame")
-            n = X.shape[0]
-            # centroid dots via the verified sequential-order panel (fused
-            # einsum when safe — see _seq_dot_panel; bit contract intact)
-            dots = _seq_dot_panel(X, M)
-            nrm_acc = np.zeros(n, dtype=np.float64) if with_norm else None
-            if with_norm:
-                for i in range(d):  # sequential per-dim fold (bit contract)
-                    xi = X[:, i]
-                    nrm_acc += xi * xi
-            score = c_sq - 2.0 * dots
-            best = cids[np.argmin(score, axis=1)]  # ties -> lowest cid
+        for batch in _nonempty(batches):
+            X = _rows_f64(batch.column(emb_col), M.shape[0], "centroid_assign_frame")
+            best, nrm = _centroid_assign(X, cids, M, c_sq, with_norm)
             arrays = [batch.column(id_col)]
-            names = [id_col]
             if keep_emb:
                 arrays.append(_list_array(X, pa.float64()))
-                names.append("emb")
             arrays.append(pa.array(best))
-            names.append("cid")
             if with_norm:
-                arrays.append(pa.array(np.sqrt(nrm_acc)))
-                names.append("nrm")
+                arrays.append(pa.array(nrm))
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return df.mapInArrow(kernel, ", ".join(out_cols))
@@ -278,6 +352,32 @@ def centroid_assign_frame(
 # would otherwise OOM the Python worker where the old equi-self-join
 # merely spilled).
 _PAIR_BLOCK_BYTES = 64 * 1024 * 1024
+
+
+def _cluster_pairs(
+    ids: np.ndarray, X: np.ndarray, nrm: np.ndarray, loose_min: float | None
+) -> tuple[np.ndarray, np.ndarray]:
+    """One cluster's rows -> (higher vec_id, raw cosine) per unordered
+    pair at or above ``loose_min``; see :func:`cluster_pair_sims`."""
+    order = np.argsort(ids, kind="stable")
+    ids, X, nrm = ids[order], X[order], nrm[order]
+    m = len(ids)
+    block = max(1, _PAIR_BLOCK_BYTES // (8 * max(m, 1)))
+    out_hi = [np.empty(0, np.int64)]
+    out_sims = [np.empty(0, np.float64)]
+    cols = np.arange(m)
+    for lo in range(0, m - 1, block):
+        hi_row = min(lo + block, m - 1)
+        acc = _fold_dot_panel(X[lo:hi_row], X.T)
+        # same multiply-then-divide as the JVM expression
+        sims_blk = acc / (nrm[lo:hi_row, None] * nrm[None, :])
+        keep = cols[None, :] > np.arange(lo, hi_row)[:, None]  # strict upper
+        if loose_min is not None:
+            keep &= sims_blk >= loose_min
+        r, c = np.nonzero(keep)
+        out_hi.append(ids[c])  # ascending ids -> col holds the higher id
+        out_sims.append(sims_blk[r, c])
+    return np.concatenate(out_hi), np.concatenate(out_sims)
 
 
 def cluster_pair_sims(
@@ -305,44 +405,12 @@ def cluster_pair_sims(
     only bounds the rows crossing the boundary, never the result."""
 
     def fn(tbl: pa.Table) -> pa.Table:
-        m = tbl.num_rows
-        if m < 2:
-            return pa.table(
-                {
-                    "cid": pa.array([], pa.int64()),
-                    "vec_id": pa.array([], pa.int64()),
-                    "sim_raw": pa.array([], pa.float64()),
-                }
-            )
-        ids = np.asarray(tbl.column("vec_id"), dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        emb = tbl.column("emb")
-        if isinstance(emb, pa.ChunkedArray):
-            emb = emb.combine_chunks()
-        d = len(emb[0])
-        X = _rows_f64(emb, d, "cluster_pair_sims")[order]
-        ids = ids[order]
-        nrm = np.asarray(tbl.column("nrm"), dtype=np.float64)[order]
-        block = max(1, _PAIR_BLOCK_BYTES // (8 * m))
-        out_hi: list[np.ndarray] = []
-        out_sims: list[np.ndarray] = []
-        cols = np.arange(m)
-        for lo in range(0, m - 1, block):
-            hi_row = min(lo + block, m - 1)
-            acc = np.zeros((hi_row - lo, m), dtype=np.float64)
-            for i in range(d):  # sequential per-dim fold (bit contract)
-                acc += X[lo:hi_row, i, None] * X[None, :, i]
-            # same multiply-then-divide as the JVM expression
-            sims_blk = acc / (nrm[lo:hi_row, None] * nrm[None, :])
-            rows_g = np.arange(lo, hi_row)
-            keep = cols[None, :] > rows_g[:, None]  # strict upper triangle
-            if loose_min is not None:
-                keep &= sims_blk >= loose_min
-            r, c = np.nonzero(keep)
-            out_hi.append(ids[c])  # ascending ids -> col holds the higher id
-            out_sims.append(sims_blk[r, c])
-        hi = np.concatenate(out_hi) if out_hi else np.empty(0, np.int64)
-        sims = np.concatenate(out_sims) if out_sims else np.empty(0, np.float64)
+        hi, sims = _cluster_pairs(
+            np.asarray(tbl.column("vec_id"), dtype=np.int64),
+            _rows_f64(tbl.column("emb"), None, "cluster_pair_sims"),
+            np.asarray(tbl.column("nrm"), dtype=np.float64),
+            loose_min,
+        )
         cid = np.full(len(hi), tbl.column("cid")[0].as_py(), dtype=np.int64)
         return pa.table(
             {"cid": pa.array(cid), "vec_id": pa.array(hi), "sim_raw": pa.array(sims)}
@@ -350,6 +418,47 @@ def cluster_pair_sims(
 
     return assigned.groupBy("cid").applyInArrow(
         fn, "cid bigint, vec_id bigint, sim_raw double"
+    )
+
+
+def _pair_cosines(
+    A: np.ndarray,
+    B: np.ndarray,
+    na: np.ndarray,
+    nb: np.ndarray,
+    prefixes: tuple[int, ...],
+) -> list[np.ndarray]:
+    """Row-aligned pairs -> ``[sim, p{prefixes[0]}, ...]`` raw cosines: the
+    full dot over the carried norms ``na``/``nb``, then per prefix the
+    prefix dot over per-pair prefix norms, each a sequential fold."""
+    sims = [_row_dots(A, B) / (na * nb)]
+    for p in prefixes:
+        npa, npb = np.sqrt(_row_dots(A, A, p)), np.sqrt(_row_dots(B, B, p))
+        sims.append(_row_dots(A, B, p) / (npa * npb))
+    return sims
+
+
+def _pair_batch(
+    a: np.ndarray,
+    b: np.ndarray,
+    sims: list[np.ndarray],
+    prefixes: tuple[int, ...],
+    loose_min: float | None,
+) -> pa.RecordBatch:
+    """(vec_a, vec_b, sim_raw[, p{n}_raw ...]) batch, keeping the pairs
+    whose full-dim sim reaches ``loose_min``."""
+    if loose_min is not None:
+        keep = sims[0] >= loose_min
+        a, b, sims = a[keep], b[keep], [s[keep] for s in sims]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(v) for v in (a, b, *sims)],
+        names=["vec_a", "vec_b", "sim_raw"] + [f"p{p}_raw" for p in prefixes],
+    )
+
+
+def _pair_schema(prefixes: tuple[int, ...]) -> str:
+    return "vec_a bigint, vec_b bigint, sim_raw double" + "".join(
+        f", p{p}_raw double" for p in prefixes
     )
 
 
@@ -374,55 +483,25 @@ def pair_score_frame(
     sequential fold the sliced JVM expression performed.  Rounding /
     fixed-point quantization / distinct stay JVM-side.  ``loose_min``
     is the strictly-conservative raw pre-filter (see cluster_pair_sims)."""
-    pcols = [f"p{p}_raw" for p in prefixes]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ea = batch.column("emb_a")
-            d = len(ea[0])
-            A = _rows_f64(ea, d, "pair_score_frame")
-            B = _rows_f64(batch.column("emb_b"), d, "pair_score_frame")
-            n = A.shape[0]
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(d):  # sequential per-dim fold (bit contract)
-                acc += A[:, i] * B[:, i]
-            na = np.asarray(batch.column("nrm_a"), dtype=np.float64)
-            nb = np.asarray(batch.column("nrm_b"), dtype=np.float64)
-            sims = acc / (na * nb)
-            cols: dict[str, np.ndarray] = {}
-            for p, c in zip(prefixes, pcols):
-                accp = np.zeros(n, dtype=np.float64)
-                npa = np.zeros(n, dtype=np.float64)
-                npb = np.zeros(n, dtype=np.float64)
-                for i in range(p):  # prefix dot + per-pair prefix norms
-                    ai, bi = A[:, i], B[:, i]
-                    accp += ai * bi
-                    npa += ai * ai
-                    npb += bi * bi
-                cols[c] = accp / (np.sqrt(npa) * np.sqrt(npb))
+        for batch in _nonempty(batches):
+            A = _rows_f64(batch.column("emb_a"), None, "pair_score_frame")
+            B = _rows_f64(batch.column("emb_b"), A.shape[1], "pair_score_frame")
+            sims = _pair_cosines(
+                A,
+                B,
+                np.asarray(batch.column("nrm_a"), dtype=np.float64),
+                np.asarray(batch.column("nrm_b"), dtype=np.float64),
+                prefixes,
+            )
             a = np.asarray(batch.column("vec_a"), dtype=np.int64)
             b = np.asarray(batch.column("vec_b"), dtype=np.int64)
-            if loose_min is not None:
-                keep = sims >= loose_min
-                a, b, sims = a[keep], b[keep], sims[keep]
-                cols = {c: v[keep] for c, v in cols.items()}
-            out = {
-                "vec_a": pa.array(a),
-                "vec_b": pa.array(b),
-                "sim_raw": pa.array(sims),
-            }
-            for c in pcols:
-                out[c] = pa.array(cols[c])
-            yield pa.RecordBatch.from_pydict(out)
+            yield _pair_batch(a, b, sims, prefixes, loose_min)
 
-    schema = "vec_a bigint, vec_b bigint, sim_raw double" + "".join(
-        f", {c} double" for c in pcols
-    )
     return pairs.select(
         "vec_a", "vec_b", "emb_a", "nrm_a", "emb_b", "nrm_b"
-    ).mapInArrow(fn, schema)
+    ).mapInArrow(fn, _pair_schema(prefixes))
 
 
 def collect_corpus(base: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -434,14 +513,9 @@ def collect_corpus(base: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]
     tbl = base.select("vec_id", "emb", "nrm").toArrow()
     ids = np.asarray(tbl.column("vec_id"), dtype=np.int64)
     order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    emb_col = tbl.column("emb")
-    if isinstance(emb_col, pa.ChunkedArray):
-        emb_col = emb_col.combine_chunks()
-    d = len(emb_col[0])
-    M = _rows_f64(emb_col, d, "collect_corpus")[order]
+    M = _rows_f64(tbl.column("emb"), None, "collect_corpus")[order]
     nrm = np.asarray(tbl.column("nrm"), dtype=np.float64)[order]
-    return ids, M, nrm
+    return ids[order], M, nrm
 
 
 def _gather_idx(g_ids: np.ndarray, wanted: np.ndarray, what: str) -> np.ndarray:
@@ -472,117 +546,63 @@ def gather_pair_scores(
     fancy-indexed from one per-worker copy of the corpus.  At sf1 the
     payload-carrying shape ships ~150 GB of pair payload for 139M
     candidates; this ships ~2 GB of ids.  The caller MUST gate on corpus
-    size (similarity.EMB_GATHER_MAX_BYTES) — above the gate the bucket-
+    size (similarity.gather_max_bytes) — above the gate the bucket-
     local payload shape (:func:`pair_score_frame` over
     ``_lsh_scored_pairs``) remains the scale-safe plan, because a corpus
     that does not fit one worker cannot be broadcast.
 
-    Bit identity: identical sequential folds / multiply-then-divide as
-    :func:`pair_score_frame` over the identical doubles (the corpus
-    matrix is collected from the same cached kernel frame); both arms are
-    pinned equal by tests, so the size gate can never change results.
+    Bit identity: both arms score through the one :func:`_pair_cosines`
+    core over the identical doubles (the corpus matrix is collected from
+    the same cached kernel frame); both arms are pinned equal by tests,
+    so the size gate can never change results.
 
     ``bc`` is a broadcast of :func:`collect_corpus`'s triple
     (similarity._gather_corpus_bc memoizes one per corpus, so several
     gather consumers never re-collect it)."""
-    pcols = [f"p{p}_raw" for p in prefixes]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         g_ids, g_M, g_nrm = bc.value  # one copy per worker process
-        d = g_M.shape[1]
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
+        for batch in _nonempty(batches):
             a = np.asarray(batch.column("vec_a"), dtype=np.int64)
             b = np.asarray(batch.column("vec_b"), dtype=np.int64)
             ia = _gather_idx(g_ids, a, "gather_pair_scores")
             ib = _gather_idx(g_ids, b, "gather_pair_scores")
-            A, B = g_M[ia], g_M[ib]
-            n = A.shape[0]
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(d):  # sequential per-dim fold (bit contract)
-                acc += A[:, i] * B[:, i]
-            sims = acc / (g_nrm[ia] * g_nrm[ib])
-            cols: dict[str, np.ndarray] = {}
-            for p, c in zip(prefixes, pcols):
-                accp = np.zeros(n, dtype=np.float64)
-                npa = np.zeros(n, dtype=np.float64)
-                npb = np.zeros(n, dtype=np.float64)
-                for i in range(p):
-                    ai, bi = A[:, i], B[:, i]
-                    accp += ai * bi
-                    npa += ai * ai
-                    npb += bi * bi
-                cols[c] = accp / (np.sqrt(npa) * np.sqrt(npb))
-            if loose_min is not None:
-                keep = sims >= loose_min
-                a, b, sims = a[keep], b[keep], sims[keep]
-                cols = {c: v[keep] for c, v in cols.items()}
-            out = {
-                "vec_a": pa.array(a),
-                "vec_b": pa.array(b),
-                "sim_raw": pa.array(sims),
-            }
-            for c in pcols:
-                out[c] = pa.array(cols[c])
-            yield pa.RecordBatch.from_pydict(out)
+            sims = _pair_cosines(g_M[ia], g_M[ib], g_nrm[ia], g_nrm[ib], prefixes)
+            yield _pair_batch(a, b, sims, prefixes, loose_min)
 
-    schema = "vec_a bigint, vec_b bigint, sim_raw double" + "".join(
-        f", {c} double" for c in pcols
-    )
-    return candidates.select("vec_a", "vec_b").mapInArrow(fn, schema)
+    return candidates.select("vec_a", "vec_b").mapInArrow(fn, _pair_schema(prefixes))
 
 
-def _fold_dot_panel(P: np.ndarray, MTc: np.ndarray) -> np.ndarray:
-    """(b, d) x (d, c) -> (b, c) dot panel via the explicit sequential
-    per-dim fold — the module bit contract, spelled out."""
-    acc = np.zeros((P.shape[0], MTc.shape[1]), dtype=np.float64)
-    for i in range(P.shape[1]):  # sequential per-dim fold (bit contract)
-        acc += P[:, i, None] * MTc[i][None, :]
-    return acc
+_PROBE_CHUNK_COLS = 16384  # (block x chunk) f64 acc panel, cache-resident
 
 
-_EINSUM_SEQ_OK: bool | None = None
-
-
-def _seq_dot_panel(P: np.ndarray, MTc: np.ndarray) -> np.ndarray:
-    """The fold panel, computed by ``einsum('pd,dn->pn')`` when safe.
-
-    With the summed dimension as the OUTER (non-contiguous) axis of the
-    second operand, NumPy's unoptimized einsum path accumulates over d
-    sequentially per output element — the exact fold order, measured
-    bit-identical on 3.2e10 random doubles and 4.1x faster than the
-    per-dim loop at the sf1 shape (fused multiply-add instead of three
-    2 MB array touches per dim).  That is an implementation detail of
-    this NumPy build, NOT an API guarantee (the 'nd,nd->n' form, where
-    the reduction IS the contiguous inner axis, takes an unrolled
-    multi-accumulator path and is NOT bit-identical) — so the first
-    call in each worker process PROVES the property on a small random
-    panel and the kernel falls back to the explicit fold if the build
-    ever changes.  The Spark-level pins in tests/test_arrowkernels.py
-    stay the end-to-end guarantee either way."""
-    global _EINSUM_SEQ_OK
-    if _EINSUM_SEQ_OK is None:
-        rng = np.random.default_rng(0xC0FFEE)
-        tp = rng.standard_normal((3, 64))
-        tm = np.ascontiguousarray(rng.standard_normal((64, 257)))
-        want = _fold_dot_panel(tp, tm[:, 3:250])
-        got = np.einsum("pd,dn->pn", tp, tm[:, 3:250], optimize=False)
-        _EINSUM_SEQ_OK = bool(
-            (got.view(np.int64) == want.view(np.int64)).all()
-        )
-    if (
-        _EINSUM_SEQ_OK
-        # the property is proven for THIS operand layout only: output
-        # axis contiguous inner, summed d axis outer — any other stride
-        # pattern (e.g. an F-order operand, where d is the inner axis
-        # and einsum may take the unrolled path) uses the explicit fold
-        and MTc.strides[1] == MTc.itemsize
-        and MTc.strides[0] >= MTc.strides[1]
-        and P.flags.c_contiguous
-    ):
-        return np.einsum("pd,dn->pn", P, MTc, optimize=False)
-    return _fold_dot_panel(P, MTc)
+def _probe_topk(
+    ip: np.ndarray, M: np.ndarray, nrm: np.ndarray, k: int, quantum: float
+) -> Iterator[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Probe rows ``ip`` of the corpus ``M`` -> per probe block, the
+    (probe position in ``ip``, corpus row, raw sim) triples that can reach
+    the quantized top-``k``; see :func:`probe_topk_candidates`.  Each
+    block's (block, n) panel stays under ~_PAIR_BLOCK_BYTES at any n."""
+    n = M.shape[0]
+    MT = _transposed(M)
+    block = max(1, _PAIR_BLOCK_BYTES // (8 * max(n, 1)))
+    for lo in range(0, len(ip), block):
+        rows = ip[lo : lo + block]
+        P = M[rows]
+        sims = np.empty((len(rows), n), dtype=np.float64)
+        for c0 in range(0, n, _PROBE_CHUNK_COLS):
+            c1 = min(c0 + _PROBE_CHUNK_COLS, n)
+            sims[:, c0:c1] = _seq_dot_panel(P, MT[:, c0:c1])
+        # same multiply-then-divide as the JVM expression
+        sims /= nrm[rows, None] * nrm[None, :]
+        sims[np.arange(len(rows)), rows] = -np.inf  # probe_id != nb_id
+        if n - 1 > k:
+            kth = np.partition(sims, n - k, axis=1)[:, n - k]
+            keep = sims >= (kth[:, None] - 2.0 * quantum)
+        else:
+            keep = np.isfinite(sims)
+        r, c = np.nonzero(keep)
+        yield lo + r, c, sims[r, c]
 
 
 def probe_topk_candidates(
@@ -614,53 +634,28 @@ def probe_topk_candidates(
     byte-identical to the full cross-product plan's.
 
     Probe rows are blocked so the (block, n) score panel stays under
-    ~_PAIR_BLOCK_BYTES, and the d-loop runs over CORPUS CHUNKS of a
-    transposed copy of the matrix: the naive ``acc += P[:,i,None] *
-    M[None,:,i]`` walks a stride-512B column of the row-major corpus 64
-    times per slab (measured: one sf1 partition ~10+ min, pure memory
-    stalls), while a (d, n) layout makes every per-dim read contiguous
-    and a ~2 MB acc chunk stays cache-resident across the 64 dims —
-    same per-element accumulation ORDER, so the bit contract is
-    untouched.  Each chunk is evaluated by :func:`_seq_dot_panel`
-    (fused ``einsum`` when this NumPy build's sequential path is
-    verified, explicit per-dim fold otherwise — measured 4.1x on the
-    sf1 shape, identical bits).  Self-pairs (probe scoring itself) are
-    excluded exactly like the plan's ``probe_id != nb_id`` predicate."""
-    chunk_cols = 16384  # (block x chunk) f64 acc panel ~2 MB, cache-resident
+    ~_PAIR_BLOCK_BYTES (down to one probe row per block), and the d-loop
+    runs over CORPUS CHUNKS of a transposed copy of the matrix: the naive
+    ``acc += P[:,i,None] * M[None,:,i]`` walks a stride-512B column of
+    the row-major corpus 64 times per slab (measured: one sf1 partition
+    ~10+ min, pure memory stalls), while a (d, n) layout makes every
+    per-dim read contiguous and a ~2 MB acc chunk stays cache-resident
+    across the 64 dims — same per-element accumulation ORDER, so the bit
+    contract is untouched.  Each chunk is evaluated by
+    :func:`_seq_dot_panel` (fused ``einsum`` when this NumPy build's
+    sequential path is verified, explicit per-dim fold otherwise —
+    measured 4.1x on the sf1 shape, identical bits).  Self-pairs (probe
+    scoring itself) are excluded exactly like the plan's
+    ``probe_id != nb_id`` predicate."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         g_ids, g_M, g_nrm = bc.value  # one copy per worker process
-        n, d = g_M.shape
-        MT = _transposed(g_M)
-        block = max(16, _PAIR_BLOCK_BYTES // (8 * max(n, 1)))
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
+        for batch in _nonempty(batches):
             p = np.asarray(batch.column(0), dtype=np.int64)
             ip = _gather_idx(g_ids, p, "probe_topk_candidates")
-            for lo in range(0, len(p), block):
-                hi = min(lo + block, len(p))
-                P = g_M[ip[lo:hi]]
-                b = hi - lo
-                sims = np.empty((b, n), dtype=np.float64)
-                for c0 in range(0, n, chunk_cols):
-                    c1 = min(c0 + chunk_cols, n)
-                    sims[:, c0:c1] = _seq_dot_panel(P, MT[:, c0:c1])
-                # same multiply-then-divide as the JVM expression
-                sims /= g_nrm[ip[lo:hi], None] * g_nrm[None, :]
-                sims[np.arange(b), ip[lo:hi]] = -np.inf  # probe_id != nb_id
-                if n - 1 > k:
-                    kth = np.partition(sims, n - k, axis=1)[:, n - k]
-                    keep = sims >= (kth[:, None] - 2.0 * quantum)
-                else:
-                    keep = np.isfinite(sims)
-                r, c = np.nonzero(keep)
+            for r, c, sims in _probe_topk(ip, g_M, g_nrm, k, quantum):
                 yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(p[lo:hi][r]),
-                        pa.array(g_ids[c]),
-                        pa.array(sims[r, c]),
-                    ],
+                    [pa.array(p[r]), pa.array(g_ids[c]), pa.array(sims)],
                     names=["probe_id", "nb_id", "sim_raw"],
                 )
 

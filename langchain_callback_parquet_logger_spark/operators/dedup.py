@@ -688,27 +688,12 @@ def q_lsh_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     of two pair lists (both linear in corpus + true near-dups) into a
     single-row aggregate — the same fusion shape as q_ensemble_dedup.
     """
-    from ..plans.session import run_concurrently
-
-    # The two legs are INDEPENDENT pipelines (posting-list self-join vs
-    # signature banding) fused only at the final join: materialize both
-    # from a small driver pool (guide §2.6 — the same run_concurrently
-    # overlap the index lifecycles use) so the second leg's stages
-    # back-fill the first leg's straggler tail. Pair lists are true
-    # near-dup-sized (linear in corpus), the same cache class the
-    # threshold sweep already persists. Measured at sf0.1: 3.03 s ->
-    # 2.73 s median of 3.
-    exact = cache_tracked(
-        q_ngram_jaccard(spark, sf_dir).select(
-            "doc_a", "doc_b", F.lit(1).alias("e")
-        )
+    exact = q_ngram_jaccard(spark, sf_dir).select(
+        "doc_a", "doc_b", F.lit(1).alias("e")
     )
-    lsh = cache_tracked(
-        q_minhash_dedup(spark, sf_dir).select(
-            "doc_a", "doc_b", F.lit(1).alias("l")
-        )
+    lsh = q_minhash_dedup(spark, sf_dir).select(
+        "doc_a", "doc_b", F.lit(1).alias("l")
     )
-    run_concurrently(lambda: exact.count(), lambda: lsh.count())
     fused = exact.join(lsh, ["doc_a", "doc_b"], "full_outer")
     agg = fused.agg(
         F.count("e").alias("n_exact"),

@@ -230,7 +230,7 @@ def _oracle_dup_centrality() -> str:
     steps = []
     for i in range(1, PAGERANK_ITERS + 1):
         steps.append(
-            f"""r{i} AS (
+            f"""r{i} AS MATERIALIZED (
   SELECT e.v AS u,
          CAST({_TELEPORT} + ({_DAMP_NUM} * SUM(r{i - 1}.r // deg.deg))
               // {_DAMP_DEN} AS BIGINT) AS r
@@ -241,16 +241,19 @@ def _oracle_dup_centrality() -> str:
 )"""
         )
     chain = ",\n".join(steps)
+    # MATERIALIZED for the same reason as the LPA oracle below: DuckDB
+    # inlines plain CTEs, so every reference to edges, deg and r{i}
+    # would re-run the MinHash pair pipeline.
     return f"""
-WITH pairs AS (
+WITH pairs AS MATERIALIZED (
   {_oracle_minhash()}
 ),
-edges AS (
+edges AS MATERIALIZED (
   SELECT doc_a AS u, doc_b AS v FROM pairs
   UNION
   SELECT doc_b AS u, doc_a AS v FROM pairs
 ),
-deg AS (SELECT u, COUNT(*) AS deg FROM edges GROUP BY u),
+deg AS MATERIALIZED (SELECT u, COUNT(*) AS deg FROM edges GROUP BY u),
 r0 AS (SELECT u, CAST({PAGERANK_SCALE} AS BIGINT) AS r FROM deg),
 {chain}
 SELECT d.u AS doc_id, d.deg AS degree,

@@ -24,6 +24,7 @@ Tie-breaks are explicit (`sim DESC, vec_id ASC`) so top-k is deterministic.
 
 from __future__ import annotations
 
+import re
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
@@ -539,17 +540,14 @@ EMB_BUCKET_CAP = 1024
 # driver collects the matrix once and every Python worker pins one copy,
 # so a deployment sized for bigger workers raises the gate automatically
 # — floored at 64 MB and capped at 2 GiB (past that a broadcast stops
-# being the right shape regardless of memory). The env override wins
-# unconditionally, as before.
+# being the right shape regardless of memory).
 EMB_GATHER_FALLBACK_BYTES = 512 * 1024 * 1024
 
 
 def _parse_mem_bytes(s: str) -> int | None:
     """'16g' / '512m' / '1024b' / '16384' -> bytes, read as Spark reads
     ``spark.driver.memory``: a number without a unit is MiB."""
-    m = __import__("re").fullmatch(
-        r"\s*(\d+)\s*(?:([kmgtp])b?|(b))?\s*", str(s), __import__("re").IGNORECASE
-    )
+    m = re.fullmatch(r"\s*(\d+)\s*(?:([kmgtp])b?|(b))?\s*", str(s), re.IGNORECASE)
     if not m:
         return None
     unit = (m.group(2) or m.group(3) or "m").lower()
@@ -559,11 +557,6 @@ def _parse_mem_bytes(s: str) -> int | None:
 
 def gather_max_bytes(spark: SparkSession) -> int:
     """The gather-arm corpus budget for this session (rationale above)."""
-    import os as _os
-
-    env = _os.environ.get("SPARK_GRAFT_EMB_GATHER_MAX_BYTES")
-    if env is not None:
-        return int(env)
     try:
         driver_mem = _parse_mem_bytes(spark.conf.get("spark.driver.memory"))
     except Exception:
@@ -870,7 +863,7 @@ def _scored_pair_frame(
     loose_min: float | None = None,
 ) -> DataFrame:
     """Banded candidates -> (vec_a, vec_b, sim_raw[, p{n}_raw...]) via the
-    size-adaptive re-rank strategy (rationale at EMB_GATHER_MAX_BYTES):
+    size-adaptive re-rank strategy (rationale at EMB_GATHER_FALLBACK_BYTES):
 
     - corpus fits the gather budget -> skinny DISTINCT id-pair join
       (column-pruned band frame, 16 B/candidate) scored by gathering from

@@ -206,7 +206,7 @@ def test_pair_score_frame_bit_identical_to_fold_projection(spark, sf_dir):
 def test_gather_arm_bit_identical_to_payload_arm(spark, sf_dir):
     """The two _scored_pair_frame strategies (gather-from-broadcast vs
     bucket-local payload kernel) must yield the identical unique pair set
-    with bit-identical raw scores — the EMB_GATHER_MAX_BYTES gate is then
+    with bit-identical raw scores — the gather_max_bytes gate is then
     a pure strategy decision that can never change results."""
     from langchain_callback_parquet_logger_spark.operators.arrowkernels import (
         gather_pair_scores,
@@ -365,15 +365,12 @@ def test_probe_topk_kernel_matches_fold_cross_join(spark, sf_dir):
     release_caches()
 
 
-def test_gather_max_bytes_derivation(spark, monkeypatch):
+def test_gather_max_bytes_derivation(spark):
     """The gather budget derives from spark.driver.memory (//8, floored
-    at 64 MB, capped at 2 GiB); the env override wins unconditionally."""
-    monkeypatch.delenv("SPARK_GRAFT_EMB_GATHER_MAX_BYTES", raising=False)
+    at 64 MB, capped at 2 GiB)."""
     driver_mem = S._parse_mem_bytes(spark.conf.get("spark.driver.memory"))
     want = min(max(driver_mem // 8, 64 * 1024 * 1024), 2 * 1024**3)
     assert S.gather_max_bytes(spark) == want
-    monkeypatch.setenv("SPARK_GRAFT_EMB_GATHER_MAX_BYTES", "12345")
-    assert S.gather_max_bytes(spark) == 12345
     # memory-string grammar
     assert S._parse_mem_bytes("16g") == 16 * 1024**3
     assert S._parse_mem_bytes("512m") == 512 * 1024**2
@@ -445,27 +442,6 @@ def test_kmeans_fit_centroids_unchanged_by_materialization(spark, sf_dir):
     assert set(want) == set(got) and want
     for cid in want:
         assert [_bits(x) for x in want[cid]] == [_bits(x) for x in got[cid]], cid
-
-
-def test_seq_dot_panel_bit_identical_to_fold():
-    """_seq_dot_panel (einsum fast path when the build's sequential-order
-    property holds, explicit fold otherwise) must be bit-identical to the
-    per-dim fold across block shapes, chunk tails and strided views."""
-    import numpy as np
-
-    from langchain_callback_parquet_logger_spark.operators.arrowkernels import (
-        _fold_dot_panel,
-        _seq_dot_panel,
-    )
-
-    rng = np.random.default_rng(42)
-    MT = np.ascontiguousarray(rng.standard_normal((64, 5000)))
-    for b in (1, 3, 16, 17):
-        P = rng.standard_normal((b, 64))
-        for sl in (slice(0, 5000), slice(137, 1137), slice(4990, 5000)):
-            want = _fold_dot_panel(P, MT[:, sl])
-            got = _seq_dot_panel(P, MT[:, sl])
-            assert (got.view(np.int64) == want.view(np.int64)).all(), (b, sl)
 
 
 def test_transpose_cache_never_serves_a_recycled_id():

@@ -460,13 +460,10 @@ def compact_dedup_index(
             return plan
         return 0
 
-    # The two tables are independent rewrite jobs — overlap them
-    # (guide §2.6), exactly like the build/append writes above.
-    out = run_concurrently(
-        lambda: one(bands_dir, ("band_id", "band_key")),
-        lambda: one(sh_dir, ("doc_id",)),
-    )
-    return out[0], out[1]
+    # One after the other: each compact_logs call saves, sets and restores
+    # the session-wide parquet timestamp conf, so two at once can restore
+    # each other's setting and leave the session at TIMESTAMP_MICROS.
+    return one(bands_dir, ("band_id", "band_key")), one(sh_dir, ("doc_id",))
 
 
 def q_index_compaction(

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -92,14 +93,71 @@ def pin_oracle_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+# Session confs that decide how parquet footers map to a Spark schema: the
+# eight that ParquetToSparkSchemaConverter(SQLConf) reads, plus the two
+# that decide which footers and partition directory names feed it.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+# path -> (key, schema). One entry per path, replaced when its key
+# changes. It holds no data and no JVM reference, so it is not tied to a
+# session and outlives release_caches().
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The Spark schema of the parquet file or directory at ``path``.
+
+    ``spark.read.parquet(path)`` answers every call with a one-task
+    schema-inference job. Here that job runs once per key: the
+    ``(path, length, modification time)`` of every file under ``path``
+    (a Hadoop ``listStatus`` walk, so any scheme) and the values of
+    ``_SCHEMA_CONFS``. Spark itself uses length and modification time to
+    notice a changed file. The listing is taken before the inference, so
+    a file rewritten in between gives a key that misses next time.
+    ``listFiles`` would walk the tree in one call, but on the local file
+    system each status it returns loads the file's owner and permissions
+    (5.9 ms a file against 1.1 ms, 4-core host)."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    statuses, todo = [], [hpath]
+    while todo:
+        for st in fs.listStatus(todo.pop()):
+            if st.isDirectory():
+                todo.append(st.getPath())
+            else:
+                statuses.append(
+                    (st.getPath().toString(), st.getLen(), st.getModificationTime())
+                )
+    key = (tuple(sorted(statuses)), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != key:
+        hit = _SCHEMAS[path] = (key, spark.read.parquet(path).schema)
+    return hit[1]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan with partition discovery; schemas come from the files
-    themselves (parquet is self-describing — no inference step involved).
+    """Parquet scan with partition discovery, read with an explicit schema.
+
+    The schema comes from the files themselves (parquet is
+    self-describing), inferred by :func:`_parquet_schema` on the first
+    load of a table in the process and reused until the table's files or
+    the schema confs change, so a repeated load starts no Spark job.
 
     ``events.ts`` is normalized to TIMESTAMP via :func:`normalize_ts`
     (the generator's physical encoding has varied across rounds)."""
     pin_oracle_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_ts(df)
     return df

@@ -240,13 +240,7 @@ FROM events GROUP BY event_type
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream over the events table (shared by the q_stream_* set).
-    Both layouts work: an events.parquet/ DIRECTORY of part files (what
-    any distributed writer produces — streamed directly), or a single
-    events.parquet FILE (driver testdata — streaming sources require a
-    directory base, so the parent is streamed with a name glob)."""
-    import os
-
+    """File-stream over the events table (shared by the q_stream_* set)."""
     from ..plans.session import normalize_ts, pin_oracle_confs
 
     # UTC + nanosAsLong, same as load_table: a q_stream_* query may be the
@@ -255,18 +249,29 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in the session zone — a non-UTC zone would shift every event time
     # versus the oracle.
     pin_oracle_confs(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    # Streaming sources need a user-supplied schema; parquet is
-    # self-describing, so take it from a batch footer read — this keeps the
-    # stream source in lockstep with whatever physical ts encoding the
-    # generator used (nanos-as-long vs TIMESTAMP_NTZ; see normalize_ts).
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
+    return normalize_ts(_table_stream(spark, sf_dir, "events"))
+
+
+def _table_stream(spark: SparkSession, sf_dir: str, name: str, **options) -> DataFrame:
+    """File-stream over the table ``name``. Both layouts work: a
+    ``<name>.parquet/`` DIRECTORY of part files (what any distributed
+    writer produces — streamed directly), or a single ``<name>.parquet``
+    FILE (driver testdata — streaming sources require a directory base,
+    so the parent is streamed with a name glob).
+
+    Streaming sources need a user-supplied schema. This is the one
+    load_table reads with (inferred from the footers once per file
+    version), so the stream follows whatever physical ts encoding the
+    generator used (nanos-as-long vs TIMESTAMP_NTZ; see normalize_ts)."""
+    import os
+
+    from ..plans.session import _parquet_schema, table_path
+
+    path = table_path(sf_dir, name)
+    reader = spark.readStream.schema(_parquet_schema(spark, path)).options(**options)
     if os.path.isdir(path):
-        src = reader.parquet(path)
-    else:
-        src = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-    return normalize_ts(src)
+        return reader.parquet(path)
+    return reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
 
 
 def drain(spark: SparkSession, frame: DataFrame, name: str, mode: str) -> str:
@@ -446,13 +451,7 @@ def q_stream_incremental_dedup(
         )
     )
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if os.path.isdir(path):
-        src = reader.parquet(path)
-    else:
-        src = reader.option("pathGlobFilter", "documents.parquet").parquet(sf_dir)
+    src = _table_stream(spark, sf_dir, "documents", maxFilesPerTrigger="1")
 
     # Per-batch verdicts go to a parquet sink, one `epoch=<id>` directory
     # per micro-batch: overwrite of the SAME directory on foreachBatch

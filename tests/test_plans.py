@@ -686,3 +686,129 @@ def test_spread_sees_through_single_row_group_file(spark, tmp_path):
     if df2.rdd.getNumPartitions() >= target:
         # enough real splits: spread must NOT add an exchange
         assert spread(df2, min_bytes=1) is df2
+
+
+# ---------------------------------------------------------------------------
+# Schema memo: a table's schema is inferred once per file version, so a
+# repeated load starts no Spark job.
+# ---------------------------------------------------------------------------
+
+
+def _next_job_id(spark) -> int:
+    """Jobs are numbered in sequence, so the difference of two readings is
+    the number of jobs started in between (as perfbench/tracing.py counts)."""
+    counter = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    return counter if isinstance(counter, int) else counter.get()
+
+
+def test_repeated_table_load_starts_no_job(spark, tmp_path):
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from langchain_callback_parquet_logger_spark.plans.session import load_table
+    from langchain_callback_parquet_logger_spark.streaming.ingest import (
+        _event_stream,
+        _table_stream,
+    )
+
+    d = str(tmp_path)
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), f"{d}/t.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array([dt.datetime(2024, 1, 1)] * 2, pa.timestamp("us")),
+                "user_id": pa.array([7, 8], pa.int64()),
+                "event_type": ["click", "view"],
+                "value": [1.0, 2.0],
+                "props": ["{}", "{}"],
+            }
+        ),
+        f"{d}/events.parquet",
+    )
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1], pa.int64()), "text": ["hi"]}),
+        f"{d}/documents.parquet",
+    )
+    loads = [
+        lambda: load_table(spark, d, "t"),
+        lambda: _event_stream(spark, d),
+        lambda: _table_stream(spark, d, "documents", maxFilesPerTrigger="1"),
+    ]
+    for load in loads:
+        j0 = _next_job_id(spark)
+        first = load()
+        j1 = _next_job_id(spark)
+        again = load()
+        assert j1 > j0  # the first load infers: the counter sees that job
+        assert _next_job_id(spark) == j1
+        assert again.schema == first.schema
+    assert sorted(load_table(spark, d, "t").collect()) == [(1, "x"), (2, "y")]
+
+
+def test_rewritten_table_is_read_with_its_new_schema(spark, tmp_path):
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from langchain_callback_parquet_logger_spark.plans.session import load_table
+
+    d = str(tmp_path)
+    pq.write_table(pa.table({"a": [1, 2]}), f"{d}/one.parquet")
+    assert load_table(spark, d, "one").columns == ["a"]
+    pq.write_table(pa.table({"a": ["x"], "c": [0.5]}), f"{d}/one.parquet")
+    df = load_table(spark, d, "one")
+    assert dict(df.dtypes) == {"a": "string", "c": "double"}
+    assert df.collect() == [("x", 0.5)]
+
+    # A Spark-written directory table, its single part file rewritten in
+    # place under the same name. The .crc side files go first: they would
+    # no longer match the rewritten bytes.
+    spark.range(3).coalesce(1).write.parquet(f"{d}/many.parquet")
+    for crc in glob.glob(f"{d}/many.parquet/.*.crc"):
+        os.remove(crc)
+    assert load_table(spark, d, "many").columns == ["id"]
+    (part,) = glob.glob(f"{d}/many.parquet/part-*.parquet")
+    pq.write_table(pa.table({"id": ["a", "b"], "k": [1, 2]}), part)
+    df = load_table(spark, d, "many")
+    assert dict(df.dtypes) == {"id": "string", "k": "bigint"}
+    assert sorted(df.collect()) == [("a", 1), ("b", 2)]
+
+
+def test_schema_conf_change_reinfers(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from langchain_callback_parquet_logger_spark.plans.session import (
+        load_table,
+        scoped_conf,
+    )
+
+    d = str(tmp_path)
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), f"{d}/bin.parquet")
+    assert dict(load_table(spark, d, "bin").dtypes) == {"b": "binary"}
+    with scoped_conf(spark, {"spark.sql.parquet.binaryAsString": "true"}):
+        df = load_table(spark, d, "bin")
+        assert dict(df.dtypes) == {"b": "string"}
+        assert df.collect() == [("x",)]
+    assert dict(load_table(spark, d, "bin").dtypes) == {"b": "binary"}
+
+
+def test_index_compaction_leaves_timestamp_conf_unchanged(spark, sf_dir, tmp_path):
+    """compact_logs saves, sets and restores the session-wide parquet
+    timestamp type; the dedup index's two compactions must not interleave
+    those steps and leave the session at TIMESTAMP_MICROS."""
+    from langchain_callback_parquet_logger_spark.operators import indexes
+    from langchain_callback_parquet_logger_spark.plans.session import release_caches
+
+    ts_conf = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(ts_conf)
+    try:
+        indexes.q_index_compaction(spark, sf_dir, str(tmp_path / "idx")).collect()
+    finally:
+        release_caches()
+    assert spark.conf.get(ts_conf) == before

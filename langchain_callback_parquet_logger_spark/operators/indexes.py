@@ -24,6 +24,7 @@ to near-dup content identity.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -367,6 +368,14 @@ def _scratch_root() -> str:
     return _SCRATCH[0]
 
 
+def _parquet_files(root: str) -> list[str]:
+    return [
+        p
+        for p in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+        if os.path.isfile(p)
+    ]
+
+
 def q_index_incremental_dedup(
     spark: SparkSession, sf_dir: str, index_dir: str | None = None
 ) -> DataFrame:
@@ -411,18 +420,6 @@ def _oracle_index_incremental_dedup() -> str:
 INDEX_COMPACT_TARGET_ROWS = 2_000  # rows per index file after compaction
 
 
-def _parquet_census(root: str) -> int:
-    import glob as _glob
-
-    return len(
-        [
-            p
-            for p in _glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
-            if os.path.isfile(p)
-        ]
-    )
-
-
 def compact_dedup_index(
     spark: SparkSession,
     index_dir: str,
@@ -431,39 +428,20 @@ def compact_dedup_index(
     """Nightly maintenance for the stored dedup index: every append adds
     a small file set, so after N ingest batches the band/shingle scans
     pay N× the footer overhead — the same small-files story as the log
-    table, with the same fix.  The band table compacts range-clustered
-    on (band_id, band_key): post-compaction each file covers a tight
-    band-key range, so parquet min/max stats let the serving equi-join
-    skip files wholesale.  The shingle table clusters on doc_id.
-
-    PLANNER semantics (what Delta OPTIMIZE's file-size threshold does):
-    a table only rewrites when its current file census EXCEEDS the
-    planned post-compaction count ``ceil(rows / target)`` — an
-    already-compact table is a no-op, so the nightly job never pays a
-    rewrite that would *increase* (or merely reshuffle) the census.
-    Returns the planned file count per table, 0 where skipped."""
+    table, with the same fix: ``sinks.compact_logs`` on each flat table,
+    range-clustered on (band_id, band_key) so parquet min/max stats let
+    the serving equi-join skip band files, and on doc_id for shingles.
+    Its planner skips a table already at or under ``ceil(rows / target)``
+    files; a rewrite publishes before it deletes the appended files, so a
+    crash in between leaves duplicate index rows, never lost ones.
+    Returns the range partitions written per table, 0 where skipped."""
     from ..sinks import compact_logs
 
     bands_dir, sh_dir = _parts(index_dir)
-
-    def one(path: str, cluster: tuple[str, ...]) -> int:
-        total = spark.read.parquet(path).count()
-        plan = max(1, -(-total // target_rows_per_file))
-        if _parquet_census(path) > plan:
-            compact_logs(
-                spark,
-                path,
-                partition_col=None,
-                cluster_by=cluster,
-                target_rows_per_file=target_rows_per_file,
-            )
-            return plan
-        return 0
-
-    # One after the other: each compact_logs call saves, sets and restores
-    # the session-wide parquet timestamp conf, so two at once can restore
-    # each other's setting and leave the session at TIMESTAMP_MICROS.
-    return one(bands_dir, ("band_id", "band_key")), one(sh_dir, ("doc_id",))
+    return (
+        compact_logs(spark, bands_dir, None, ("band_id", "band_key"), target_rows_per_file),
+        compact_logs(spark, sh_dir, None, ("doc_id",), target_rows_per_file),
+    )
 
 
 def q_index_compaction(
@@ -496,9 +474,9 @@ def q_index_compaction(
     materialize_dedup_index(corpus.filter(half), index_dir)
     append_to_dedup_index(corpus.filter(~half).repartition(16), index_dir)
 
-    before = _parquet_census(index_dir)
+    before = len(_parquet_files(index_dir))
     nb, ns = compact_dedup_index(spark, index_dir)
-    after = _parquet_census(index_dir)
+    after = len(_parquet_files(index_dir))
     # Planner contract: the census never grows; it strictly shrinks for
     # every table the planner chose to rewrite (a skipped table was
     # already at-or-below its planned file count).

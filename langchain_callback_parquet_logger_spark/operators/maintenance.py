@@ -17,9 +17,11 @@ carried as a value column.
 Scale design:
 - retention is directory manipulation only (no data read, no shuffle) and
   runs FIRST so compaction never rewrites expiring bytes;
-- compaction is ONE range-shuffle on (date, timestamp) — the sampled range
-  partitioner has no driver bottleneck — and writes TIMESTAMP_MICROS so
-  parquet min/max stats keep file-skipping alive;
+- compaction rewrites only dates with more files than ``ceil(rows /
+  target)`` (here all: 24 fragments a date) in ONE shuffle, as
+  TIMESTAMP_MICROS so parquet min/max stats keep file-skipping alive; it
+  publishes before it deletes its inputs, so a crash leaves duplicates,
+  never a lost row;
 - the read-back rollup groups on the partition column, so at warehouse
   scale the verification scan is partition-pruned and the aggregate is
   one partial+final hash aggregate.
@@ -27,7 +29,6 @@ Scale design:
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..plans.session import load_table, run_concurrently
 from ..sinks import compact_logs, retain_partitions, write_log
-from .indexes import _scratch_root
+from .indexes import _parquet_files, _scratch_root
 
 # Module constants shared verbatim by the oracle — changing either is a
 # contract change (the graded values depend on both).
@@ -108,14 +109,6 @@ def q_log_compaction(
         )
         .withColumn("expected_files", F.lit(n_files).cast("bigint"))
     )
-
-
-def _parquet_files(root: str) -> list[str]:
-    return [
-        p
-        for p in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(p)
-    ]
 
 
 def _oracle_log_compaction() -> str:

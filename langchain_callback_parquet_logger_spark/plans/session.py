@@ -114,31 +114,44 @@ _SCHEMA_CONFS = (
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
-def _parquet_schema(spark: SparkSession, path: str) -> StructType:
-    """The Spark schema of the parquet file or directory at ``path``.
-
-    ``spark.read.parquet(path)`` answers every call with a one-task
-    schema-inference job. Here that job runs once per key: the
-    ``(path, length, modification time)`` of every file under ``path``
-    (a Hadoop ``listStatus`` walk, so any scheme) and the values of
-    ``_SCHEMA_CONFS``. Spark itself uses length and modification time to
-    notice a changed file. The listing is taken before the inference, so
-    a file rewritten in between gives a key that misses next time.
-    ``listFiles`` would walk the tree in one call, but on the local file
+def _data_files(spark: SparkSession, path: str) -> tuple:
+    """``(fs, files)``: the Hadoop file system of ``path`` and one sorted
+    ``(path, length, modification time, Hadoop Path)`` per data file below
+    it, from a ``listStatus`` walk (any scheme) that skips what Spark
+    skips: names led by ``.``, or by ``_`` without a ``=``. ``listFiles`` would walk the tree in one call, but on the local file
     system each status it returns loads the file's owner and permissions
     (5.9 ms a file against 1.1 ms, 4-core host)."""
     hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    statuses, todo = [], [hpath]
+    files, todo = [], [hpath]
     while todo:
         for st in fs.listStatus(todo.pop()):
+            p = st.getPath()
+            s = p.toString()
+            name = s[s.rfind("/") + 1:]
+            if name[:1] == "." or (name[:1] == "_" and "=" not in name):
+                continue
             if st.isDirectory():
-                todo.append(st.getPath())
+                todo.append(p)
             else:
-                statuses.append(
-                    (st.getPath().toString(), st.getLen(), st.getModificationTime())
-                )
-    key = (tuple(sorted(statuses)), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+                files.append((s, st.getLen(), st.getModificationTime(), p))
+    return fs, sorted(files)
+
+
+def _parquet_schema(spark: SparkSession, path: str, files: list | None = None) -> StructType:
+    """The Spark schema of the parquet file or directory at ``path``.
+
+    ``spark.read.parquet(path)`` answers every call with a one-task
+    schema-inference job. Here that job runs once per key: the
+    ``(path, length, modification time)`` of every data file under
+    ``path`` (``files`` when the caller has listed them already, else
+    :func:`_data_files`) and the values of ``_SCHEMA_CONFS``. Spark
+    itself uses length and modification time to notice a changed file.
+    The listing is taken before the inference, so a file rewritten in
+    between gives a key that misses next time."""
+    if files is None:
+        files = _data_files(spark, path)[1]
+    key = (tuple(f[:3] for f in files), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
     hit = _SCHEMAS.get(path)
     if hit is None or hit[0] != key:
         hit = _SCHEMAS[path] = (key, spark.read.parquet(path).schema)

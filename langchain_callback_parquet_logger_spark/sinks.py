@@ -37,6 +37,7 @@ partition-pruned at read time.
 from __future__ import annotations
 
 import functools
+import json
 import logging
 import os
 import threading
@@ -44,13 +45,15 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Callable, Literal, Sequence
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .plans.session import _data_files, _parquet_schema
 
 logger = logging.getLogger(__name__)
 
@@ -356,51 +359,68 @@ def compact_logs(
     cluster_by: Sequence[str] = ("timestamp",),
     target_rows_per_file: int = 1_000_000,
 ) -> int:
-    """Small-file compaction for a (possibly date-partitioned) log tree.
+    """Small-file compaction for a date-partitioned log tree, or a flat one
+    (``partition_col=None``), fragmented by one file per flush.
 
-    The reference flushes a parquet file per buffer fill
-    (`langchain_callback_parquet_logger/logger.py:418-470` — one
-    `logs_HHMMSS_us.parquet` every `buffer_size` events), so a busy day
-    accumulates thousands of tiny files; at warehouse scale that turns
-    every scan into a file-listing + footer-read storm. This rewrites the
-    tree into ~``total_rows / target_rows_per_file`` files, range-clustered
-    on ``(partition_col, *cluster_by)`` so each output file covers a tight
-    min/max range of the cluster key — parquet row-group stats then let
-    later time-window scans skip whole files.
+    One Hadoop listing finds the data files and one Spark job counts their
+    rows. Only a partition whose files outnumber ``ceil(rows /
+    target_rows_per_file)`` is rewritten, so a nightly run costs in
+    proportion to the partitions that changed. One job reads exactly the
+    listed files of those partitions and writes them to
+    ``<path>/_compacting``, which readers skip: each partition value in
+    one range partition, sorted on ``cluster_by`` and cut every
+    ``target_rows_per_file`` rows, so it gets exactly its planned file
+    count (a flat tree is range-partitioned on ``cluster_by``). The new
+    files move into their partition directories before the listed inputs
+    are deleted: a file flushed meanwhile is never touched, readers may
+    briefly see rewritten rows twice, and a crash in between leaves
+    duplicates, never a lost row. Run one compaction per tree at a time.
 
-    Scale notes: the rewrite is one range-shuffle (sampled range
-    partitioner, no driver bottleneck), and timestamps are written as
-    TIMESTAMP_MICROS rather than Spark's INT96 default — INT96 columns
-    carry NO parquet min/max statistics, which silently disables the very
-    file-skipping compaction exists to enable. Returns the number of
-    output files.
-    """
-    df = spark.read.parquet(path)
-    total = df.count()
-    n_files = max(1, -(-total // target_rows_per_file))
-    range_keys = ([partition_col] if partition_col else []) + list(cluster_by)
-    compacted = df.repartitionByRange(n_files, *[F.col(c) for c in range_keys])
-    compacted = compacted.sortWithinPartitions(*range_keys)
-
-    # Spark refuses to overwrite a path that feeds the same plan, and a
-    # half-written in-place overwrite would corrupt the dataset anyway:
-    # two-phase instead — write the compacted tree beside the original,
-    # then swap directories. (At warehouse scale the swap step is a table
-    # format's atomic commit — Delta OPTIMIZE / Iceberg rewrite_data_files;
-    # plain-parquet swap matches the reference's plain-parquet world.)
-    tmp = path.rstrip("/") + ".compact-tmp"
-    writer = compacted.write.mode("overwrite").option("compression", "snappy")
+    The job runs in a clone of the caller's session that writes INT64
+    TIMESTAMP_MICROS, as the logger's Arrow flush does (INT96 carries no
+    min/max statistics). Returns the range partitions written,
+    ``ceil(rewritten rows / target_rows_per_file)``, or 0 if none."""
+    fs, files = _data_files(spark, path)
+    # A clone keeps the caller's runtime confs (nanosAsLong, the session
+    # timezone), which a newSession() would drop.
+    session = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    session.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    df = session.read.schema(_parquet_schema(session, path, files)).parquet(path)
+    file_path = F.col("_metadata.file_path")  # URL-encoded
+    counts = {unquote(f): (f, n) for f, n in df.groupBy(file_path).count().collect()}
+    parts: dict[str, list] = {}
+    for name, _, _, hpath in files:
+        parts.setdefault(name.rsplit("/", 1)[0], []).append((*counts.get(name, (None, 0)), hpath))
+    inputs = [  # the files of each partition with rows in too many files
+        f for part in parts.values()
+        if 0 < (rows := sum(n for _, n, _ in part)) and len(part) > -(-rows // target_rows_per_file)
+        for f in part
+    ]
+    if not inputs:
+        return 0
+    n_files = -(-sum(n for _, n, _ in inputs) // target_rows_per_file)
+    partition_by = [partition_col] if partition_col else []
+    # One array literal: isin() makes a py4j call per path.
+    listed = F.from_json(F.lit(json.dumps([f for f, n, _ in inputs if n])), "array<string>")
+    compacted = (
+        df.where(F.array_contains(listed, file_path))
+        .repartitionByRange(n_files, *(partition_by or cluster_by))
+        .sortWithinPartitions(*partition_by, *cluster_by)
+    )
+    staging = f"{path.rstrip('/')}/_compacting"
+    writer = compacted.write.mode("overwrite").option("compression", _COMPRESSION)
     if partition_col:
-        writer = writer.partitionBy(partition_col)
-    ts_conf = "spark.sql.parquet.outputTimestampType"
-    prev_ts = spark.conf.get(ts_conf, "INT96")
-    spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-    try:
-        writer.parquet(tmp)
-    finally:
-        spark.conf.set(ts_conf, prev_ts)
+        writer = writer.partitionBy(partition_col).option("maxRecordsPerFile", target_rows_per_file)
+    writer.parquet(staging)
 
-    swap_dirs(spark, tmp, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    for name, _, _, hpath in _data_files(spark, staging)[1]:
+        if not fs.rename(hpath, Path(path, name.split("/_compacting/", 1)[1])):
+            raise IOError(f"compact_logs: could not publish {name}")
+    for _, _, hpath in inputs:
+        if not fs.delete(hpath, False):
+            raise IOError(f"compact_logs: could not delete {hpath.toString()}")
+    fs.delete(Path(staging), True)
     return n_files
 
 
@@ -453,26 +473,3 @@ def retain_partitions(
                 fs.delete(status.getPath(), True)
                 dropped += 1
     return dropped
-
-
-def swap_dirs(spark: SparkSession, src_path: str, dst_path: str) -> None:
-    """Promote ``src_path`` to ``dst_path`` via rename, staging the old
-    tree aside and rolling back on failure. Works on any Hadoop scheme.
-    (At warehouse scale this step is a table format's atomic commit; the
-    plain-parquet swap matches the reference's plain-parquet world.)"""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    dst = jvm.org.apache.hadoop.fs.Path(dst_path)
-    src = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = dst.getFileSystem(hconf)
-    old = jvm.org.apache.hadoop.fs.Path(dst_path.rstrip("/") + ".swap-old")
-    if fs.exists(old):
-        fs.delete(old, True)
-    had_dst = fs.exists(dst)
-    if had_dst and not fs.rename(dst, old):
-        raise IOError(f"swap_dirs: could not stage {dst_path} aside")
-    if not fs.rename(src, dst):
-        if had_dst:
-            fs.rename(old, dst)  # roll back
-        raise IOError(f"swap_dirs: could not promote {src_path} to {dst_path}")
-    fs.delete(old, True)

@@ -11,10 +11,10 @@ per batch is the batch, not the table.
 Exactly-once: foreachBatch can re-deliver a batch after a crash, and a
 naive merge would double-count it. The applied batch id is persisted
 beside the table (`_last_batch` file) and re-deliveries are skipped —
-the standard idempotent-foreachBatch recipe. The table flip itself is the
-two-phase directory swap shared with compact_logs (sinks.swap_dirs); at
-warehouse scale both the merge and the flip collapse into a table
-format's MERGE INTO + atomic commit.
+the standard idempotent-foreachBatch recipe. The table flip itself is a
+two-phase directory swap (``_swap_dirs``); at warehouse scale both the
+merge and the flip collapse into a table format's MERGE INTO + atomic
+commit.
 
 Scale: the merge is (existing ⋈ delta) on the rollup key — both sides are
 one row per key, orders of magnitude smaller than the event stream; the
@@ -26,11 +26,9 @@ from __future__ import annotations
 import os
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-
-from ..sinks import swap_dirs
 
 
 def _meta_path(table_path: str) -> str:
@@ -43,6 +41,27 @@ def _last_applied(table_path: str) -> int:
             return int(f.read().strip())
     except (OSError, ValueError):
         return -1
+
+
+def _swap_dirs(spark: SparkSession, src_path: str, dst_path: str) -> None:
+    """Promote ``src_path`` to ``dst_path`` via rename, staging the old
+    tree aside and rolling back on failure. Works on any Hadoop scheme."""
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    dst = jvm.org.apache.hadoop.fs.Path(dst_path)
+    src = jvm.org.apache.hadoop.fs.Path(src_path)
+    fs = dst.getFileSystem(hconf)
+    old = jvm.org.apache.hadoop.fs.Path(dst_path.rstrip("/") + ".swap-old")
+    if fs.exists(old):
+        fs.delete(old, True)
+    had_dst = fs.exists(dst)
+    if had_dst and not fs.rename(dst, old):
+        raise IOError(f"swap_dirs: could not stage {dst_path} aside")
+    if not fs.rename(src, dst):
+        if had_dst:
+            fs.rename(old, dst)  # roll back
+        raise IOError(f"swap_dirs: could not promote {src_path} to {dst_path}")
+    fs.delete(old, True)
 
 
 def merge_rollup_batch(
@@ -71,7 +90,7 @@ def merge_rollup_batch(
         merged = delta
     tmp = table_path.rstrip("/") + ".merge-tmp"
     merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    swap_dirs(spark, tmp, table_path)
+    _swap_dirs(spark, tmp, table_path)
     with open(_meta_path(table_path), "w") as f:
         f.write(str(batch_id))
 

@@ -9,12 +9,15 @@ from __future__ import annotations
 
 import glob
 import os
+import threading
+import time
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from langchain_callback_parquet_logger_spark.plans.session import load_table
+from langchain_callback_parquet_logger_spark.logger import SparkParquetLogger
+from langchain_callback_parquet_logger_spark.plans.session import load_table, run_concurrently
 from langchain_callback_parquet_logger_spark.sinks import compact_logs, write_log
 
 
@@ -58,8 +61,7 @@ def test_compact_logs_reduces_files_preserves_rows(spark, fragmented_logs):
     assert after.count() == n_rows
     after_sum = after.agg(*checks).collect()[0]
     assert list(before_sum) == list(after_sum)
-    assert not os.path.exists(out + ".compact-tmp")
-    assert not os.path.exists(out + ".swap-old")
+    assert not os.path.exists(os.path.join(out, "_compacting"))
 
 
 def test_compact_logs_clusters_timestamp_ranges(spark, fragmented_logs):
@@ -68,7 +70,7 @@ def test_compact_logs_clusters_timestamp_ranges(spark, fragmented_logs):
     what lets parquet min/max stats skip whole files on time-window scans.
     Pre-compaction the random flush files all overlap."""
     out, n_rows = fragmented_logs
-    compact_logs(spark, out, target_rows_per_file=max(1, n_rows // 6))
+    compact_logs(spark, out, target_rows_per_file=max(1, n_rows // 120))
 
     by_dir: dict[str, list[tuple]] = {}
     for f in _parquet_files(out):
@@ -86,6 +88,98 @@ def test_compact_logs_clusters_timestamp_ranges(spark, fragmented_logs):
         files.sort()
         for (lo1, hi1), (lo2, hi2) in zip(files, files[1:]):
             assert hi1 <= lo2, f"overlapping file ranges: {hi1} > {lo2}"
+
+
+def _file_stats(root: str) -> dict[str, tuple[int, int]]:
+    return {
+        p: (os.path.getsize(p), os.stat(p).st_mtime_ns) for p in _parquet_files(root)
+    }
+
+
+def test_compaction_keeps_every_row_a_live_logger_flushes(spark, tmp_path):
+    """A logger keeps flushing into the tree while it is compacted: every
+    row written is read back exactly once."""
+    out = str(tmp_path / "logs")
+    logger = SparkParquetLogger(spark, out, buffer_size=100)
+    for i in range(3_000):  # 30 flush files before the compaction starts
+        logger.on_llm_start({"_type": "fake"}, ["p"], run_id=f"a{i}")
+    stop = threading.Event()
+    live = []
+
+    def keep_flushing():
+        while not stop.is_set():
+            for _ in range(100):
+                logger.on_llm_start({"_type": "fake"}, ["p"], run_id=f"b{len(live)}")
+                live.append(1)
+            time.sleep(0.02)
+
+    flusher = threading.Thread(target=keep_flushing)
+    flusher.start()
+    try:
+        compact_logs(spark, out)
+    finally:
+        stop.set()
+        flusher.join(timeout=60)
+    assert not flusher.is_alive()
+    logger.flush()
+
+    written = 3_000 + len(live)
+    assert len(live) >= 100, "no flush landed while the compaction ran"
+    logs = spark.read.parquet(out)
+    assert logs.count() == written
+    assert logs.select("run_id").distinct().count() == written
+
+
+def test_compacting_a_compact_tree_rewrites_nothing(spark, fragmented_logs):
+    out, n_rows = fragmented_logs
+    target = max(1, n_rows // 120)  # several files in most partitions
+    assert compact_logs(spark, out, target_rows_per_file=target) > 0
+    before = _file_stats(out)
+    assert compact_logs(spark, out, target_rows_per_file=target) == 0
+    assert _file_stats(out) == before
+
+
+def test_compaction_rewrites_only_the_partition_that_changed(spark, fragmented_logs):
+    out, n_rows = fragmented_logs
+    assert compact_logs(spark, out, target_rows_per_file=n_rows) == 1
+    before = _file_stats(out)
+    day = sorted(glob.glob(os.path.join(out, "date=*")))[1]
+    (compacted,) = [p for p in before if os.path.dirname(p) == day]
+    day_rows = pq.read_metadata(compacted).num_rows
+    pq.write_table(pq.read_table(compacted).slice(0, 1), os.path.join(day, "flush.parquet"))
+
+    assert compact_logs(spark, out, target_rows_per_file=n_rows) == 1
+    after = _file_stats(out)
+    assert {p: v for p, v in after.items() if os.path.dirname(p) != day} == {
+        p: v for p, v in before.items() if os.path.dirname(p) != day
+    }
+    (rewritten,) = [p for p in after if os.path.dirname(p) == day]
+    assert rewritten != compacted
+    assert pq.read_metadata(rewritten).num_rows == day_rows + 1
+    assert spark.read.parquet(out).count() == n_rows + 1
+
+
+def test_concurrent_compactions_write_int64_timestamps(spark, sf_dir, tmp_path):
+    """Two compactions at once, on two trees Spark wrote with its INT96
+    default: both write INT64 timestamps, and the caller's session keeps
+    its own timestamp type."""
+    events = load_table(spark, sf_dir, "events").select(
+        F.col("ts").alias("timestamp"), "event_id", "user_id", "event_type", "value"
+    )
+    trees = [str(tmp_path / name) for name in ("a", "b")]
+    ts_conf = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(ts_conf)
+    for tree in trees:
+        write_log(events.repartition(8), tree)
+    run_concurrently(*[lambda t=t: compact_logs(spark, t) for t in trees])
+
+    assert spark.conf.get(ts_conf) == before
+    for tree in trees:
+        schemas = [pq.read_metadata(f).schema for f in _parquet_files(tree)]
+        assert schemas
+        for s in schemas:
+            assert s.column(s.names.index("timestamp")).physical_type == "INT64"
+        assert spark.read.parquet(tree).count() == events.count()
 
 
 def test_date_partition_join_prunes_dynamically(spark, fragmented_logs):

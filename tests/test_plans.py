@@ -799,9 +799,8 @@ def test_schema_conf_change_reinfers(spark, tmp_path):
 
 
 def test_index_compaction_leaves_timestamp_conf_unchanged(spark, sf_dir, tmp_path):
-    """compact_logs saves, sets and restores the session-wide parquet
-    timestamp type; the dedup index's two compactions must not interleave
-    those steps and leave the session at TIMESTAMP_MICROS."""
+    """The dedup index's two compactions write TIMESTAMP_MICROS from a
+    session of their own; the caller's session keeps its timestamp type."""
     from langchain_callback_parquet_logger_spark.operators import indexes
     from langchain_callback_parquet_logger_spark.plans.session import release_caches
 

@@ -5,9 +5,10 @@ write date-partitioned logs the way the reference's flush cadence does
 Every stage is the operator a 100 TB pipeline runs: regex scrub and
 hash-bucket sampling are scan-side (no shuffle), and the rate config is a
 broadcast dim. Compaction rewrites only the partitions holding more
-files than ceil(rows / target), in one shuffle; it publishes the new
-files before it deletes the inputs it listed, so a crash in between
-leaves duplicate rows, never lost ones.
+than twice ceil(rows / target) files, in one shuffle; it publishes the
+new files before it deletes the inputs it read, so readers may briefly
+see a row twice and a crash in between leaves duplicate rows, never
+lost ones.
 """
 
 from __future__ import annotations

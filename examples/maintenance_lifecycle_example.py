@@ -5,9 +5,9 @@ deployment actually runs, end-to-end on one scratch log tree.
                (one small parquet file per buffer fill → fragmented tree).
 2. retain    — drop expired date partitions (directory-only, no data read;
                runs FIRST so compaction never rewrites expiring bytes).
-3. compact   — rewrite each fragmented date partition into target-row
-               files sorted on timestamp; parquet min/max stats keep
-               time-window scans file-skipping.
+3. compact   — rewrite each fragmented date partition into ~target-row
+               files range-clustered on (date, timestamp); parquet
+               min/max stats keep time-window scans file-skipping.
 4. z-order   — cluster a second copy on the Morton key of (user, hour) and
                show the footer-level skipping advantage for user probes.
 5. refresh   — incremental materialized-view update: merge a delta batch's
@@ -75,7 +75,7 @@ def main() -> None:
     dropped = retain_partitions(spark, logs, mn.RETENTION_MIN_DATE)
     print(f"   {dropped} partitions dropped, {census(logs)} files remain")
 
-    print("3. compaction (clustered on (date, timestamp)):")
+    print("3. compaction (range-clustered on (date, timestamp)):")
     n_files = compact_logs(
         spark, logs, target_rows_per_file=mn.COMPACT_TARGET_ROWS
     )

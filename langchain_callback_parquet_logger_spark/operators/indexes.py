@@ -369,11 +369,8 @@ def _scratch_root() -> str:
 
 
 def _parquet_files(root: str) -> list[str]:
-    return [
-        p
-        for p in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(p)
-    ]
+    found = glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+    return [p for p in found if os.path.isfile(p)]
 
 
 def q_index_incremental_dedup(
@@ -431,9 +428,10 @@ def compact_dedup_index(
     table, with the same fix: ``sinks.compact_logs`` on each flat table,
     range-clustered on (band_id, band_key) so parquet min/max stats let
     the serving equi-join skip band files, and on doc_id for shingles.
-    Its planner skips a table already at or under ``ceil(rows / target)``
-    files; a rewrite publishes before it deletes the appended files, so a
-    crash in between leaves duplicate index rows, never lost ones.
+    Its planner skips a table already at or under twice ``ceil(rows /
+    target)`` files; a rewrite publishes before it deletes the files it
+    read, so a reader may briefly see an index row twice and a crash in
+    between leaves duplicate index rows, never lost ones.
     Returns the range partitions written per table, 0 where skipped."""
     from ..sinks import compact_logs
 

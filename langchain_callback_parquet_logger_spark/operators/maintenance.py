@@ -17,11 +17,12 @@ carried as a value column.
 Scale design:
 - retention is directory manipulation only (no data read, no shuffle) and
   runs FIRST so compaction never rewrites expiring bytes;
-- compaction rewrites only dates with more files than ``ceil(rows /
-  target)`` (here all: 24 fragments a date) in ONE shuffle, as
-  TIMESTAMP_MICROS so parquet min/max stats keep file-skipping alive; it
-  publishes before it deletes its inputs, so a crash leaves duplicates,
-  never a lost row;
+- compaction rewrites only dates with more than twice ``ceil(rows /
+  target)`` files (here all: 24 fragments a date) in ONE range shuffle
+  on (date, timestamp), as TIMESTAMP_MICROS so parquet min/max stats
+  keep file-skipping alive; it publishes before it deletes its inputs,
+  so readers may briefly see a row twice and a crash in between leaves
+  duplicates, never a lost row;
 - the read-back rollup groups on the partition column, so at warehouse
   scale the verification scan is partition-pruned and the aggregate is
   one partial+final hash aggregate.

@@ -118,7 +118,9 @@ def _data_files(spark: SparkSession, path: str) -> tuple:
     """``(fs, files)``: the Hadoop file system of ``path`` and one sorted
     ``(path, length, modification time, Hadoop Path)`` per data file below
     it, from a ``listStatus`` walk (any scheme) that skips what Spark
-    skips: names led by ``.``, or by ``_`` without a ``=``. ``listFiles`` would walk the tree in one call, but on the local file
+    skips: names led by ``.``, or by ``_`` without a ``=``, and names
+    ending in ``._COPYING_`` (a ``hadoop fs -put`` in flight).
+    ``listFiles`` would walk the tree in one call, but on the local file
     system each status it returns loads the file's owner and permissions
     (5.9 ms a file against 1.1 ms, 4-core host)."""
     hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
@@ -129,7 +131,8 @@ def _data_files(spark: SparkSession, path: str) -> tuple:
             p = st.getPath()
             s = p.toString()
             name = s[s.rfind("/") + 1:]
-            if name[:1] == "." or (name[:1] == "_" and "=" not in name):
+            hidden = name[:1] == "." or name.endswith("._COPYING_")
+            if hidden or (name[:1] == "_" and "=" not in name):
                 continue
             if st.isDirectory():
                 todo.append(p)

@@ -37,7 +37,6 @@ partition-pruned at read time.
 from __future__ import annotations
 
 import functools
-import json
 import logging
 import os
 import threading
@@ -362,23 +361,20 @@ def compact_logs(
     """Small-file compaction for a date-partitioned log tree, or a flat one
     (``partition_col=None``), fragmented by one file per flush.
 
-    One Hadoop listing finds the data files and one Spark job counts their
-    rows. Only a partition whose files outnumber ``ceil(rows /
-    target_rows_per_file)`` is rewritten, so a nightly run costs in
-    proportion to the partitions that changed. One job reads exactly the
-    listed files of those partitions and writes them to
-    ``<path>/_compacting``, which readers skip: each partition value in
-    one range partition, sorted on ``cluster_by`` and cut every
-    ``target_rows_per_file`` rows, so it gets exactly its planned file
-    count (a flat tree is range-partitioned on ``cluster_by``). The new
-    files move into their partition directories before the listed inputs
-    are deleted: a file flushed meanwhile is never touched, readers may
-    briefly see rewritten rows twice, and a crash in between leaves
-    duplicates, never a lost row. Run one compaction per tree at a time.
-
-    The job runs in a clone of the caller's session that writes INT64
-    TIMESTAMP_MICROS, as the logger's Arrow flush does (INT96 carries no
-    min/max statistics). Returns the range partitions written,
+    One Hadoop listing finds the data files and one Spark job counts each
+    one's rows; a listed file the count did not read (say, one still being
+    copied in) is left alone. A partition is rewritten only when it has
+    more than ``2 * ceil(rows / target_rows_per_file)`` files: the range
+    exchange on ``(partition_col, *cluster_by)`` cuts at sampled rows, so
+    a compacted partition may hold a file beyond its plan at each end, and
+    the slack keeps a second run from rewriting it. One job writes the
+    counted files of those partitions to ``<path>/_compacting`` (readers
+    skip it) from a clone of the caller's session set to INT64
+    TIMESTAMP_MICROS (INT96 has no min/max statistics). The new files move
+    into their partitions before the inputs are deleted: a file flushed
+    meanwhile is never touched, readers may briefly see a row twice, and a
+    crash in between leaves duplicates, never a lost row. Run one
+    compaction per tree at a time. Returns the range partitions written,
     ``ceil(rewritten rows / target_rows_per_file)``, or 0 if none."""
     fs, files = _data_files(spark, path)
     # A clone keeps the caller's runtime confs (nanosAsLong, the session
@@ -386,31 +382,33 @@ def compact_logs(
     session = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
     session.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     df = session.read.schema(_parquet_schema(session, path, files)).parquet(path)
-    file_path = F.col("_metadata.file_path")  # URL-encoded
-    counts = {unquote(f): (f, n) for f, n in df.groupBy(file_path).count().collect()}
+    # _metadata.file_path is URL-encoded; the listing's paths are not.
+    counts = {unquote(f): (f, n) for f, n in df.groupBy("_metadata.file_path").count().collect()}
     parts: dict[str, list] = {}
     for name, _, _, hpath in files:
-        parts.setdefault(name.rsplit("/", 1)[0], []).append((*counts.get(name, (None, 0)), hpath))
-    inputs = [  # the files of each partition with rows in too many files
+        if name in counts:
+            parts.setdefault(name.rsplit("/", 1)[0], []).append((*counts[name], hpath))
+    inputs = [
         f for part in parts.values()
-        if 0 < (rows := sum(n for _, n, _ in part)) and len(part) > -(-rows // target_rows_per_file)
+        if len(part) > 2 * -(-sum(n for _, n, _ in part) // target_rows_per_file)
         for f in part
     ]
     if not inputs:
         return 0
     n_files = -(-sum(n for _, n, _ in inputs) // target_rows_per_file)
-    partition_by = [partition_col] if partition_col else []
-    # One array literal: isin() makes a py4j call per path.
-    listed = F.from_json(F.lit(json.dumps([f for f, n, _ in inputs if n])), "array<string>")
+    range_keys = [partition_col, *cluster_by] if partition_col else list(cluster_by)
+    # One SQL IN list, which the optimizer hashes (isin() makes a py4j
+    # call per path); a URL-encoded path holds no backslash.
+    quoted = ",".join("'" + f.replace("'", "\\'") + "'" for f, _, _ in inputs)
     compacted = (
-        df.where(F.array_contains(listed, file_path))
-        .repartitionByRange(n_files, *(partition_by or cluster_by))
-        .sortWithinPartitions(*partition_by, *cluster_by)
+        df.where(F.expr(f"_metadata.file_path IN ({quoted})"))
+        .repartitionByRange(n_files, *range_keys)
+        .sortWithinPartitions(*range_keys)
     )
     staging = f"{path.rstrip('/')}/_compacting"
     writer = compacted.write.mode("overwrite").option("compression", _COMPRESSION)
     if partition_col:
-        writer = writer.partitionBy(partition_col).option("maxRecordsPerFile", target_rows_per_file)
+        writer = writer.partitionBy(partition_col)
     writer.parquet(staging)
 
     Path = spark._jvm.org.apache.hadoop.fs.Path

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 import threading
 import time
 
@@ -70,7 +71,7 @@ def test_compact_logs_clusters_timestamp_ranges(spark, fragmented_logs):
     what lets parquet min/max stats skip whole files on time-window scans.
     Pre-compaction the random flush files all overlap."""
     out, n_rows = fragmented_logs
-    compact_logs(spark, out, target_rows_per_file=max(1, n_rows // 120))
+    compact_logs(spark, out, target_rows_per_file=max(1, n_rows // 6))
 
     by_dir: dict[str, list[tuple]] = {}
     for f in _parquet_files(out):
@@ -140,13 +141,16 @@ def test_compacting_a_compact_tree_rewrites_nothing(spark, fragmented_logs):
 
 
 def test_compaction_rewrites_only_the_partition_that_changed(spark, fragmented_logs):
+    """Two flush files land on one compacted date, which takes it past
+    twice its planned file count: only that date is rewritten."""
     out, n_rows = fragmented_logs
     assert compact_logs(spark, out, target_rows_per_file=n_rows) == 1
     before = _file_stats(out)
     day = sorted(glob.glob(os.path.join(out, "date=*")))[1]
     (compacted,) = [p for p in before if os.path.dirname(p) == day]
     day_rows = pq.read_metadata(compacted).num_rows
-    pq.write_table(pq.read_table(compacted).slice(0, 1), os.path.join(day, "flush.parquet"))
+    for name in ("flush1.parquet", "flush2.parquet"):
+        pq.write_table(pq.read_table(compacted).slice(0, 1), os.path.join(day, name))
 
     assert compact_logs(spark, out, target_rows_per_file=n_rows) == 1
     after = _file_stats(out)
@@ -155,8 +159,24 @@ def test_compaction_rewrites_only_the_partition_that_changed(spark, fragmented_l
     }
     (rewritten,) = [p for p in after if os.path.dirname(p) == day]
     assert rewritten != compacted
-    assert pq.read_metadata(rewritten).num_rows == day_rows + 1
-    assert spark.read.parquet(out).count() == n_rows + 1
+    assert pq.read_metadata(rewritten).num_rows == day_rows + 2
+    assert spark.read.parquet(out).count() == n_rows + 2
+
+
+def test_compaction_leaves_a_file_being_copied_alone(spark, fragmented_logs):
+    """A file still being copied in (``hadoop fs -put`` names it
+    ``<name>._COPYING_``) sits in a partition that is rewritten: Spark
+    does not read it, and the compaction neither reads nor deletes it."""
+    out, n_rows = fragmented_logs
+    day = sorted(glob.glob(os.path.join(out, "date=*")))[1]
+    copying = os.path.join(day, "flush.parquet._COPYING_")
+    shutil.copyfile(_parquet_files(day)[0], copying)
+    size = os.path.getsize(copying)
+
+    assert compact_logs(spark, out, target_rows_per_file=n_rows) == 1
+    assert len(_parquet_files(day)) == 1
+    assert os.path.getsize(copying) == size
+    assert spark.read.parquet(out).count() == n_rows
 
 
 def test_concurrent_compactions_write_int64_timestamps(spark, sf_dir, tmp_path):

@@ -1,5 +1,6 @@
 """Arrow-vectorized NumPy kernels for the fixed-matrix float work on the
-embedding paths (LSH band signatures, PQ codeword assignment).
+embedding paths (LSH band signatures, PQ codeword assignment) and for the
+MinHash front end of text dedup (shingle sets and signatures).
 
 Why these exist: Spark evaluates higher-order array functions
 (``zip_with`` + ``aggregate``) as interpreted CodegenFallback
@@ -36,12 +37,16 @@ Layout: each public ``*_frame`` / ``*_sims`` / ``*_scores`` /
 NumPy core and encodes the result.  The cores are ``_band_signatures``,
 ``_pq_assign``, ``_centroid_assign``, ``_cluster_pairs``,
 ``_pair_cosines`` (shared by both band re-rank arms, with one batch
-encoder ``_pair_batch``) and ``_probe_topk``.  They are built on two
+encoder ``_pair_batch``), ``_probe_topk`` and ``_minhash``.  The float
+cores are built on two
 fold primitives: ``_row_dots`` (row-wise dots over a column prefix: norms,
 ``|c|^2``, pair and prefix dots) and the panel pair ``_fold_dot_panel`` /
 ``_seq_dot_panel`` (block x matrix dots).  PQ's ``(x - c)^2`` distance
-fold is the only other accumulation loop.  tests/test_kernel_cores.py
-proves every core against a scalar Python fold without a JVM.
+fold is the only other accumulation loop.  ``_minhash`` is integer-only:
+md5 per distinct shingle, affine hashes mod 2^31 - 1 and a per-doc
+``np.minimum.reduceat``, so it is exact by construction rather than by
+fold order.  tests/test_kernel_cores.py proves every core against a
+scalar Python reference without a JVM.
 
 The embedding column crosses the boundary as Arrow — float32 storage is
 widened to float64 in NumPy (exact, same as Spark's array<double> cast)
@@ -51,6 +56,7 @@ doubles they read from parquet.
 
 from __future__ import annotations
 
+import hashlib
 from typing import Iterator
 
 import numpy as np
@@ -675,6 +681,167 @@ def _transposed(M: np.ndarray) -> np.ndarray:
     if _MT_ENTRY is None or _MT_ENTRY[0] is not M:
         _MT_ENTRY = (M, np.ascontiguousarray(M.T))
     return _MT_ENTRY[1]
+
+
+_GRAM_BLOCK = 16384  # shingles per block of Python-level work in _minhash
+
+
+def _minhash(
+    data: bytes,
+    lo: np.ndarray,
+    hi: np.ndarray,
+    family: list[tuple[int, int]],
+    p: int,
+    k: int,
+) -> tuple[np.ndarray, list[bytes], np.ndarray]:
+    """n >= 1 docs as UTF-8 byte ranges ``data[lo[d]:hi[d]]`` -> (distinct
+    shingles per doc, the distinct shingles in doc order, (len(family),
+    n) int64 signatures); see :func:`minhash_shingle_frame`.
+
+    A shingle is the byte range from the start of word ``i`` to the end
+    of word ``i + min(k, words) - 1``: splitting on ``b" "`` and
+    re-joining a window with ``" "`` gives back exactly that range, and a
+    space byte never falls inside a multi-byte UTF-8 sequence.  Each doc
+    contributes ``max(words - k + 1, 1)`` shingles, so every doc has at
+    least one and ``reduceat`` never sees an empty segment.
+
+    Memory budget (:func:`_minhash_budget`), for ``S`` shingles of ``B``
+    bytes in all over ``W`` words: ``72*S + B + 24*W + 48*n`` bytes plus
+    2 MiB.  The shingles are Python ``bytes`` (41 bytes each plus their
+    text) in one list; the word and shingle bounds are int64 arrays; the
+    slicing and the md5 digests run over blocks of ``_GRAM_BLOCK``
+    shingles, which is the fixed part.  The signature step keeps one
+    int64 temp as long as the distinct shingles and folds each family
+    member into its output row in turn, never a (shingles x members)
+    matrix.  tests/test_kernel_cores.py asserts the traced peak at no
+    more than 1.5x the budget."""
+    n = len(lo)
+    buf = np.frombuffer(data, dtype=np.uint8)
+    spaces = np.flatnonzero(buf[lo[0] : hi[-1]] == 0x20) + lo[0]
+    owner = np.searchsorted(lo, spaces, side="right") - 1
+    spaces = spaces[spaces < hi[owner]]  # drop the bytes of null slots
+    words = np.searchsorted(spaces, hi) - np.searchsorted(spaces, lo) + 1
+    w_start = np.insert(spaces + 1, np.searchsorted(spaces, lo), lo)
+    w_end = np.insert(spaces, np.searchsorted(spaces, hi), hi)
+    del spaces, owner
+    m = np.maximum(words - (k - 1), 1)
+    # shingle j of doc d starts at word j + first_word[d] - first_shingle[d]
+    first = np.repeat((np.cumsum(words) - words) - (np.cumsum(m) - m), m)
+    first += np.arange(len(first))
+    starts = w_start[first]
+    first += np.repeat(np.minimum(words, k) - 1, m)
+    ends = w_end[first]
+    del first, w_start, w_end
+    grams: list[bytes] = []
+    for b in range(0, len(starts), _GRAM_BLOCK):
+        blk = zip(starts[b : b + _GRAM_BLOCK].tolist(), ends[b : b + _GRAM_BLOCK].tolist())
+        grams += [data[s:e] for s, e in blk]
+    del starts, ends, blk
+    distinct: list[bytes] = []
+    counts = np.empty(n, dtype=np.int64)
+    at = 0
+    for d, c in enumerate(m.tolist()):
+        u = dict.fromkeys(grams[at : at + c])  # first occurrence order
+        distinct.extend(u)
+        counts[d] = len(u)
+        at += c
+    del grams
+    x = np.empty(len(distinct), dtype=np.int64)
+    for b in range(0, len(distinct), _GRAM_BLOCK):
+        blk = distinct[b : b + _GRAM_BLOCK]
+        digests = b"".join([hashlib.md5(g, usedforsecurity=False).digest() for g in blk])
+        # hash60: the top 60 bits of each digest's first 8 bytes
+        x[b : b + len(blk)] = np.frombuffer(digests, dtype=">u8")[::2] >> np.uint64(4)
+    del blk, digests
+    x %= p
+    seg = np.cumsum(counts) - counts
+    sig = np.empty((len(family), n), dtype=np.int64)
+    tmp = np.empty_like(x)
+    for j, (a, c) in enumerate(family):
+        np.multiply(x, a, out=tmp)  # x, a < 2^31: no int64 overflow
+        tmp += c
+        np.remainder(tmp, p, out=tmp)
+        sig[j] = np.minimum.reduceat(tmp, seg)
+    return counts, distinct, sig
+
+
+def _minhash_budget(n: int, words: int, shingles: int, shingle_bytes: int) -> int:
+    """The stated peak of :func:`_minhash`, in bytes."""
+    return 72 * shingles + shingle_bytes + 24 * words + 48 * n + (2 << 20)
+
+
+def _text_ranges(col: pa.Array) -> tuple[bytes, np.ndarray, np.ndarray, np.ndarray]:
+    """String column -> (data, lo, hi, valid): each row's UTF-8 byte
+    range in ``data``; a NULL row gets an empty range."""
+    bufs = col.buffers()
+    width = np.int64 if pa.types.is_large_string(col.type) else np.int32
+    off = np.frombuffer(bufs[1], dtype=width)[col.offset : col.offset + len(col) + 1]
+    off = off.astype(np.int64)
+    valid = (
+        np.ones(len(col), dtype=bool)
+        if col.null_count == 0
+        else np.asarray(col.is_valid().to_numpy(zero_copy_only=False))
+    )
+    lo = off[:-1]
+    hi = np.where(valid, off[1:], lo)
+    data = bufs[2].to_pybytes() if bufs[2] is not None else b""
+    return data, lo, hi, valid
+
+
+def _minhash_arrays(
+    col: pa.Array, family: list[tuple[int, int]], p: int, k: int
+) -> list[pa.Array]:
+    """A non-empty string column -> [sh, s0, ..., s{m-1}]: decode, the
+    :func:`_minhash` core, encode; NULL text gets NULL members."""
+    data, lo, hi, valid = _text_ranges(col)
+    counts, distinct, sig = _minhash(data, lo, hi, family, p, k)
+    lens = np.fromiter(map(len, distinct), dtype=np.int64, count=len(distinct))
+    sh = pa.ListArray.from_arrays(
+        pa.array(np.concatenate([[0], np.cumsum(counts)]), pa.int32()),
+        pa.StringArray.from_buffers(
+            len(distinct),
+            pa.py_buffer(np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)),
+            pa.py_buffer(b"".join(distinct)),
+        ),
+    )
+    mask = None if valid.all() else ~valid
+    return [sh, *(pa.array(s, type=pa.int64(), mask=mask) for s in sig)]
+
+
+def minhash_shingle_frame(
+    df: DataFrame,
+    family: list[tuple[int, int]],
+    p: int,
+    k: int,
+    text_col: str = "text",
+) -> DataFrame:
+    """(id, text) -> (id, sh array<string>, s0..s{m-1} bigint): each
+    doc's distinct word k-gram shingles and its MinHash signature, in one
+    Arrow pass instead of interpreted ``transform``/``array_min`` folds.
+
+    ``sh`` equals ``dedup.shingles(text)`` element for element: split on
+    ``" "``, windows of ``k`` words, the ``greatest(n - k + 1, 1)`` guard,
+    de-duplicated in first-occurrence order like ``array_distinct``.
+    ``s{j}`` is ``min((a_j * hash60(sh) % p + b_j) % p)`` over the
+    distinct shingles, with ``hash60`` the top 60 bits of the first 8
+    md5 bytes (the 15 hex digits ``dedup.hash60`` converts).  A NULL text
+    gets ``sh = [""]``, as ``shingles(NULL)`` does, and NULL signature
+    members."""
+    id_col, id_type = _id_column(df, text_col)
+    sig_names = [f"s{j}" for j in range(len(family))]
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in _nonempty(batches):
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col), *_minhash_arrays(batch.column(text_col), family, p, k)],
+                names=[id_col, "sh", *sig_names],
+            )
+
+    return df.mapInArrow(
+        kernel,
+        f"{id_col} {id_type}, sh array<string>, "
+        + ", ".join(f"{s} bigint" for s in sig_names),
+    )
 
 
 def exploded_band_rows(base: DataFrame, *payload: str) -> DataFrame:

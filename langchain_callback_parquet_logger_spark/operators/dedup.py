@@ -12,10 +12,10 @@ Scale design (the point of these operators at 100 TB):
 - exact dedup: one hash-aggregate on the fingerprint — no pairwise work;
 - n-gram Jaccard: *blocked* pairwise comparison (lang + length band) — the
   exact baseline, quadratic within blocks, used to validate MinHash;
-- MinHash+LSH: shingle explode (linear) → 16-way min-aggregate (one
-  shuffle on doc_id) → band keys → equi-join on (band, key) so candidate
-  generation is hash-join-shaped, never O(n²) — then exact Jaccard only on
-  candidates;
+- MinHash+LSH: one Arrow pass per batch computes each doc's shingle set
+  and 16 signature members (map-only, no shuffle) → band keys → equi-join
+  on (band, key) so candidate generation is hash-join-shaped, never
+  O(n²) — then exact Jaccard only on candidates;
 - SimHash: linear scan to a 32-bit fingerprint + banded candidate join on
   hamming distance.
 """
@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.session import cache_tracked, load_table, spread
+from .arrowkernels import minhash_shingle_frame
 
 SHINGLE_SIZE = 3
 NUM_HASHES = 16
@@ -515,17 +516,32 @@ FROM pair_agg p JOIN docs_agg d ON p.threshold_ppm = d.threshold_ppm
 # ---------------------------------------------------------------------------
 
 
+def minhash_frame(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
+    """(doc_id, sh, s0..s{n-1}): every doc's distinct shingle set (equal
+    to ``shingles(text)``) and its MinHash signature, from one Arrow pass
+    (:func:`~.arrowkernels.minhash_shingle_frame`).  Each shingle is
+    digested once (``hash60 mod p``); the family members are per-doc
+    minima of the affine hashes.  Map-only: no shuffle.  A NULL-text doc
+    keeps ``sh = [""]`` and gets NULL signature members, so
+    :func:`signatures_of` drops it.  Callers that need both the shingle
+    sets and the signatures cache this one frame and take both from it."""
+    return minhash_shingle_frame(
+        docs.select("doc_id", "text"), HASH_FAMILY[:num_hashes], MERSENNE_P, SHINGLE_SIZE
+    )
+
+
+def signatures_of(frame: DataFrame) -> DataFrame:
+    """(doc_id, s0..s{n-1}) of a :func:`minhash_frame`, NULL-text docs
+    dropped."""
+    return frame.filter(F.col("s0").isNotNull()).drop("sh")
+
+
 def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
     """(doc_id, s0..s{n-1}): per-doc MinHash signature, MAP-ONLY — no
-    shuffle. Each shingle is digested ONCE (hash60 mod p) into a per-row
-    array; the 16 family members are ``array_min`` over an affine
-    ``transform`` of that base array, so signature extraction never
-    leaves the scan stage (at warehouse scale this removes a
-    corpus-sized explode+groupBy exchange that the round-8 shape paid).
-    The two-projection split matters: ``hvec`` is a non-cheap alias
-    referenced 16 times, so CollapseProject leaves it in its own
-    Project and the md5 digests run once per row, not 16×.  Values are
-    bit-identical to the old explode+groupBy form (min over the same
+    shuffle (at warehouse scale this removes a corpus-sized
+    explode+groupBy exchange that the round-8 shape paid).  Computed by
+    the Arrow kernel behind :func:`minhash_frame`; values are
+    bit-identical to the explode+groupBy form (min over the same
     multiset), so the DuckDB oracle is unchanged — pinned by
     tests/test_operators.py.
 
@@ -542,23 +558,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFra
     (they are legitimate, if degenerate, exact duplicates of each
     other); corpora with many of them are covered by the skew guards
     (``WINNOW_MAX_DF``, ``q_key_skew_report``)."""
-    base = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id",
-        F.transform(
-            shingles(F.col("text")), lambda sh: hash60(sh) % MERSENNE_P
-        ).alias("hvec"),
-    )
-    return base.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform(
-                    F.col("hvec"), lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE_P
-                )
-            ).alias(f"s{j}")
-            for j, (a, b) in enumerate(HASH_FAMILY[:num_hashes])
-        ],
-    )
+    return minhash_frame(docs.filter(F.col("text").isNotNull()), num_hashes).drop("sh")
 
 
 def lsh_bands(sig: DataFrame, num_bands: int = NUM_BANDS, num_hashes: int = NUM_HASHES) -> DataFrame:
@@ -584,14 +584,14 @@ def lsh_bands(sig: DataFrame, num_bands: int = NUM_BANDS, num_hashes: int = NUM_
 
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"))
-    # Both reused sub-plans are tiny relative to the corpus (one row / a few
-    # band rows per doc) and feed multiple joins below; caching them stops
-    # the band self-join + verify joins from recomputing the shingle/signature
-    # pipeline once per use (broadcast sides don't hit ReuseExchange). The
-    # blocks are registered for release_caches() — harnesses release after
-    # each query's action.
-    sh = cache_tracked(docs.select("doc_id", shingles(F.col("text")).alias("sh")))
-    bands = cache_tracked(lsh_bands(minhash_signatures(docs)))
+    # One kernel frame holds the shingle sets and the signatures (one row
+    # per doc) and feeds the band self-join and both verify joins; caching
+    # it stops each of them from re-running the kernel (broadcast sides
+    # don't hit ReuseExchange). The block is registered for
+    # release_caches() — harnesses release after each query's action.
+    frame = cache_tracked(minhash_frame(docs))
+    sh = frame.select("doc_id", "sh")
+    bands = lsh_bands(signatures_of(frame))
 
     b1, b2 = bands.alias("b1"), bands.alias("b2")
     candidates = (
@@ -1143,10 +1143,11 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"))
     # One signature/band pipeline over the union, split afterwards —
     # signatures are per-doc, so this equals computing each side
-    # separately while scanning the corpus once. Cached: the band frame
-    # feeds both join sides, the shingle frame both verify legs.
-    sh = cache_tracked(docs.select("doc_id", shingles(F.col("text")).alias("sh")))
-    bands = cache_tracked(lsh_bands(minhash_signatures(docs)))
+    # separately while scanning the corpus once. Cached: the kernel frame
+    # feeds both band join sides and both verify legs.
+    frame = cache_tracked(minhash_frame(docs))
+    sh = frame.select("doc_id", "sh")
+    bands = lsh_bands(signatures_of(frame))
     is_new = F.col("doc_id") % INCREMENTAL_BATCH_MOD == 0
     nb, cb = bands.filter(is_new).alias("n"), bands.filter(~is_new).alias("c")
     cand = (
@@ -1487,8 +1488,9 @@ GROUP BY p.doc_id
 
 def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"))
-    sh = cache_tracked(docs.select("doc_id", shingles(F.col("text")).alias("sh")))
-    sig = cache_tracked(minhash_signatures(docs))
+    frame = cache_tracked(minhash_frame(docs))
+    sh = frame.select("doc_id", "sh")
+    sig = signatures_of(frame)
     bands = lsh_bands(sig)
     b1, b2 = bands.alias("b1"), bands.alias("b2")
     candidates = (

@@ -35,8 +35,8 @@ from .dedup import (
     JACCARD_THRESHOLD,
     jaccard,
     lsh_bands,
-    minhash_signatures,
-    shingles,
+    minhash_frame,
+    signatures_of,
 )
 
 BANDS_SUBDIR = "bands"
@@ -53,40 +53,43 @@ def _parts(index_dir: str) -> tuple[str, str]:
     )
 
 
-def _index_frames(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    bands = lsh_bands(minhash_signatures(docs)).select(
-        "doc_id", "band_id", "band_key"
-    )
-    sh = docs.select("doc_id", shingles(F.col("text")).alias("sh"))
-    return bands, sh
+def _index_frames(frame: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(band rows, shingle rows) of one cached :func:`~.dedup.minhash_frame`."""
+    bands = lsh_bands(signatures_of(frame)).select("doc_id", "band_id", "band_key")
+    return bands, frame.select("doc_id", "sh")
+
+
+def _write_index(docs: DataFrame, index_dir: str, mode: str) -> None:
+    """Write both index tables of ``docs`` in ``mode``.  The band and
+    shingle tables are independent outputs, so the two write jobs run
+    CONCURRENTLY (guide §2.6: overlap independent actions so the second
+    job back-fills the first's straggler tail); the kernel frame both
+    read is cached for the two writes, so each partition of it is
+    computed once, and released after them."""
+    bands_dir, sh_dir = _parts(index_dir)
+    frame = minhash_frame(docs).persist()
+    try:
+        bands, sh = _index_frames(frame)
+        run_concurrently(
+            lambda: bands.write.mode(mode).parquet(bands_dir),
+            lambda: sh.write.mode(mode).parquet(sh_dir),
+        )
+    finally:
+        frame.unpersist()
 
 
 def materialize_dedup_index(docs: DataFrame, index_dir: str) -> None:
     """Build (overwrite) the stored index from a document frame with
-    (doc_id, text). One signature pipeline, two parquet writes — the
-    band and shingle tables are independent outputs, so the two write
-    jobs run CONCURRENTLY (guide §2.6: overlap independent actions so
-    the second job back-fills the first's straggler tail)."""
-    bands_dir, sh_dir = _parts(index_dir)
-    bands, sh = _index_frames(docs)
-    run_concurrently(
-        lambda: bands.write.mode("overwrite").parquet(bands_dir),
-        lambda: sh.write.mode("overwrite").parquet(sh_dir),
-    )
+    (doc_id, text): one signature pipeline, two parquet writes."""
+    _write_index(docs, index_dir, "overwrite")
 
 
 def append_to_dedup_index(docs: DataFrame, index_dir: str) -> None:
     """Fold an ACCEPTED ingest batch into the stored index (call after
     the batch passed dedup). Plain parquet append — idempotence at
     warehouse scale comes from the table format's transactional commit,
-    exactly like streaming/materialize.py's batch-id recipe.  The two
-    appends are independent tables and run concurrently (guide §2.6)."""
-    bands_dir, sh_dir = _parts(index_dir)
-    bands, sh = _index_frames(docs)
-    run_concurrently(
-        lambda: bands.write.mode("append").parquet(bands_dir),
-        lambda: sh.write.mode("append").parquet(sh_dir),
-    )
+    exactly like streaming/materialize.py's batch-id recipe."""
+    _write_index(docs, index_dir, "append")
 
 
 def dedup_against_index(
@@ -103,9 +106,7 @@ def dedup_against_index(
     corpus_sh = spark.read.parquet(sh_dir).select(
         F.col("doc_id").alias("corpus_doc_id"), F.col("sh").alias("sh_c")
     )
-    nb, nsh = _index_frames(new_docs)
-    # nb and nsh each feed exactly ONE join — no reuse, so no cache:
-    # each batch-side pipeline executes once per action.
+    nb, nsh = _index_frames(cache_tracked(minhash_frame(new_docs)))
     cand = (
         nb.select("band_id", "band_key", F.col("doc_id").alias("new_doc_id"))
         .join(corpus_bands, ["band_id", "band_key"])

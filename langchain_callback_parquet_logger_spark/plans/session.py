@@ -114,6 +114,13 @@ _SCHEMA_CONFS = (
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
+def glob_escaped(path: str) -> str:
+    """``path`` for ``spark.read``, which expands Hadoop globs: a
+    backslash before each of the glob characters ``\\[]{}*?`` makes it
+    match only the directory or file named ``path``."""
+    return "".join("\\" + c if c in "\\[]{}*?" else c for c in path)
+
+
 def _data_files(spark: SparkSession, path: str) -> tuple:
     """``(fs, files)``: the Hadoop file system of ``path`` and one sorted
     ``(path, length, modification time, Hadoop Path)`` per data file below
@@ -157,7 +164,7 @@ def _parquet_schema(spark: SparkSession, path: str, files: list | None = None) -
     key = (tuple(f[:3] for f in files), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
     hit = _SCHEMAS.get(path)
     if hit is None or hit[0] != key:
-        hit = _SCHEMAS[path] = (key, spark.read.parquet(path).schema)
+        hit = _SCHEMAS[path] = (key, spark.read.parquet(glob_escaped(path)).schema)
     return hit[1]
 
 
@@ -173,7 +180,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (the generator's physical encoding has varied across rounds)."""
     pin_oracle_confs(spark)
     path = table_path(sf_dir, name)
-    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+    df = spark.read.schema(_parquet_schema(spark, path)).parquet(glob_escaped(path))
     if name == "events":
         df = normalize_ts(df)
     return df

@@ -52,7 +52,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .plans.session import _data_files, _parquet_schema
+from .plans.session import _data_files, _parquet_schema, glob_escaped
 
 logger = logging.getLogger(__name__)
 
@@ -381,7 +381,7 @@ def compact_logs(
     # timezone), which a newSession() would drop.
     session = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
     session.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    df = session.read.schema(_parquet_schema(session, path, files)).parquet(path)
+    df = session.read.schema(_parquet_schema(session, path, files)).parquet(glob_escaped(path))
     # _metadata.file_path is URL-encoded; the listing's paths are not.
     counts = {unquote(f): (f, n) for f, n in df.groupBy("_metadata.file_path").count().collect()}
     parts: dict[str, list] = {}

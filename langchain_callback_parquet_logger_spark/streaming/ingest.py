@@ -430,25 +430,23 @@ def q_stream_incremental_dedup(
         JACCARD_THRESHOLD,
         jaccard,
         lsh_bands,
-        minhash_signatures,
-        shingles,
+        minhash_frame,
+        signatures_of,
     )
     from ..plans.session import cache_tracked, load_table, scoped_conf
 
     docs = load_table(spark, sf_dir, "documents")  # also pins oracle confs
     is_new = F.col("doc_id") % INCREMENTAL_BATCH_MOD == 0
     corpus = docs.filter(~is_new)
-    # Static side, computed once and cached: the corpus' band index and
-    # shingle sets (in production: read from the stored index table).
-    corpus_bands = cache_tracked(
-        lsh_bands(minhash_signatures(corpus)).select(
-            "band_id", "band_key", F.col("doc_id").alias("corpus_doc_id")
-        )
+    # Static side, computed once and cached: the corpus' kernel frame,
+    # read as its band index and its shingle sets (in production: the
+    # stored index tables).
+    corpus_frame = cache_tracked(minhash_frame(corpus))
+    corpus_bands = lsh_bands(signatures_of(corpus_frame)).select(
+        "band_id", "band_key", F.col("doc_id").alias("corpus_doc_id")
     )
-    corpus_sh = cache_tracked(
-        corpus.select(
-            F.col("doc_id").alias("corpus_doc_id"), shingles(F.col("text")).alias("sh_c")
-        )
+    corpus_sh = corpus_frame.select(
+        F.col("doc_id").alias("corpus_doc_id"), F.col("sh").alias("sh_c")
     )
 
     src = _table_stream(spark, sf_dir, "documents", maxFilesPerTrigger="1")
@@ -466,8 +464,10 @@ def q_stream_incremental_dedup(
     verdict_schema = "new_doc_id bigint, n_corpus_dups bigint, best_jaccard double"
 
     def _dedup_batch(batch_df: BatchDF, epoch_id: int) -> None:
-        new_docs = batch_df.filter(is_new)
-        nb = lsh_bands(minhash_signatures(new_docs)).select(
+        # the batch's kernel frame feeds its band keys and its verify
+        # leg: cached for this epoch's write only
+        new_frame = minhash_frame(batch_df.filter(is_new)).persist()
+        nb = lsh_bands(signatures_of(new_frame)).select(
             "band_id", "band_key", F.col("doc_id").alias("new_doc_id")
         )
         cand = (
@@ -477,9 +477,8 @@ def q_stream_incremental_dedup(
         )
         verified = (
             cand.join(
-                new_docs.select(
-                    F.col("doc_id").alias("new_doc_id"),
-                    shingles(F.col("text")).alias("sh_n"),
+                new_frame.select(
+                    F.col("doc_id").alias("new_doc_id"), F.col("sh").alias("sh_n")
                 ),
                 "new_doc_id",
             )
@@ -495,9 +494,12 @@ def q_stream_incremental_dedup(
                 F.max("j").alias("best_jaccard"),
             )
         )
-        verified.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={int(epoch_id)}")
-        )
+        try:
+            verified.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"epoch={int(epoch_id)}")
+            )
+        finally:
+            new_frame.unpersist()
 
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         query = (

@@ -12,11 +12,15 @@ Shape classes: row blocks of 1, 16 and the width derived from
 ``_PAIR_BLOCK_BYTES``; probe corpus-chunk tails of 1 and ``chunk - 1``;
 d = 64 and the Matryoshka prefixes; the four band families; PQ with the
 real codebook and with more than 100 codewords; centroid ties.
-``_seq_dot_panel`` is proven on both of its arms.  No test here requests
-the ``spark`` fixture, so the module runs without a JVM."""
+``_seq_dot_panel`` is proven on both of its arms.  The MinHash core is
+proven against hashlib and the shingle reference of test_operators over
+NULL, empty, short, repeated, oddly spaced and multi-byte docs, with its
+traced peak held to its stated budget.  No test here requests the
+``spark`` fixture, so the module runs without a JVM."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 import tracemalloc
 
@@ -27,7 +31,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from langchain_callback_parquet_logger_spark.operators import arrowkernels as K
+from langchain_callback_parquet_logger_spark.operators import dedup as DD
 from langchain_callback_parquet_logger_spark.operators import similarity as S
+from test_operators import _shingles_py
 
 D = S.EMB_DIM
 CHUNK = K._PROBE_CHUNK_COLS
@@ -377,3 +383,119 @@ def test_probe_panel_stays_within_block_budget(monkeypatch):
         tracemalloc.stop()
     assert got == want
     assert peak <= 4 * budget, (peak, budget)
+
+
+# ---------------------------------------------------------------------------
+# MinHash core: shingle sets and signatures against hashlib and the
+# shingle reference of tests/test_operators.py.
+# ---------------------------------------------------------------------------
+
+FAMILY, P = DD.HASH_FAMILY, DD.MERSENNE_P
+
+
+def _minhash_reference(text: str | None) -> tuple[list[str], list[int] | None]:
+    """(distinct shingles in first-occurrence order, signature): hash60
+    is the first 15 hex digits of md5, each member the minimum over the
+    shingles; NULL text has the shingle set [""] and no signature."""
+    sh = _shingles_py("" if text is None else text)
+    if text is None:
+        return sh, None
+    hs = [
+        int(hashlib.md5(g.encode(), usedforsecurity=False).hexdigest()[:15], 16) % P
+        for g in sh
+    ]
+    return sh, [min((a * h + b) % P for h in hs) for a, b in FAMILY]
+
+
+def _minhash_kernel(col: pa.Array) -> list[tuple[list[str], list[int] | None]]:
+    sh, *sig = K._minhash_arrays(col, FAMILY, P, DD.SHINGLE_SIZE)
+    rows = zip(*(s.to_pylist() for s in sig))
+    return [
+        (s, None if r[0] is None else list(r)) for s, r in zip(sh.to_pylist(), rows)
+    ]
+
+
+MINHASH_SHAPES = {
+    "null": [None],
+    "empty": [""],
+    "one word": ["x"],
+    "two words": ["x y"],
+    "repeated k-grams": ["a b c a b c a b c", "a a a a a"],
+    "double, leading and trailing spaces": ["a  b c", " a b c", "a b c ", " ", "  "],
+    "multi-byte": ["İ Σ ς σ", "中文 字 符 中文 字 符", "😀 a 😀 a 😀 b", "é"],
+    "no non-null doc": [None, None, None],
+    "mixed": [None, "", "x", "a b c d e", None, "😀  😀", "a b c a b c"],
+}
+
+
+@pytest.mark.parametrize("texts", MINHASH_SHAPES.values(), ids=MINHASH_SHAPES.keys())
+def test_minhash_core_matches_hashlib_reference(texts):
+    want = [_minhash_reference(t) for t in texts]
+    assert _minhash_kernel(pa.array(texts, pa.string())) == want
+    assert _minhash_kernel(pa.array(texts, pa.large_string())) == want
+
+
+@CORES
+@given(seeds, st.integers(1, 60), st.integers(0, 30))
+def test_minhash_core_matches_reference_on_random_soup(seed, n, cut):
+    """Random docs over a vocabulary with empty words and multi-byte
+    characters, also read through a sliced Arrow array (non-zero
+    offset, data outside the slice)."""
+    rng = np.random.default_rng(seed)
+    vocab = ["a", "b", "cc", "", "İ", "Σ", "中文", "😀"]
+    texts = [
+        None
+        if rng.random() < 0.1
+        else " ".join(rng.choice(vocab, size=rng.integers(0, 12)).tolist())
+        for _ in range(n + cut)
+    ]
+    col = pa.array(texts, pa.string()).slice(cut, n)
+    assert _minhash_kernel(col) == [_minhash_reference(t) for t in texts[cut:]]
+
+
+def _minhash_sizes(texts: list[str | None]) -> tuple[int, int, int, int]:
+    """(docs, words, shingles, shingle bytes), the arguments of
+    ``_minhash_budget``."""
+    k = DD.SHINGLE_SIZE
+    words = shingles = nbytes = 0
+    for t in texts:
+        ws = ("" if t is None else t).split(" ")
+        words += len(ws)
+        for i in range(max(len(ws) - k + 1, 1)):
+            shingles += 1
+            nbytes += len(" ".join(ws[i : i + k]).encode())
+    return len(texts), words, shingles, nbytes
+
+
+def _corpus(seed: int, n: int, vocab: list[str], lo: int, hi: int) -> list[str]:
+    rng = np.random.default_rng(seed)
+    return [
+        " ".join(rng.choice(vocab, size=rng.integers(lo, hi)).tolist()) for _ in range(n)
+    ]
+
+
+MINHASH_BUDGET_SHAPES = {
+    "corpus": _corpus(1, 1500, [f"w{i}" for i in range(5000)], 50, 300),
+    "repeated k-grams": ["a b c " * 100] * 1500,
+    "one-word docs": ["x"] * 5000,
+    "null docs": [None] * 5000,
+    "long words": _corpus(2, 500, ["y" * i for i in range(1, 61)], 100, 101),
+    "multi-byte": _corpus(3, 500, ["中文", "😀", "İΣ", "σ"], 100, 101),
+}
+
+
+@pytest.mark.parametrize(
+    "texts", MINHASH_BUDGET_SHAPES.values(), ids=MINHASH_BUDGET_SHAPES.keys()
+)
+def test_minhash_core_stays_within_budget(texts):
+    """The traced peak of one batch stays within 1.5x the budget stated
+    on ``_minhash``: no (shingles x members) matrix, bounded blocks."""
+    data, lo, hi, _ = K._text_ranges(pa.array(texts, pa.string()))
+    budget = K._minhash_budget(*_minhash_sizes(texts))
+    tracemalloc.start()
+    try:
+        K._minhash(data, lo, hi, FAMILY, P, DD.SHINGLE_SIZE)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak <= 1.5 * budget, (peak, budget)

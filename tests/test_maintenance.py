@@ -18,14 +18,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from langchain_callback_parquet_logger_spark.logger import SparkParquetLogger
-from langchain_callback_parquet_logger_spark.plans.session import load_table, run_concurrently
+from langchain_callback_parquet_logger_spark.plans.session import (
+    glob_escaped,
+    load_table,
+    run_concurrently,
+)
 from langchain_callback_parquet_logger_spark.sinks import compact_logs, write_log
 
 
 def _parquet_files(root: str) -> list[str]:
     return [
         p
-        for p in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+        for p in glob.glob(os.path.join(glob.escape(root), "**", "*.parquet"), recursive=True)
         if os.path.isfile(p)
     ]
 
@@ -200,6 +204,24 @@ def test_concurrent_compactions_write_int64_timestamps(spark, sf_dir, tmp_path):
         for s in schemas:
             assert s.column(s.names.index("timestamp")).physical_type == "INT64"
         assert spark.read.parquet(tree).count() == events.count()
+
+
+@pytest.mark.parametrize("name", ["back\\slash x", "brack[et]", "brace{x}"])
+def test_compaction_of_a_tree_under_a_glob_character_name(spark, sf_dir, tmp_path, name):
+    """A directory name holding a Hadoop glob character is read as
+    itself: compaction rewrites the tree, and the tree reads back with
+    every row (read through ``glob_escaped``, as the engine reads it)."""
+    events = load_table(spark, sf_dir, "events").select(
+        F.col("ts").alias("timestamp"), "event_id", "user_id", "event_type", "value"
+    )
+    tree = str(tmp_path / name / "logs")
+    write_log(events.repartition(8), tree)
+    before = len(_parquet_files(tree))
+
+    assert compact_logs(spark, tree) > 0
+
+    assert len(_parquet_files(tree)) < before
+    assert spark.read.parquet(glob_escaped(tree)).count() == events.count()
 
 
 def test_date_partition_join_prunes_dynamically(spark, fragmented_logs):

@@ -101,6 +101,43 @@ def test_minhash_signatures_map_only_form_equals_groupby_reference(spark, sf_dir
     assert "Exchange" not in plan, plan
 
 
+def test_minhash_kernel_batching_and_partitions_equal_groupby_reference(spark, sf_dir):
+    """The Arrow kernel sees the corpus in many small Arrow batches and
+    over five partitions, some of them empty: signatures still equal the
+    explode+groupBy reference, and every shingle set (NULL text
+    included) equals ``shingles(text)``."""
+    from langchain_callback_parquet_logger_spark.plans.session import scoped_conf
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").union(
+        spark.createDataFrame(
+            [(9_000_001, "x"), (9_000_002, " a  b "), (9_000_003, ""), (9_000_004, None)],
+            "doc_id long, text string",
+        )
+    )
+    reference = (
+        docs.filter(F.col("text").isNotNull())
+        .select("doc_id", F.explode(D.shingles(F.col("text"))).alias("sh"))
+        .select("doc_id", (D.hash60(F.col("sh")) % D.MERSENNE_P).alias("h"))
+        .groupBy("doc_id")
+        .agg(
+            *[
+                F.min((F.lit(a) * F.col("h") + F.lit(b)) % D.MERSENNE_P).alias(f"s{j}")
+                for j, (a, b) in enumerate(D.HASH_FAMILY[: D.NUM_HASHES])
+            ]
+        )
+    )
+    want_sig = sorted(reference.collect())
+    want_sh = sorted(docs.select("doc_id", D.shingles(F.col("text")).alias("sh")).collect())
+    # two populated partitions of five: doc_id % 2 hashes to at most two
+    spread_docs = docs.repartition(5, F.col("doc_id") % 2)
+    sizes = spread_docs.rdd.mapPartitions(lambda it: [sum(1 for _ in it)]).collect()
+    assert len(sizes) == 5 and 0 in sizes, sizes
+    for frame in (docs, spread_docs):
+        with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"}):
+            assert sorted(D.minhash_signatures(frame).collect()) == want_sig
+            assert sorted(D.minhash_frame(frame).select("doc_id", "sh").collect()) == want_sh
+
+
 def test_minhash_pairs_subset_of_exact_same_lang(spark, sf_dir):
     """MinHash+LSH verifies candidates with the SAME exact Jaccard: every
     same-lang surviving pair must appear in the exact lang-blocked join."""

@@ -5,8 +5,9 @@ All hashing is md5-derived (`hash60(s)` = first 15 hex chars of md5 as a
 60-bit bigint) so every stage — signatures, band keys, candidate pairs,
 verified pairs — is bit-identical between the Spark plan and the DuckDB
 oracle: the entire LSH pipeline is value-verified, not just row-counted.
-(`xxhash64` would be faster but engine-specific; swapping the hash is a
-one-line change in production.)
+(`xxhash64` would be faster but engine-specific; swapping the hash
+changes `hash60`, its SQL twin and the MinHash kernel in
+`arrowkernels._minhash`.)
 
 Scale design (the point of these operators at 100 TB):
 - exact dedup: one hash-aggregate on the fingerprint — no pairwise work;

@@ -98,7 +98,10 @@ def dedup_against_index(
     """Dedup a new batch against the STORED index: (new_doc_id,
     n_corpus_dups, best_jaccard) for every batch doc with at least one
     corpus near-dup at the shared JACCARD_THRESHOLD — the exact verdict
-    schema of ``q_incremental_dedup``, without recomputing the corpus."""
+    schema of ``q_incremental_dedup``, without recomputing the corpus.
+    The batch's kernel frame feeds both its band keys and its verify
+    leg, so it is cached via ``cache_tracked``: call ``release_caches()``
+    after the result's action."""
     bands_dir, sh_dir = _parts(index_dir)
     corpus_bands = spark.read.parquet(bands_dir).select(
         "band_id", "band_key", F.col("doc_id").alias("corpus_doc_id")

@@ -70,10 +70,12 @@ COMMENTARY: dict[str, str] = {
         "than by AQE rescue."
     ),
     "q_minhash_dedup": (
-        "Signature extraction is MAP-ONLY: one projection digests each "
-        "shingle once into a per-row hash array, a second computes all 16 "
-        "minhashes as array_min folds — no explode+groupBy exchange "
-        "anywhere before banding. LSH banding explodes to (band, bucket) "
+        "Signature extraction is MAP-ONLY: one Arrow pass "
+        "(PythonMapInArrow) builds each doc's distinct shingle set, "
+        "digests each shingle once and computes all 16 minhashes in "
+        "NumPy — no explode+groupBy exchange anywhere before banding; "
+        "the cached kernel frame feeds both banding and the verify joins. "
+        "LSH banding explodes to (band, bucket) "
         "keys and the candidate join is an equi join on those keys — "
         "candidate count, not corpus², drives the cost."
     ),
@@ -428,7 +430,7 @@ COMMENTARY: dict[str, str] = {
     "q_incremental_dedup": (
         "New-batch-vs-corpus dedup: the batch's MinHash band keys "
         "equi-join the corpus' band-key index (both sides filters over "
-        "one cached band frame here; in production the corpus side is the "
+        "one cached kernel frame here; in production the corpus side is the "
         "stored signature index), exact Jaccard verifies only the "
         "collisions. Corpus-internal pairs never recompute — cost is "
         "linear in the batch plus its true collisions, however large the "

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .batchmap import ColumnConfig, RetryConfig, batch_run
+from .plans.session import glob_escaped
 from .schema import CHECKPOINT_SCHEMA
 
 
@@ -37,7 +38,7 @@ def load_checkpoint(spark: SparkSession, path: str) -> DataFrame:
     """Read the checkpoint table; empty frame with the right schema if absent
     (reference background_retrieval.py:102-118)."""
     try:
-        df = spark.read.parquet(path)
+        df = spark.read.parquet(glob_escaped(path))
         missing = [f.name for f in CHECKPOINT_SCHEMA.fields if f.name not in df.columns]
         for name in missing:
             df = df.withColumn(name, F.lit(None).cast(dict(

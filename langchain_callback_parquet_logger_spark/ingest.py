@@ -35,6 +35,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .plans.session import glob_escaped
 from .schema import (
     CUSTOM_ID_DESC_PREFIX,
     CUSTOM_ID_PREFIX,
@@ -305,7 +306,7 @@ def read_log_dataset(spark: SparkSession, path: str) -> DataFrame:
     The reference reads the whole tree with pandas (README.md:218); Spark
     adds partition discovery and partition pruning on the `date=` dirs.
     """
-    return spark.read.parquet(path)
+    return spark.read.parquet(glob_escaped(path))
 
 
 def payload_field(payload: Column, json_path: str) -> Column:

@@ -684,6 +684,7 @@ def _transposed(M: np.ndarray) -> np.ndarray:
 
 
 _GRAM_BLOCK = 16384  # shingles per block of Python-level work in _minhash
+_MINHASH_BLOCK_BYTES = 4 << 20  # text bytes per _minhash call; a longer doc goes alone
 
 
 def _minhash(
@@ -713,8 +714,11 @@ def _minhash(
     shingles, which is the fixed part.  The signature step keeps one
     int64 temp as long as the distinct shingles and folds each family
     member into its output row in turn, never a (shingles x members)
-    matrix.  tests/test_kernel_cores.py asserts the traced peak at no
-    more than 1.5x the budget."""
+    matrix.  :func:`_minhash_batches` calls this on runs of at most
+    ``_MINHASH_BLOCK_BYTES`` text bytes, which bounds ``S``, ``B`` and
+    ``W`` by the run rather than by the batch's row count.
+    tests/test_kernel_cores.py asserts the traced peak at no more than
+    1.5x the budget."""
     n = len(lo)
     buf = np.frombuffer(data, dtype=np.uint8)
     spaces = np.flatnonzero(buf[lo[0] : hi[-1]] == 0x20) + lo[0]
@@ -770,21 +774,28 @@ def _minhash_budget(n: int, words: int, shingles: int, shingle_bytes: int) -> in
     return 72 * shingles + shingle_bytes + 24 * words + 48 * n + (2 << 20)
 
 
+def _offsets(col: pa.Array) -> np.ndarray:
+    """The ``len(col) + 1`` value offsets of a string column, as int64."""
+    width = np.int64 if pa.types.is_large_string(col.type) else np.int32
+    off = np.frombuffer(col.buffers()[1], dtype=width)
+    return off[col.offset : col.offset + len(col) + 1].astype(np.int64)
+
+
 def _text_ranges(col: pa.Array) -> tuple[bytes, np.ndarray, np.ndarray, np.ndarray]:
     """String column -> (data, lo, hi, valid): each row's UTF-8 byte
-    range in ``data``; a NULL row gets an empty range."""
-    bufs = col.buffers()
-    width = np.int64 if pa.types.is_large_string(col.type) else np.int32
-    off = np.frombuffer(bufs[1], dtype=width)[col.offset : col.offset + len(col) + 1]
-    off = off.astype(np.int64)
+    range in ``data``, which holds only the column's own rows; a NULL row
+    gets an empty range."""
+    off = _offsets(col)
     valid = (
         np.ones(len(col), dtype=bool)
         if col.null_count == 0
         else np.asarray(col.is_valid().to_numpy(zero_copy_only=False))
     )
+    chars = col.buffers()[2]
+    data = b"" if chars is None else chars[off[0] : off[-1]].to_pybytes()
+    off -= off[0]
     lo = off[:-1]
     hi = np.where(valid, off[1:], lo)
-    data = bufs[2].to_pybytes() if bufs[2] is not None else b""
     return data, lo, hi, valid
 
 
@@ -792,7 +803,9 @@ def _minhash_arrays(
     col: pa.Array, family: list[tuple[int, int]], p: int, k: int
 ) -> list[pa.Array]:
     """A non-empty string column -> [sh, s0, ..., s{m-1}]: decode, the
-    :func:`_minhash` core, encode; NULL text gets NULL members."""
+    :func:`_minhash` core, encode; NULL text gets NULL members.  Both
+    offset arrays are built as checked int32, so shingles past 2 GiB
+    raise instead of wrapping."""
     data, lo, hi, valid = _text_ranges(col)
     counts, distinct, sig = _minhash(data, lo, hi, family, p, k)
     lens = np.fromiter(map(len, distinct), dtype=np.int64, count=len(distinct))
@@ -800,7 +813,7 @@ def _minhash_arrays(
         pa.array(np.concatenate([[0], np.cumsum(counts)]), pa.int32()),
         pa.StringArray.from_buffers(
             len(distinct),
-            pa.py_buffer(np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)),
+            pa.array(np.concatenate([[0], np.cumsum(lens)]), pa.int32()).buffers()[1],
             pa.py_buffer(b"".join(distinct)),
         ),
     )
@@ -808,12 +821,33 @@ def _minhash_arrays(
     return [sh, *(pa.array(s, type=pa.int64(), mask=mask) for s in sig)]
 
 
+def _minhash_batches(
+    batch: pa.RecordBatch, id_col: str, family: list[tuple[int, int]], p: int, k: int
+) -> Iterator[pa.RecordBatch]:
+    """A non-empty (id, text) batch -> (id, sh, s0..s{m-1}) batches, one
+    per run of whole docs holding at most ``_MINHASH_BLOCK_BYTES`` text
+    bytes (a longer doc is a run by itself).  The core's peak and the
+    size of each ``sh`` string buffer then follow the run, not the
+    batch's row count."""
+    text = batch.column("text")
+    off = _offsets(text)
+    names = [id_col, "sh", *(f"s{j}" for j in range(len(family)))]
+    r0 = 0
+    while r0 < len(text):
+        r1 = int(np.searchsorted(off, off[r0] + _MINHASH_BLOCK_BYTES, side="right")) - 1
+        r1 = max(r1, r0 + 1)
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column(id_col).slice(r0, r1 - r0),
+                *_minhash_arrays(text.slice(r0, r1 - r0), family, p, k),
+            ],
+            names=names,
+        )
+        r0 = r1
+
+
 def minhash_shingle_frame(
-    df: DataFrame,
-    family: list[tuple[int, int]],
-    p: int,
-    k: int,
-    text_col: str = "text",
+    df: DataFrame, family: list[tuple[int, int]], p: int, k: int
 ) -> DataFrame:
     """(id, text) -> (id, sh array<string>, s0..s{m-1} bigint): each
     doc's distinct word k-gram shingles and its MinHash signature, in one
@@ -827,20 +861,16 @@ def minhash_shingle_frame(
     md5 bytes (the 15 hex digits ``dedup.hash60`` converts).  A NULL text
     gets ``sh = [""]``, as ``shingles(NULL)`` does, and NULL signature
     members."""
-    id_col, id_type = _id_column(df, text_col)
-    sig_names = [f"s{j}" for j in range(len(family))]
+    id_col, id_type = _id_column(df, "text")
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in _nonempty(batches):
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(id_col), *_minhash_arrays(batch.column(text_col), family, p, k)],
-                names=[id_col, "sh", *sig_names],
-            )
+            yield from _minhash_batches(batch, id_col, family, p, k)
 
     return df.mapInArrow(
         kernel,
         f"{id_col} {id_type}, sh array<string>, "
-        + ", ".join(f"{s} bigint" for s in sig_names),
+        + ", ".join(f"s{j} bigint" for j in range(len(family))),
     )
 
 

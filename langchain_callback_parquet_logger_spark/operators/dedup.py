@@ -546,8 +546,9 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFra
     multiset), so the DuckDB oracle is unchanged — pinned by
     tests/test_operators.py.
 
-    NULL-text docs are filtered out up front.  Note the subtlety: they
-    were NOT silently dropped by the old explode+groupBy form either —
+    NULL-text docs are dropped by :func:`signatures_of`.  Note the
+    subtlety: they were NOT silently dropped by the old explode+groupBy
+    form either —
     ``shingles(NULL)`` degrades to ``[""]`` (``greatest`` ignores the
     NULL size and ``concat_ws`` swallows the NULL slice), so BOTH forms
     historically gave null text the same signature as empty text.  That
@@ -559,7 +560,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFra
     (they are legitimate, if degenerate, exact duplicates of each
     other); corpora with many of them are covered by the skew guards
     (``WINNOW_MAX_DF``, ``q_key_skew_report``)."""
-    return minhash_frame(docs.filter(F.col("text").isNotNull()), num_hashes).drop("sh")
+    return signatures_of(minhash_frame(docs, num_hashes))
 
 
 def lsh_bands(sig: DataFrame, num_bands: int = NUM_BANDS, num_hashes: int = NUM_HASHES) -> DataFrame:

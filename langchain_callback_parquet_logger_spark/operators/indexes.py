@@ -30,7 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.session import cache_tracked, run_concurrently
+from ..plans.session import cache_tracked, glob_escaped, run_concurrently
 from .dedup import (
     JACCARD_THRESHOLD,
     jaccard,
@@ -103,10 +103,10 @@ def dedup_against_index(
     leg, so it is cached via ``cache_tracked``: call ``release_caches()``
     after the result's action."""
     bands_dir, sh_dir = _parts(index_dir)
-    corpus_bands = spark.read.parquet(bands_dir).select(
+    corpus_bands = spark.read.parquet(glob_escaped(bands_dir)).select(
         "band_id", "band_key", F.col("doc_id").alias("corpus_doc_id")
     )
-    corpus_sh = spark.read.parquet(sh_dir).select(
+    corpus_sh = spark.read.parquet(glob_escaped(sh_dir)).select(
         F.col("doc_id").alias("corpus_doc_id"), F.col("sh").alias("sh_c")
     )
     nb, nsh = _index_frames(cache_tracked(minhash_frame(new_docs)))
@@ -182,7 +182,7 @@ def _read_ann_planes(spark: SparkSession, index_dir: str) -> list[list[float]]:
 
     try:
         bits = (
-            spark.read.parquet(os.path.join(index_dir, ANN_META_SUBDIR))
+            spark.read.parquet(glob_escaped(os.path.join(index_dir, ANN_META_SUBDIR)))
             .first()
             .lsh_bits
         )
@@ -281,9 +281,9 @@ def knn_against_index(
     planes = _read_ann_planes(spark, index_dir)
     emb_dir = os.path.join(index_dir, ANN_EMB_SUBDIR)
     bands_dir = os.path.join(index_dir, ANN_BANDS_SUBDIR)
-    corpus_emb = spark.read.parquet(emb_dir)
+    corpus_emb = spark.read.parquet(glob_escaped(emb_dir))
     corpus_bands = (
-        _cap_buckets(spark.read.parquet(bands_dir))
+        _cap_buckets(spark.read.parquet(glob_escaped(bands_dir)))
         .join(corpus_emb, "vec_id")
         .select(
             F.col("vec_id").alias("nb_id"),
@@ -373,7 +373,7 @@ def _scratch_root() -> str:
 
 
 def _parquet_files(root: str) -> list[str]:
-    found = glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+    found = glob.glob(os.path.join(glob.escape(root), "**", "*.parquet"), recursive=True)
     return [p for p in found if os.path.isfile(p)]
 
 

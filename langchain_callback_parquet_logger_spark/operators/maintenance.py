@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.session import load_table, run_concurrently
+from ..plans.session import glob_escaped, load_table, run_concurrently
 from ..sinks import compact_logs, retain_partitions, write_log
 from .indexes import _parquet_files, _scratch_root
 
@@ -84,7 +84,7 @@ def q_log_compaction(
         spark, path, target_rows_per_file=COMPACT_TARGET_ROWS
     )
 
-    maintained = spark.read.parquet(path)
+    maintained = spark.read.parquet(glob_escaped(path))
     n_dates = maintained.select("date").distinct().count()
     out_files = _parquet_files(path)
     if not (len(out_files) <= n_files + n_dates):
@@ -188,7 +188,7 @@ def q_incremental_rollup(
     ).parquet(path)
 
     delta = partial(events.filter(is_delta))
-    stored = spark.read.parquet(path)
+    stored = spark.read.parquet(glob_escaped(path))
     touched = delta.select("log_date").distinct()
     # merge = re-aggregate the union of stored partials (touched dates
     # only — partition-pruned scan via the join on the partition column)
@@ -234,7 +234,7 @@ def q_incremental_rollup(
             f"{len(before)} files before vs {len(after)} after"
         )
 
-    view = spark.read.parquet(path)
+    view = spark.read.parquet(glob_escaped(path))
     return view.select(
         "user_id",
         "log_date",
@@ -396,7 +396,7 @@ def q_zorder_layout(
 
     vq = F.round(F.col("value") * 1e6).cast("bigint")
     return (
-        spark.read.parquet(zorder_dir)
+        spark.read.parquet(glob_escaped(zorder_dir))
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_events"),

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..plans.session import load_table
+from ..plans.session import glob_escaped, load_table
 
 # Event types present in the driver's synthetic `events` table; stands in for
 # the reference's event-type capture set (config.py:23-27).
@@ -769,14 +769,14 @@ def q_format_roundtrip(
         )
 
     from_json = rollup(
-        spark.read.schema(ddl).format("json").load(json_dir)
+        spark.read.schema(ddl).format("json").load(glob_escaped(json_dir))
     )
     from_csv = rollup(
         spark.read.schema(ddl)
         .format("csv")
         .option("header", "true")
         .option("escape", '"')
-        .load(csv_dir)
+        .load(glob_escaped(csv_dir))
     )
     if from_json.exceptAll(from_csv).count() != 0 or from_csv.exceptAll(
         from_json

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ingest import RAW_EVENT_DDL, RAW_EVENT_DDL_FLAT
+from ..plans.session import glob_escaped
 
 _FORMATS = ("json", "csv", "parquet")
 
@@ -53,4 +54,4 @@ def read_log(spark: SparkSession, path: str) -> DataFrame:
     """Scan a written log dataset (hive-partitioned parquet tree) with
     partition discovery — filters on the `date` partition column prune
     directories before any I/O."""
-    return spark.read.parquet(path)
+    return spark.read.parquet(glob_escaped(path))

@@ -30,6 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..ingest import RAW_EVENT_DDL, normalize_events
 from ..operators.queries import SESSION_GAP_US
+from ..plans.session import glob_escaped
 
 
 def read_event_stream(
@@ -270,8 +271,10 @@ def _table_stream(spark: SparkSession, sf_dir: str, name: str, **options) -> Dat
     path = table_path(sf_dir, name)
     reader = spark.readStream.schema(_parquet_schema(spark, path)).options(**options)
     if os.path.isdir(path):
-        return reader.parquet(path)
-    return reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
+        return reader.parquet(glob_escaped(path))
+    return reader.option("pathGlobFilter", f"{name}.parquet").parquet(
+        glob_escaped(sf_dir)
+    )
 
 
 def drain(spark: SparkSession, frame: DataFrame, name: str, mode: str) -> str:
@@ -517,7 +520,7 @@ def q_stream_incremental_dedup(
         if scratch:
             shutil.rmtree(out_dir, ignore_errors=True)
         return spark.createDataFrame([], verdict_schema)
-    verdicts = spark.read.schema(verdict_schema).parquet(*epoch_dirs)
+    verdicts = spark.read.schema(verdict_schema).parquet(*map(glob_escaped, epoch_dirs))
     if scratch:
         # Scratch sink: pin the (small, dup-count-sized) verdict frame
         # into executor block storage so the temp files can be removed

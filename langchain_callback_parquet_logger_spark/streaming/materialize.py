@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..plans.session import glob_escaped
+
 
 def _meta_path(table_path: str) -> str:
     return table_path.rstrip("/") + "._last_batch"
@@ -80,7 +82,7 @@ def merge_rollup_batch(
         F.count("*").alias("n"), F.sum(value_col).alias("total")
     )
     if os.path.exists(table_path):
-        existing = spark.read.parquet(table_path)
+        existing = spark.read.parquet(glob_escaped(table_path))
         merged = (
             existing.unionByName(delta)
             .groupBy(*keys)

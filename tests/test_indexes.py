@@ -4,6 +4,7 @@ appends must extend coverage without touching stored rows."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from langchain_callback_parquet_logger_spark.operators import dedup as D
@@ -138,6 +139,24 @@ def test_index_compaction_preserves_verdicts(spark, sf_dir, tmp_path):
     finally:
         release_caches()
     assert got == want and got
+
+
+@pytest.mark.parametrize("name", ["back\\slash x", "brack[et]", "brace{x}"])
+def test_index_lifecycle_under_a_glob_character_name(spark, sf_dir, tmp_path, name):
+    """Both stored indexes under a directory name holding a Hadoop glob
+    character: the dedup index is built, appended, compacted and served
+    with the recompute's verdicts, and the ANN index serves the rows it
+    serves from a plain directory."""
+    root = tmp_path / name
+    try:
+        got = _rows(I.q_index_compaction(spark, sf_dir, str(root / "dedup_index")))
+        want = _rows(D.q_incremental_dedup(spark, sf_dir))
+        knn = sorted(map(tuple, I.q_index_ann(spark, sf_dir, str(root / "ann")).collect()))
+        plain = I.q_index_ann(spark, sf_dir, str(tmp_path / "plain_ann")).collect()
+    finally:
+        release_caches()
+    assert got == want and got
+    assert knn == sorted(map(tuple, plain)) and knn
 
 
 def test_read_ann_planes_falls_back_to_narrow_for_pre_meta_index(

@@ -499,3 +499,29 @@ def test_minhash_core_stays_within_budget(texts):
     finally:
         tracemalloc.stop()
     assert peak <= 1.5 * budget, (peak, budget)
+
+
+def test_minhash_batches_split_into_runs_of_whole_docs(monkeypatch):
+    """With the run limit forced down to 12 text bytes, one batch comes
+    back as several output batches: each run stays under the limit
+    unless it is one longer doc, and the rows equal the reference."""
+    monkeypatch.setattr(K, "_MINHASH_BLOCK_BYTES", 12)
+    texts = [None, "a b", "a b c d e f g h", "", "x y z", None, "İ Σ 😀 a", "q"] * 3
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(texts)), pa.int64()), pa.array(texts, pa.string())],
+        names=["doc_id", "text"],
+    )
+    out = list(K._minhash_batches(batch.slice(1), "doc_id", FAMILY, P, DD.SHINGLE_SIZE))
+    assert len(out) > 3
+    for b in out:
+        size = sum(len((texts[i] or "").encode()) for i in b.column("doc_id").to_pylist())
+        assert b.num_rows == 1 or size <= 12
+    rows = [
+        (sh, None if r[0] is None else list(r))
+        for b in out
+        for sh, *r in zip(*(b.column(c).to_pylist() for c in b.schema.names[1:]))
+    ]
+    assert [i for b in out for i in b.column("doc_id").to_pylist()] == list(
+        range(1, len(texts))
+    )
+    assert rows == [_minhash_reference(t) for t in texts[1:]]

@@ -4,6 +4,7 @@ restart produces no duplicates; windowed agg runs with watermark."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -333,6 +334,48 @@ def test_stream_incremental_dedup_equals_batch_operator(spark, sf_dir):
     finally:
         release_caches()
     assert streamed == batch
+
+
+@pytest.mark.parametrize(
+    "name, layout",
+    [("back\\slash x", "file"), ("brack[et]", "directory"), ("brace{x}", "file")],
+)
+def test_stream_incremental_dedup_under_a_glob_character_name(
+    spark, sf_dir, tmp_path, name, layout
+):
+    """The documents table and the verdict sink under a directory name
+    holding a Hadoop glob character, in both table layouts the stream
+    reads: the drain gives the batch operator's verdicts."""
+    import shutil
+
+    from langchain_callback_parquet_logger_spark.operators.dedup import (
+        q_incremental_dedup,
+    )
+    from langchain_callback_parquet_logger_spark.plans.session import release_caches
+    from langchain_callback_parquet_logger_spark.streaming.ingest import (
+        q_stream_incremental_dedup,
+    )
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    root = tmp_path / name
+    dst = root / "documents.parquet"
+    if layout == "directory":
+        dst.mkdir(parents=True)
+        dst = dst / "part-0.parquet"
+    else:
+        root.mkdir()
+    shutil.copyfile(src, dst)
+    try:
+        streamed = {
+            tuple(r)
+            for r in q_stream_incremental_dedup(
+                spark, str(root), verdict_dir=str(root / "verdicts")
+            ).collect()
+        }
+        batch = {tuple(r) for r in q_incremental_dedup(spark, sf_dir).collect()}
+    finally:
+        release_caches()
+    assert streamed == batch and batch
 
 
 def test_stream_quality_monitor_equals_batch_rollup(spark, sf_dir):

@@ -546,20 +546,19 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFra
     multiset), so the DuckDB oracle is unchanged — pinned by
     tests/test_operators.py.
 
-    NULL-text docs are dropped by :func:`signatures_of`.  Note the
+    NULL-text docs are dropped by :func:`signatures_of`. Note the
     subtlety: they were NOT silently dropped by the old explode+groupBy
-    form either —
-    ``shingles(NULL)`` degrades to ``[""]`` (``greatest`` ignores the
-    NULL size and ``concat_ws`` swallows the NULL slice), so BOTH forms
-    historically gave null text the same signature as empty text.  That
-    is a skew hazard, not a semantics win: every content-free doc lands
-    in the SAME signature, hence the same band key in every band, and
-    the candidate self-join goes quadratic in the null-doc count.  A
-    doc with no content is not a dedup participant, so drop it here,
-    map-side (no shuffle added).  Empty-STRING docs still participate
-    (they are legitimate, if degenerate, exact duplicates of each
-    other); corpora with many of them are covered by the skew guards
-    (``WINNOW_MAX_DF``, ``q_key_skew_report``)."""
+    form either — ``shingles(NULL)`` degrades to ``[""]`` (``greatest``
+    ignores the NULL size and ``concat_ws`` swallows the NULL slice), so
+    BOTH forms historically gave null text the same signature as empty
+    text. That is a skew hazard, not a semantics win: every content-free
+    doc lands in the SAME signature, hence the same band key in every
+    band, and the candidate self-join goes quadratic in the null-doc
+    count. A doc with no content is not a dedup participant, so drop it
+    here, map-side (no shuffle added). Empty-STRING docs still
+    participate (they are legitimate, if degenerate, exact duplicates of
+    each other); corpora with many of them are covered by the skew
+    guards (``WINNOW_MAX_DF``, ``q_key_skew_report``)."""
     return signatures_of(minhash_frame(docs, num_hashes))
 
 

@@ -537,31 +537,6 @@ def signatures_of(frame: DataFrame) -> DataFrame:
     return frame.filter(F.col("s0").isNotNull()).drop("sh")
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """(doc_id, s0..s{n-1}): per-doc MinHash signature, MAP-ONLY — no
-    shuffle (at warehouse scale this removes a corpus-sized
-    explode+groupBy exchange that the round-8 shape paid).  Computed by
-    the Arrow kernel behind :func:`minhash_frame`; values are
-    bit-identical to the explode+groupBy form (min over the same
-    multiset), so the DuckDB oracle is unchanged — pinned by
-    tests/test_operators.py.
-
-    NULL-text docs are dropped by :func:`signatures_of`. Note the
-    subtlety: they were NOT silently dropped by the old explode+groupBy
-    form either — ``shingles(NULL)`` degrades to ``[""]`` (``greatest``
-    ignores the NULL size and ``concat_ws`` swallows the NULL slice), so
-    BOTH forms historically gave null text the same signature as empty
-    text. That is a skew hazard, not a semantics win: every content-free
-    doc lands in the SAME signature, hence the same band key in every
-    band, and the candidate self-join goes quadratic in the null-doc
-    count. A doc with no content is not a dedup participant, so drop it
-    here, map-side (no shuffle added). Empty-STRING docs still
-    participate (they are legitimate, if degenerate, exact duplicates of
-    each other); corpora with many of them are covered by the skew
-    guards (``WINNOW_MAX_DF``, ``q_key_skew_report``)."""
-    return signatures_of(minhash_frame(docs, num_hashes))
-
-
 def lsh_bands(sig: DataFrame, num_bands: int = NUM_BANDS, num_hashes: int = NUM_HASHES) -> DataFrame:
     """(doc_id, band_id, band_key): band key = md5 of the band's signature
     slice, joined on equality — candidate generation is an equi join."""
@@ -583,19 +558,18 @@ def lsh_bands(sig: DataFrame, num_bands: int = NUM_BANDS, num_hashes: int = NUM_
     return sig.select("doc_id", F.posexplode(bands).alias("band_id", "band_key"))
 
 
-def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    # One kernel frame holds the shingle sets and the signatures (one row
-    # per doc) and feeds the band self-join and both verify joins; caching
-    # it stops each of them from re-running the kernel (broadcast sides
-    # don't hit ReuseExchange). The block is registered for
-    # release_caches() — harnesses release after each query's action.
-    frame = cache_tracked(minhash_frame(docs))
-    sh = frame.select("doc_id", "sh")
-    bands = lsh_bands(signatures_of(frame))
+def index_tables(frame: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(bands(doc_id, band_id, band_key), shingles(doc_id, sh)) of one
+    :func:`minhash_frame`: the two tables of the stored dedup index, and
+    the two inputs every MinHash verdict is computed from."""
+    return lsh_bands(signatures_of(frame)), frame.select("doc_id", "sh")
 
+
+def candidate_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b), doc_a < doc_b, that share a band key: an
+    equi self-join on (band_id, band_key), never all-pairs."""
     b1, b2 = bands.alias("b1"), bands.alias("b2")
-    candidates = (
+    return (
         b1.join(
             b2,
             (F.col("b1.band_id") == F.col("b2.band_id"))
@@ -607,9 +581,16 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    verified = (
-        candidates.join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
+
+
+def verified_pairs(cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) of the candidate pairs whose exact
+    shingle-set Jaccard, rounded to 6 places, reaches JACCARD_THRESHOLD.
+    ``sh_a`` and ``sh_b`` are (doc_id, sh) tables holding the sets of
+    the doc_a and the doc_b side."""
+    return (
+        cand.join(sh_a.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")), "doc_a")
+        .join(sh_b.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")), "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -617,7 +598,48 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
-    return verified
+
+
+def dedup_against(
+    new_frame: DataFrame, corpus_bands: DataFrame, corpus_sh: DataFrame
+) -> DataFrame:
+    """The incremental near-dup verdict: (new_doc_id, n_corpus_dups,
+    best_jaccard) for every doc of ``new_frame`` (a :func:`minhash_frame`)
+    with at least one verified corpus near-dup.  ``corpus_bands`` and
+    ``corpus_sh`` are the corpus' :func:`index_tables`, computed in the
+    session or read from the stored index.  Only the new docs' band keys
+    probe the corpus, so corpus-internal pairs are never computed.
+    ``new_frame`` feeds both the band keys and the verify leg: callers
+    cache it."""
+    new_bands, new_sh = index_tables(new_frame)
+    cand = (
+        new_bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
+        .join(
+            corpus_bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key"),
+            ["band_id", "band_key"],
+        )
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+    return (
+        verified_pairs(cand, new_sh, corpus_sh)
+        .groupBy(F.col("doc_a").alias("new_doc_id"))
+        .agg(
+            F.count("*").alias("n_corpus_dups"),
+            F.max("jaccard").alias("best_jaccard"),
+        )
+    )
+
+
+def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    # One kernel frame holds the shingle sets and the signatures (one row
+    # per doc) and feeds the band self-join and both verify joins; caching
+    # it stops each of them from re-running the kernel (broadcast sides
+    # don't hit ReuseExchange). The block is registered for
+    # release_caches() — harnesses release after each query's action.
+    bands, sh = index_tables(cache_tracked(minhash_frame(docs)))
+    return verified_pairs(candidate_pairs(bands), sh, sh)
 
 
 def _minhash_bands_cte() -> str:
@@ -1130,8 +1152,8 @@ GROUP BY 1, 2
 # candidates. Corpus-internal pairs are NEVER recomputed; cost is linear
 # in the batch plus its true collisions, however big the corpus. (Here
 # both sides derive from one scan — doc_id % 10 == 0 plays the "new
-# batch"; in production the corpus side IS the stored signature index,
-# e.g. the lsh_bands output persisted by a prior run / checkpoint.)
+# batch"; the stored index (indexes.py) and the stream (streaming/
+# ingest.py) pass the same dedup_against their own corpus tables.)
 #
 # Output: one row per new doc that collides with the corpus at
 # JACCARD_THRESHOLD — the drop/keep list an ingest job applies.
@@ -1147,41 +1169,8 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # separately while scanning the corpus once. Cached: the kernel frame
     # feeds both band join sides and both verify legs.
     frame = cache_tracked(minhash_frame(docs))
-    sh = frame.select("doc_id", "sh")
-    bands = lsh_bands(signatures_of(frame))
     is_new = F.col("doc_id") % INCREMENTAL_BATCH_MOD == 0
-    nb, cb = bands.filter(is_new).alias("n"), bands.filter(~is_new).alias("c")
-    cand = (
-        nb.join(
-            cb,
-            (F.col("n.band_id") == F.col("c.band_id"))
-            & (F.col("n.band_key") == F.col("c.band_key")),
-        )
-        .select(
-            F.col("n.doc_id").alias("new_doc_id"),
-            F.col("c.doc_id").alias("corpus_doc_id"),
-        )
-        .distinct()
-    )
-    verified = (
-        cand.join(
-            sh.select(F.col("doc_id").alias("new_doc_id"), F.col("sh").alias("sh_n")),
-            "new_doc_id",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("corpus_doc_id"), F.col("sh").alias("sh_c")),
-            "corpus_doc_id",
-        )
-        .select(
-            "new_doc_id",
-            F.round(jaccard(F.col("sh_n"), F.col("sh_c")), 6).alias("j"),
-        )
-        .filter(F.col("j") >= JACCARD_THRESHOLD)
-    )
-    return verified.groupBy("new_doc_id").agg(
-        F.count("*").alias("n_corpus_dups"),
-        F.max("j").alias("best_jaccard"),
-    )
+    return dedup_against(frame.filter(is_new), *index_tables(frame.filter(~is_new)))
 
 
 def _oracle_incremental_dedup() -> str:
@@ -1490,22 +1479,9 @@ GROUP BY p.doc_id
 def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"))
     frame = cache_tracked(minhash_frame(docs))
-    sh = frame.select("doc_id", "sh")
+    bands, sh = index_tables(frame)
     sig = signatures_of(frame)
-    bands = lsh_bands(sig)
-    b1, b2 = bands.alias("b1"), bands.alias("b2")
-    candidates = (
-        b1.join(
-            b2,
-            (F.col("b1.band_id") == F.col("b2.band_id"))
-            & (F.col("b1.band_key") == F.col("b2.band_key"))
-            & (F.col("b1.doc_id") < F.col("b2.doc_id")),
-        )
-        .select(
-            F.col("b1.doc_id").alias("doc_a"), F.col("b2.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    candidates = candidate_pairs(bands)
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"s{j}").alias(f"a_s{j}") for j in range(NUM_HASHES)],

@@ -1,18 +1,17 @@
 """Materialized dedup index — the PRODUCTION shape of incremental dedup.
 
-``q_incremental_dedup`` (dedup.py) and the streaming variant both note
-that "in production the corpus side is the stored signature table";
-this module is that table's lifecycle: build the MinHash band index and
-shingle-set table ONCE as parquet, append each accepted ingest batch,
-and dedup every future batch against the STORED tables — the corpus is
-never re-shingled, never re-hashed.
+This module decides only where the corpus side of the MinHash verdict
+comes from: the two :func:`~.dedup.index_tables` (band keys and shingle
+sets) are built ONCE as parquet, each accepted ingest batch is
+appended, and every future batch is deduped against the STORED tables
+by :func:`~.dedup.dedup_against`, the verdict ``q_incremental_dedup``
+and the stream compute too.  The corpus is never re-shingled, never
+re-hashed.
 
 Scale: the stored band index is one row per (doc, band) and the shingle
 table one row per doc — both linear in corpus, partition-pruned parquet
 scans at read time. A batch dedup costs the batch's own signature scan
-plus an equi-join against the index on (band_id, band_key) (AQE decides
-strategy; the index side is corpus-sized, so no hard broadcast), then
-the exact-Jaccard verify on collisions only. Appends are plain parquet
+plus the verdict's joins against the index. Appends are plain parquet
 appends (one file set per batch); at warehouse scale the same layout is
 a table-format MERGE/append with compaction, which ``sinks.compact_logs``
 already models for the log table.
@@ -31,13 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.session import cache_tracked, glob_escaped, run_concurrently
-from .dedup import (
-    JACCARD_THRESHOLD,
-    jaccard,
-    lsh_bands,
-    minhash_frame,
-    signatures_of,
-)
+from .dedup import dedup_against, index_tables, minhash_frame
 
 BANDS_SUBDIR = "bands"
 SHINGLES_SUBDIR = "shingles"
@@ -53,12 +46,6 @@ def _parts(index_dir: str) -> tuple[str, str]:
     )
 
 
-def _index_frames(frame: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(band rows, shingle rows) of one cached :func:`~.dedup.minhash_frame`."""
-    bands = lsh_bands(signatures_of(frame)).select("doc_id", "band_id", "band_key")
-    return bands, frame.select("doc_id", "sh")
-
-
 def _write_index(docs: DataFrame, index_dir: str, mode: str) -> None:
     """Write both index tables of ``docs`` in ``mode``.  The band and
     shingle tables are independent outputs, so the two write jobs run
@@ -69,7 +56,7 @@ def _write_index(docs: DataFrame, index_dir: str, mode: str) -> None:
     bands_dir, sh_dir = _parts(index_dir)
     frame = minhash_frame(docs).persist()
     try:
-        bands, sh = _index_frames(frame)
+        bands, sh = index_tables(frame)
         run_concurrently(
             lambda: bands.write.mode(mode).parquet(bands_dir),
             lambda: sh.write.mode(mode).parquet(sh_dir),
@@ -95,44 +82,16 @@ def append_to_dedup_index(docs: DataFrame, index_dir: str) -> None:
 def dedup_against_index(
     spark: SparkSession, index_dir: str, new_docs: DataFrame
 ) -> DataFrame:
-    """Dedup a new batch against the STORED index: (new_doc_id,
-    n_corpus_dups, best_jaccard) for every batch doc with at least one
-    corpus near-dup at the shared JACCARD_THRESHOLD — the exact verdict
-    schema of ``q_incremental_dedup``, without recomputing the corpus.
-    The batch's kernel frame feeds both its band keys and its verify
-    leg, so it is cached via ``cache_tracked``: call ``release_caches()``
-    after the result's action."""
+    """:func:`~.dedup.dedup_against` a new batch of (doc_id, text) with
+    the STORED index tables as its corpus side, so the corpus is never
+    recomputed.  The batch's kernel frame is cached via
+    ``cache_tracked``: call ``release_caches()`` after the result's
+    action."""
     bands_dir, sh_dir = _parts(index_dir)
-    corpus_bands = spark.read.parquet(glob_escaped(bands_dir)).select(
-        "band_id", "band_key", F.col("doc_id").alias("corpus_doc_id")
-    )
-    corpus_sh = spark.read.parquet(glob_escaped(sh_dir)).select(
-        F.col("doc_id").alias("corpus_doc_id"), F.col("sh").alias("sh_c")
-    )
-    nb, nsh = _index_frames(cache_tracked(minhash_frame(new_docs)))
-    cand = (
-        nb.select("band_id", "band_key", F.col("doc_id").alias("new_doc_id"))
-        .join(corpus_bands, ["band_id", "band_key"])
-        .select("new_doc_id", "corpus_doc_id")
-        .distinct()
-    )
-    verified = (
-        cand.join(
-            nsh.select(
-                F.col("doc_id").alias("new_doc_id"), F.col("sh").alias("sh_n")
-            ),
-            "new_doc_id",
-        )
-        .join(corpus_sh, "corpus_doc_id")
-        .select(
-            "new_doc_id",
-            F.round(jaccard(F.col("sh_n"), F.col("sh_c")), 6).alias("j"),
-        )
-        .filter(F.col("j") >= JACCARD_THRESHOLD)
-    )
-    return verified.groupBy("new_doc_id").agg(
-        F.count("*").alias("n_corpus_dups"),
-        F.max("j").alias("best_jaccard"),
+    return dedup_against(
+        cache_tracked(minhash_frame(new_docs)),
+        spark.read.parquet(glob_escaped(bands_dir)),
+        spark.read.parquet(glob_escaped(sh_dir)),
     )
 
 
@@ -270,13 +229,11 @@ def knn_against_index(
     The re-rank is band-bucket-LOCAL, mirroring q_ann_join's
     ``_lsh_scored_pairs`` shape: both sides attach their vector payload
     to their band rows (one id-equi-join each, corpus- and batch-sized),
-    sim_q projects inside the band join, and the distinct runs on
-    (ids, sim_q) — the candidates-then-re-join shape this replaces
-    shuffles a |candidates| x vector-width intermediate, the spill that
-    killed the embedding family at the round-11 sf1 audit."""
-    from pyspark.sql import Window as W
-
-    from .similarity import _cap_buckets
+    scoring runs inside the band join, and the distinct runs on the
+    scored (ids, sim_raw) rows — the candidates-then-re-join shape this
+    replaces shuffles a |candidates| x vector-width intermediate, the
+    spill that killed the embedding family at the round-11 sf1 audit."""
+    from .similarity import _cap_buckets, _top_k_neighbours
 
     planes = _read_ann_planes(spark, index_dir)
     emb_dir = os.path.join(index_dir, ANN_EMB_SUBDIR)
@@ -286,7 +243,7 @@ def knn_against_index(
         _cap_buckets(spark.read.parquet(glob_escaped(bands_dir)))
         .join(corpus_emb, "vec_id")
         .select(
-            F.col("vec_id").alias("nb_id"),
+            F.col("vec_id").alias("vec_b"),
             "band_idx",
             "band_val",
             F.col("emb").alias("emb_b"),
@@ -300,7 +257,7 @@ def knn_against_index(
         queries.withColumnRenamed("query_id", "vec_id"), planes
     )
     probe_bands = q_bands.join(q_emb, "vec_id").select(
-        F.col("vec_id").alias("query_id"),
+        F.col("vec_id").alias("vec_a"),
         "band_idx",
         "band_val",
         F.col("emb").alias("emb_a"),
@@ -311,38 +268,10 @@ def knn_against_index(
     # arrowkernels.pair_score_frame); quantization stays JVM-side.
     from .arrowkernels import pair_score_frame
 
-    pairs = (
-        probe_bands.join(corpus_bands, ["band_idx", "band_val"])
-        .filter(F.col("query_id") != F.col("nb_id"))
-        .select(
-            F.col("query_id").alias("vec_a"),
-            F.col("nb_id").alias("vec_b"),
-            "emb_a",
-            "nrm_a",
-            "emb_b",
-            "nrm_b",
-        )
+    pairs = probe_bands.join(corpus_bands, ["band_idx", "band_val"]).filter(
+        F.col("vec_a") != F.col("vec_b")
     )
-    scored = (
-        pair_score_frame(pairs)
-        .select(
-            F.col("vec_a").alias("query_id"),
-            F.col("vec_b").alias("nb_id"),
-            F.round(F.col("sim_raw") * F.lit(1e6)).cast("bigint").alias("sim_q"),
-        )
-        .distinct()
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("sim_q").desc(), F.col("nb_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "nb_id",
-            "rank",
-            F.round(F.col("sim_q") / 1e6, 6).alias("sim"),
-        )
-    )
+    return _top_k_neighbours(pair_score_frame(pairs).distinct(), "query_id", k)
 
 
 # ---------------------------------------------------------------------------

@@ -217,12 +217,9 @@ def q_incremental_rollup(
         for p in _parquet_files(path)
         if _partition_of(p, path) not in touched_dates
     }
-    from ..plans.session import scoped_conf
-
-    with scoped_conf(
-        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-    ):
-        merged.write.mode("overwrite").partitionBy("log_date").parquet(path)
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("log_date").parquet(path)
     after = {
         p
         for p in _parquet_files(path)

@@ -1450,27 +1450,34 @@ FROM v GROUP BY label
 ANN_JOIN_K = 3
 
 
-def q_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Rank on a 1e-6 fixed-point BIGINT (not the rounded double): a ≤1-ulp
-    # sqrt/dot divergence between the JVM and DuckDB's libm near a 0.5e-6
-    # rounding boundary could otherwise flip the top-K cutoff cross-engine
-    # — same contract as q_pmi_collocations/q_doc_keywords; the displayed
-    # sim derives FROM the quantized value so order and display agree.
-    # Scoring is band-bucket-local (_lsh_scored_pairs): sim_q is
-    # projected inside the band join and the distinct runs on (ids,
-    # sim_q) — nothing vector-width ever shuffles past the band frame.
-    scored = _scored_pair_frame(spark, sf_dir, symmetric=True).select(
-        F.col("vec_a").alias("vec_id"),
+def _top_k_neighbours(scored: DataFrame, key: str, k: int) -> DataFrame:
+    """(key, nb_id, rank, sim): each vec_a of ``scored`` (unique
+    (vec_a, vec_b, sim_raw) pairs), named ``key``, with its ``k``
+    most similar vec_b, named nb_id.
+
+    Ranks on a 1e-6 fixed-point BIGINT (not the rounded double): a ≤1-ulp
+    sqrt/dot divergence between the JVM and DuckDB's libm near a 0.5e-6
+    rounding boundary could otherwise flip the top-K cutoff cross-engine
+    — same contract as q_pmi_collocations/q_doc_keywords; the displayed
+    sim derives FROM the quantized value so order and display agree."""
+    ranked = scored.select(
+        F.col("vec_a").alias(key),
         F.col("vec_b").alias("nb_id"),
         F.round(F.col("sim_raw") * F.lit(1e6)).cast("bigint").alias("sim_q"),
     )
-    w = W.partitionBy("vec_id").orderBy(F.col("sim_q").desc(), F.col("nb_id").asc())
+    w = W.partitionBy(key).orderBy(F.col("sim_q").desc(), F.col("nb_id").asc())
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= ANN_JOIN_K)
-        .select(
-            "vec_id", "nb_id", "rank", F.round(F.col("sim_q") / 1e6, 6).alias("sim")
-        )
+        ranked.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(key, "nb_id", "rank", F.round(F.col("sim_q") / 1e6, 6).alias("sim"))
+    )
+
+
+def q_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Scoring is band-bucket-local (_lsh_scored_pairs): nothing
+    # vector-width ever shuffles past the band frame.
+    return _top_k_neighbours(
+        _scored_pair_frame(spark, sf_dir, symmetric=True), "vec_id", ANN_JOIN_K
     )
 
 

@@ -401,10 +401,11 @@ def q_stream_incremental_dedup(
 ) -> DataFrame:
     """STREAM-STATIC incremental dedup — the live-ingest form of
     operators/dedup.q_incremental_dedup: documents arrive as a file
-    stream, and each micro-batch is deduped against the STATIC corpus
-    LSH band index via foreachBatch (batch-side MinHash signatures for
-    the arriving docs, equi-join on (band_id, band_key) against the
-    cached index, exact-Jaccard verify, append verdicts to the sink).
+    stream, and each micro-batch's new docs go through the same
+    :func:`~..operators.dedup.dedup_against`, with the STATIC corpus'
+    :func:`~..operators.dedup.index_tables` (computed once and cached)
+    as its corpus side, via foreachBatch; each epoch's verdicts are
+    appended to the sink.
 
     ``verdict_dir`` is the sink location for the per-epoch verdict
     tables. On a cluster it MUST be shared storage (s3a://, hdfs://, a
@@ -416,7 +417,7 @@ def q_stream_incremental_dedup(
     so the returned DataFrame never depends on the deleted files.
 
     Scale: the static index is computed ONCE (cached, in production the
-    stored signature table) and every micro-batch pays only its own
+    stored index tables) and every micro-batch pays only its own
     signature scan plus collisions — ingest-rate work, corpus-size state
     never rebuilt. The availableNow drain replays the whole table, making
     the result exactly the batch operator's output, so it carries the
@@ -430,27 +431,18 @@ def q_stream_incremental_dedup(
 
     from ..operators.dedup import (
         INCREMENTAL_BATCH_MOD,
-        JACCARD_THRESHOLD,
-        jaccard,
-        lsh_bands,
+        dedup_against,
+        index_tables,
         minhash_frame,
-        signatures_of,
     )
     from ..plans.session import cache_tracked, load_table, scoped_conf
 
     docs = load_table(spark, sf_dir, "documents")  # also pins oracle confs
     is_new = F.col("doc_id") % INCREMENTAL_BATCH_MOD == 0
-    corpus = docs.filter(~is_new)
     # Static side, computed once and cached: the corpus' kernel frame,
-    # read as its band index and its shingle sets (in production: the
-    # stored index tables).
-    corpus_frame = cache_tracked(minhash_frame(corpus))
-    corpus_bands = lsh_bands(signatures_of(corpus_frame)).select(
-        "band_id", "band_key", F.col("doc_id").alias("corpus_doc_id")
-    )
-    corpus_sh = corpus_frame.select(
-        F.col("doc_id").alias("corpus_doc_id"), F.col("sh").alias("sh_c")
-    )
+    # read as its two index tables.
+    corpus_frame = cache_tracked(minhash_frame(docs.filter(~is_new)))
+    corpus_bands, corpus_sh = index_tables(corpus_frame)
 
     src = _table_stream(spark, sf_dir, "documents", maxFilesPerTrigger="1")
 
@@ -464,43 +456,18 @@ def q_stream_incremental_dedup(
     out_dir = (
         tempfile.mkdtemp(prefix="stream_dedup_verdicts_") if scratch else verdict_dir
     )
-    verdict_schema = "new_doc_id bigint, n_corpus_dups bigint, best_jaccard double"
+    # The sink is read back with the verdict's own schema, taken from
+    # the lazy plan (no job runs); zero epoch paths read as no rows.
+    verdict_schema = dedup_against(corpus_frame, corpus_bands, corpus_sh).schema
 
     def _dedup_batch(batch_df: BatchDF, epoch_id: int) -> None:
         # the batch's kernel frame feeds its band keys and its verify
         # leg: cached for this epoch's write only
         new_frame = minhash_frame(batch_df.filter(is_new)).persist()
-        nb = lsh_bands(signatures_of(new_frame)).select(
-            "band_id", "band_key", F.col("doc_id").alias("new_doc_id")
-        )
-        cand = (
-            nb.join(corpus_bands, ["band_id", "band_key"])
-            .select("new_doc_id", "corpus_doc_id")
-            .distinct()
-        )
-        verified = (
-            cand.join(
-                new_frame.select(
-                    F.col("doc_id").alias("new_doc_id"), F.col("sh").alias("sh_n")
-                ),
-                "new_doc_id",
-            )
-            .join(corpus_sh, "corpus_doc_id")
-            .select(
-                "new_doc_id",
-                F.round(jaccard(F.col("sh_n"), F.col("sh_c")), 6).alias("j"),
-            )
-            .filter(F.col("j") >= JACCARD_THRESHOLD)
-            .groupBy("new_doc_id")
-            .agg(
-                F.count("*").alias("n_corpus_dups"),
-                F.max("j").alias("best_jaccard"),
-            )
-        )
         try:
-            verified.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"epoch={int(epoch_id)}")
-            )
+            dedup_against(new_frame, corpus_bands, corpus_sh).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(out_dir, f"epoch={int(epoch_id)}"))
         finally:
             new_frame.unpersist()
 
@@ -516,10 +483,6 @@ def q_stream_incremental_dedup(
         for d in sorted(os.listdir(out_dir))
         if d.startswith("epoch=")
     ]
-    if not epoch_dirs:  # zero micro-batches fired (empty source)
-        if scratch:
-            shutil.rmtree(out_dir, ignore_errors=True)
-        return spark.createDataFrame([], verdict_schema)
     verdicts = spark.read.schema(verdict_schema).parquet(*map(glob_escaped, epoch_dirs))
     if scratch:
         # Scratch sink: pin the (small, dup-count-sized) verdict frame

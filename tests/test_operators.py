@@ -66,7 +66,7 @@ def test_minhash_signatures_map_only_form_equals_groupby_reference(spark, sf_dir
     NULL-text policy (round-10): shingles(NULL) degrades to [""], so
     the old explode+groupBy form did NOT drop null docs — it gave them
     the empty-string signature, putting every content-free doc in the
-    same LSH bucket (quadratic candidate hazard).  minhash_signatures
+    same LSH bucket (quadratic candidate hazard).  ``signatures_of``
     now filters NULL text up front; the reference form here filters the
     same way, and a separate assert pins that null docs are absent."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").union(
@@ -89,7 +89,7 @@ def test_minhash_signatures_map_only_form_equals_groupby_reference(spark, sf_dir
             for j, (a, b) in enumerate(D.HASH_FAMILY[: D.NUM_HASHES])
         ]
     )
-    got = D.minhash_signatures(docs)
+    got = D.signatures_of(D.minhash_frame(docs))
     assert got.exceptAll(reference).count() == 0
     assert reference.exceptAll(got).count() == 0
     # NULL-text doc dropped; empty-string doc kept (degenerate but valid)
@@ -134,7 +134,7 @@ def test_minhash_kernel_batching_and_partitions_equal_groupby_reference(spark, s
     assert len(sizes) == 5 and 0 in sizes, sizes
     for frame in (docs, spread_docs):
         with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"}):
-            assert sorted(D.minhash_signatures(frame).collect()) == want_sig
+            assert sorted(D.signatures_of(D.minhash_frame(frame)).collect()) == want_sig
             assert sorted(D.minhash_frame(frame).select("doc_id", "sh").collect()) == want_sh
 
 

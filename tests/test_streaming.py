@@ -378,6 +378,78 @@ def test_stream_incremental_dedup_under_a_glob_character_name(
     assert streamed == batch and batch
 
 
+def _split_documents(sf_dir, root, n_parts: int) -> None:
+    """``root/documents.parquet/`` as ``n_parts`` part files (the directory
+    layout the stream reads one file per trigger from); ``n_parts=0``
+    writes one part with the schema and no rows."""
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    out = root / "documents.parquet"
+    out.mkdir(parents=True)
+    if n_parts == 0:
+        pq.write_table(table.slice(0, 0), out / "part-0.parquet")
+        return
+    step = -(-table.num_rows // n_parts)
+    for i in range(n_parts):
+        pq.write_table(table.slice(i * step, step), out / f"part-{i}.parquet")
+
+
+def test_stream_incremental_dedup_drains_many_epochs(spark, sf_dir, tmp_path):
+    """Documents in 3 part files drain as at least 3 micro-batches, one
+    ``epoch=`` verdict table each, and their union is the batch
+    operator's verdicts."""
+    from langchain_callback_parquet_logger_spark.operators.dedup import (
+        q_incremental_dedup,
+    )
+    from langchain_callback_parquet_logger_spark.plans.session import release_caches
+    from langchain_callback_parquet_logger_spark.streaming.ingest import (
+        q_stream_incremental_dedup,
+    )
+
+    _split_documents(sf_dir, tmp_path / "docs", 3)
+    verdict_dir = tmp_path / "verdicts"
+    try:
+        streamed = sorted(
+            tuple(r)
+            for r in q_stream_incremental_dedup(
+                spark, str(tmp_path / "docs"), verdict_dir=str(verdict_dir)
+            ).collect()
+        )
+        batch = sorted(tuple(r) for r in q_incremental_dedup(spark, sf_dir).collect())
+    finally:
+        release_caches()
+    epochs = [d for d in os.listdir(verdict_dir) if d.startswith("epoch=")]
+    assert len(epochs) >= 3, epochs
+    assert streamed == batch and batch
+
+
+@pytest.mark.parametrize("n_parts", [1, 0])
+def test_stream_incremental_dedup_schema_is_the_batch_schema(
+    spark, sf_dir, tmp_path, n_parts
+):
+    """The stream's verdict columns and types are ``q_incremental_dedup``'s,
+    over the documents table and over an empty one.  Nullability is not
+    compared: Spark reads every parquet column back as nullable, and the
+    stream's verdicts come back from its parquet sink."""
+    from langchain_callback_parquet_logger_spark.operators.dedup import (
+        q_incremental_dedup,
+    )
+    from langchain_callback_parquet_logger_spark.plans.session import release_caches
+    from langchain_callback_parquet_logger_spark.streaming.ingest import (
+        q_stream_incremental_dedup,
+    )
+
+    root = tmp_path / "docs"
+    _split_documents(sf_dir, root, n_parts)
+    try:
+        got = q_stream_incremental_dedup(spark, str(root)).schema
+        want = q_incremental_dedup(spark, str(root)).schema
+    finally:
+        release_caches()
+    assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in want]
+
+
 def test_stream_quality_monitor_equals_batch_rollup(spark, sf_dir):
     """The availableNow drain of the streaming DQ monitor must equal the
     batch per-hour rollup computed directly — the exactly-once claim the

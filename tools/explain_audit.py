@@ -430,9 +430,10 @@ COMMENTARY: dict[str, str] = {
     "q_incremental_dedup": (
         "New-batch-vs-corpus dedup: the batch's MinHash band keys "
         "equi-join the corpus' band-key index (both sides filters over "
-        "one cached kernel frame here; in production the corpus side is the "
-        "stored signature index), exact Jaccard verifies only the "
-        "collisions. Corpus-internal pairs never recompute — cost is "
+        "one cached kernel frame here; the stored index and the stream "
+        "call the same dedup_against on their own corpus tables), exact "
+        "Jaccard verifies only the collisions. Corpus-internal pairs "
+        "never recompute — cost is "
         "linear in the batch plus its true collisions, however large the "
         "corpus."
     ),

@@ -50,7 +50,10 @@ from __future__ import annotations
 import atexit
 import datetime as dt
 import json
+import logging
+import signal
 import threading
+import weakref
 from collections import abc
 from typing import Any, Iterable, Literal, Mapping, Sequence
 
@@ -59,6 +62,45 @@ from pyspark.sql import SparkSession
 from .ingest import normalize_rows, session_zone
 from .schema import DEFAULT_EVENT_TYPES
 from .sinks import CompositeSink, ParquetSink, create_sink
+
+_log = logging.getLogger(__name__)
+
+# Every logger not yet closed by ``__exit__``. The process's exit paths
+# flush them: one atexit hook, and a SIGTERM hook (see _on_sigterm). A
+# weak set does not keep a dropped logger alive.
+_OPEN: weakref.WeakSet[SparkParquetLogger] = weakref.WeakSet()
+
+
+def _flush_open() -> None:
+    for lg in list(_OPEN):
+        try:
+            lg.flush()
+        except Exception:  # noqa: BLE001 — the next logger still flushes
+            _log.exception("flush at exit failed")
+
+
+def _on_sigterm(signum: int, frame: Any) -> None:
+    """Flush every open logger, then end the process as SIGTERM's default
+    action would: restore SIG_DFL and raise the signal again."""
+    _flush_open()
+    signal.signal(signum, signal.SIG_DFL)
+    signal.raise_signal(signum)
+
+
+def _track(lg: SparkParquetLogger) -> None:
+    """Add ``lg`` to the loggers the exit paths flush. The SIGTERM hook is
+    installed from the main thread (the only one that may) while SIGTERM
+    still has its default action, which ends the process without atexit;
+    an application's own handler is left alone."""
+    _OPEN.add(lg)
+    if (
+        threading.current_thread() is threading.main_thread()
+        and signal.getsignal(signal.SIGTERM) == signal.SIG_DFL
+    ):
+        signal.signal(signal.SIGTERM, _on_sigterm)
+
+
+atexit.register(_flush_open)
 
 
 # The JSON scalars, which conversion returns as they are.
@@ -212,8 +254,10 @@ class SparkParquetLogger:
         # the first use: make it now.
         normalize_rows([], self._zone)
         self._buffer: list[tuple] = []
-        self._lock = threading.Lock()
-        atexit.register(self.flush)
+        # reentrant: the SIGTERM hook flushes on the main thread, which
+        # the signal may have interrupted inside this lock
+        self._lock = threading.RLock()
+        _track(self)
 
     # -- core capture ------------------------------------------------------
 
@@ -281,6 +325,12 @@ class SparkParquetLogger:
         )
         self.sink.write(table)
 
+    def __del__(self) -> None:
+        # the exit hooks hold a logger weakly: one dropped with rows in
+        # its buffer writes them now
+        if getattr(self, "_buffer", None):
+            self.flush()
+
     def __enter__(self) -> "SparkParquetLogger":
         return self
 
@@ -288,9 +338,7 @@ class SparkParquetLogger:
         try:
             self.flush()
         finally:
-            # the atexit hook would keep this logger and its sink alive
-            # until the interpreter exits
-            atexit.unregister(self.flush)
+            _OPEN.discard(self)
 
     # -- the 12 LangChain handlers (reference logger.py:252-415) -----------
     # Each converts its arguments once, and only for a captured event type.

@@ -131,6 +131,29 @@ def _fold_dot_panel(P: np.ndarray, MTc: np.ndarray) -> np.ndarray:
 _EINSUM_SEQ_OK: bool | None = None
 
 
+def _einsum_is_fold() -> bool:
+    """Whether ``einsum('pd,dn->pn')`` gives the fold's bits on this NumPy
+    build, checked at d = 64 (the embedding width) on the panel shapes
+    the kernels feed it: blocks of 1, 7, 64 and 300 rows; column views
+    into a wider matrix, as the probe's chunks are, among them chunk
+    tails of 1 and 1023 columns; and a whole C-contiguous plane matrix,
+    as the band signatures use."""
+    rng = np.random.default_rng(0xC0FFEE)
+    wide = np.ascontiguousarray(rng.standard_normal((64, 1500)))
+    planes = np.ascontiguousarray(rng.standard_normal((64, 32)))
+    for rows, MTc in (
+        (1, wide[:, 3:1003]),
+        (7, wide[:, 1499:]),
+        (64, wide[:, 257:1280]),
+        (300, planes),
+    ):
+        P = rng.standard_normal((rows, 64))
+        got = np.einsum("pd,dn->pn", P, MTc, optimize=False)
+        if not (got.view(np.int64) == _fold_dot_panel(P, MTc).view(np.int64)).all():
+            return False
+    return True
+
+
 def _seq_dot_panel(P: np.ndarray, MTc: np.ndarray) -> np.ndarray:
     """The fold panel, computed by ``einsum('pd,dn->pn')`` when safe.
 
@@ -143,21 +166,15 @@ def _seq_dot_panel(P: np.ndarray, MTc: np.ndarray) -> np.ndarray:
     this NumPy build, NOT an API guarantee (the 'nd,nd->n' form, where
     the reduction IS the contiguous inner axis, takes an unrolled
     multi-accumulator path and is NOT bit-identical) — so the first
-    call in each worker process PROVES the property on a small random
-    panel and the kernel falls back to the explicit fold if the build
-    ever changes.  tests/test_kernel_cores.py proves both arms per shape
-    class, and the Spark-level pins in tests/test_arrowkernels.py stay
-    the end-to-end guarantee either way."""
+    call in each worker process PROVES the property on the production
+    panel shapes (:func:`_einsum_is_fold`) and the kernel falls back to
+    the explicit fold if the build ever changes.
+    tests/test_kernel_cores.py proves both arms per shape class, and the
+    Spark-level pins in tests/test_arrowkernels.py stay the end-to-end
+    guarantee either way."""
     global _EINSUM_SEQ_OK
     if _EINSUM_SEQ_OK is None:
-        rng = np.random.default_rng(0xC0FFEE)
-        tp = rng.standard_normal((3, 64))
-        tm = np.ascontiguousarray(rng.standard_normal((64, 257)))
-        want = _fold_dot_panel(tp, tm[:, 3:250])
-        got = np.einsum("pd,dn->pn", tp, tm[:, 3:250], optimize=False)
-        _EINSUM_SEQ_OK = bool(
-            (got.view(np.int64) == want.view(np.int64)).all()
-        )
+        _EINSUM_SEQ_OK = _einsum_is_fold()
     if (
         _EINSUM_SEQ_OK
         # the property is proven for THIS operand layout only: output

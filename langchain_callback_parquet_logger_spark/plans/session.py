@@ -28,26 +28,61 @@ TABLES = [
 ]
 
 
+# A file:// FileSystem that sets mode bits in process: without libhadoop,
+# Hadoop's own one forks ``chmod`` once per file, .crc file and directory it
+# creates (source and build notes in jvm/ForkFreeLocalFs.java).
+_LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jvm", "localfs.jar"
+)
+_LOCAL_FS = "langchain_callback_parquet_logger_spark.jvm.ForkFreeLocalFs"
+
+
+def _fork_free_local_fs(conf: dict[str, str]) -> dict[str, str]:
+    """The confs that install the fork-free ``file://`` in a session.
+
+    Launches the JVM with ``conf`` and the jar on its class path when no
+    JVM runs yet. Returns no conf for a JVM started before (by other code,
+    whose file system stays as it is) or one that cannot load the class
+    (a user's ``--driver-class-path`` replaced the jar's): that JVM keeps
+    Hadoop's own ``file://``."""
+    from pyspark import SparkConf, SparkContext
+
+    if SparkContext._gateway is not None:
+        return {}
+    cp = {"spark.driver.extraClassPath": _LOCAL_FS_JAR}
+    SparkContext._ensure_initialized(conf=SparkConf().setAll({**conf, **cp}.items()))
+    try:
+        SparkContext._jvm.java.lang.Class.forName(_LOCAL_FS)
+    except Exception:  # noqa: BLE001 — py4j's wrapped ClassNotFoundException
+        return {}
+    return {
+        **cp,
+        "spark.hadoop.fs.file.impl": _LOCAL_FS + "$Checksummed",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": _LOCAL_FS + "$Context",
+    }
+
+
 def get_spark(app_name: str = "langchain-callback-parquet-logger-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "snappy")
+    conf = {
+        "spark.master": f"local[{cpus}]",
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(max(int(cpus), 8)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.compression.codec": "snappy",
         # The driver testdata stores events.ts as parquet TIMESTAMP(NANOS),
         # which vanilla Spark rejects (PARQUET_TYPE_ILLEGAL). Read it as
         # nanos-since-epoch LongType and convert in load_table.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-    )
-    spark = builder.getOrCreate()
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    }
+    conf.update(_fork_free_local_fs(conf))
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -128,8 +163,11 @@ def _data_files(spark: SparkSession, path: str) -> tuple:
     skips: names led by ``.``, or by ``_`` without a ``=``, and names
     ending in ``._COPYING_`` (a ``hadoop fs -put`` in flight).
     ``listFiles`` would walk the tree in one call, but on the local file
-    system each status it returns loads the file's owner and permissions
-    (5.9 ms a file against 1.1 ms, 4-core host)."""
+    system each status it returns asks for the file's owner and mode
+    bits, and without libhadoop Hadoop's ``DeprecatedRawLocalFileStatus``
+    forks an ``ls -ld`` for them (5.9 ms a file against 1.1 ms, 4-core
+    host). The fork-free ``file://`` of :func:`get_spark` does not cover
+    that fork."""
     hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     files, todo = [], [hpath]

@@ -114,6 +114,20 @@ def test_seq_dot_panel_bit_identical_to_fold(panel_arm, block):
         assert K._EINSUM_SEQ_OK is not None
 
 
+def test_einsum_proof_rejects_another_summation_order(monkeypatch):
+    """The per-worker proof runs at the embedding width, and a build whose
+    einsum sums in another order (here BLAS matmul) fails it, so its
+    panels take the explicit fold."""
+    assert D == 64
+    monkeypatch.setattr(np, "einsum", lambda spec, a, b, optimize: a @ b)
+    monkeypatch.setattr(K, "_EINSUM_SEQ_OK", None)
+    assert not K._einsum_is_fold()
+    rng = np.random.default_rng(7)
+    P, MT = rng.standard_normal((16, D)), rng.standard_normal((D, 300))
+    assert _same(K._seq_dot_panel(P, MT), K._fold_dot_panel(P, MT))
+    assert K._EINSUM_SEQ_OK is False
+
+
 # ----------------------------------------------------------- band / PQ
 
 

@@ -41,16 +41,16 @@ def _fork_free_local_fs(conf: dict[str, str]) -> dict[str, str]:
     """The confs that install the fork-free ``file://`` in a session.
 
     Launches the JVM with ``conf`` and the jar on its class path when no
-    JVM runs yet. Returns no conf for a JVM started before (by other code,
-    whose file system stays as it is) or one that cannot load the class
-    (a user's ``--driver-class-path`` replaced the jar's): that JVM keeps
-    Hadoop's own ``file://``."""
+    JVM runs yet. Returns no conf for a JVM that cannot load the class:
+    one other code started, or one whose class path a user's
+    ``--driver-class-path`` replaced. That JVM keeps Hadoop's own
+    ``file://``. A JVM this function launched keeps the jar after
+    ``spark.stop()``, so the next session in it gets the confs again."""
     from pyspark import SparkConf, SparkContext
 
-    if SparkContext._gateway is not None:
-        return {}
     cp = {"spark.driver.extraClassPath": _LOCAL_FS_JAR}
-    SparkContext._ensure_initialized(conf=SparkConf().setAll({**conf, **cp}.items()))
+    if SparkContext._gateway is None:
+        SparkContext._ensure_initialized(conf=SparkConf().setAll({**conf, **cp}.items()))
     try:
         SparkContext._jvm.java.lang.Class.forName(_LOCAL_FS)
     except Exception:  # noqa: BLE001 — py4j's wrapped ClassNotFoundException

@@ -32,7 +32,9 @@ DAYS, PARTS, ROWS, BATCHES = 10, 24, 3000, 6
 # Writes ROWS log rows over DAYS dates in PARTS partitions (DAYS * PARTS
 # data files), then drains BATCHES json files through a checkpointed
 # stream one file a micro-batch; prints the file system classes, the
-# JVM's reaped-children ticks around each step and Hadoop's mode bits.
+# JVM's reaped-children ticks around each step and Hadoop's mode bits,
+# then stops the session and reports the FileContext file system of a
+# second get_spark session in the same JVM.
 CHILD = """
 import json, os, sys
 sys.path.insert(0, {root!r})
@@ -81,19 +83,25 @@ q = stream_to_log(events, os.path.join(out, "stream"), os.path.join(out, "ckpt")
 q.awaitTermination(120)
 t3 = ticks()
 
+def afs(conf):
+    return (jvm.org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
+            .getDefaultFileSystem().getClass().getName())
+
 perm = jvm.org.apache.hadoop.fs.permission.FsPermission
 umask = perm.getUMask(conf)
-print("RESULT " + json.dumps({{
+res = {{
     "fs": jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf).getClass().getName(),
-    "afs": jvm.org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
-        .getDefaultFileSystem().getClass().getName(),
+    "afs": afs(conf),
     "write_ticks": t1 - t0,
     "stream_ticks": t3 - t2,
     "file_mode": perm.getFileDefault().applyUMask(umask).toShort(),
     "dir_mode": perm.getDirDefault().applyUMask(umask).toShort(),
     "log_rows": spark.read.parquet(os.path.join(out, "logs")).count(),
     "stream_rows": spark.read.parquet(os.path.join(out, "stream")).count(),
-}}))
+}}
+spark.stop()
+res["restart_afs"] = afs(get_spark("localfs-again")._jsc.hadoopConfiguration())
+print("RESULT " + json.dumps(res))
 """
 
 
@@ -166,6 +174,15 @@ def test_partitioned_write_and_checkpoint_commits_fork_nothing(shim_run):
         assert got == {res["dir_mode"] if is_dir else res["file_mode"]}, key
     assert len(os.listdir(os.path.join(out, "ckpt", "commits"))) >= 2 * BATCHES  # + .crc
     assert res["stream_rows"] == 5 * BATCHES
+
+
+def test_a_session_restarted_in_the_same_jvm_keeps_the_shim(shim_run, stock_run):
+    """``spark.stop()`` then ``get_spark()`` builds a new session in the
+    JVM the first one launched, which still holds the jar; the new
+    FileContexts (the streaming checkpoint manager's) are the shim's. A
+    JVM without the jar stays on Hadoop's."""
+    assert shim_run[1]["restart_afs"] == session._LOCAL_FS + "$Context"
+    assert session._LOCAL_FS not in stock_run[1]["restart_afs"]
 
 
 def test_a_jvm_without_the_jar_keeps_hadoops_file_system_and_writes(shim_run, stock_run):

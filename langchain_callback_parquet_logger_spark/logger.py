@@ -51,9 +51,9 @@ import atexit
 import datetime as dt
 import json
 import logging
+import os
 import signal
 import threading
-import weakref
 from collections import abc
 from typing import Any, Iterable, Literal, Mapping, Sequence
 
@@ -66,9 +66,10 @@ from .sinks import CompositeSink, ParquetSink, create_sink
 _log = logging.getLogger(__name__)
 
 # Every logger not yet closed by ``__exit__``. The process's exit paths
-# flush them: one atexit hook, and a SIGTERM hook (see _on_sigterm). A
-# weak set does not keep a dropped logger alive.
-_OPEN: weakref.WeakSet[SparkParquetLogger] = weakref.WeakSet()
+# flush them: one atexit hook, and a SIGTERM hook (see _on_sigterm). The
+# set keeps a dropped logger alive until exit, so its buffer is written
+# then.
+_OPEN: set[SparkParquetLogger] = set()
 
 
 def _flush_open() -> None:
@@ -100,7 +101,19 @@ def _track(lg: SparkParquetLogger) -> None:
         signal.signal(signal.SIGTERM, _on_sigterm)
 
 
+def _forget_parent() -> None:
+    """In a forked child (a multiprocessing worker, which Pool.terminate()
+    ends by SIGTERM): drop the copies of the parent's loggers, whose rows
+    the parent writes, and the parent's SIGTERM hook, so SIGTERM ends the
+    child at once. A logger the child opens tracks itself anew."""
+    _OPEN.clear()
+    if signal.getsignal(signal.SIGTERM) is _on_sigterm:
+        signal.signal(signal.SIGTERM, signal.SIG_DFL)
+
+
 atexit.register(_flush_open)
+if hasattr(os, "register_at_fork"):  # Windows has no fork
+    os.register_at_fork(after_in_child=_forget_parent)
 
 
 # The JSON scalars, which conversion returns as they are.
@@ -324,12 +337,6 @@ class SparkParquetLogger:
             with_date=self.partition_on == "date",
         )
         self.sink.write(table)
-
-    def __del__(self) -> None:
-        # the exit hooks hold a logger weakly: one dropped with rows in
-        # its buffer writes them now
-        if getattr(self, "_buffer", None):
-            self.flush()
 
     def __enter__(self) -> "SparkParquetLogger":
         return self

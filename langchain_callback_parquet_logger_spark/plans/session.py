@@ -10,6 +10,8 @@ operators, and shuffle partitions sized to cores instead of the 200 default.
 from __future__ import annotations
 
 import os
+import re
+import shlex
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -35,29 +37,64 @@ _LOCAL_FS_JAR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jvm", "localfs.jar"
 )
 _LOCAL_FS = "langchain_callback_parquet_logger_spark.jvm.ForkFreeLocalFs"
+# one line of a properties file: key, then value
+_PROPERTY = re.compile(r"\s*([^#!\s=:][^\s=:]*)\s*[=:\s]\s*(.*)")
+
+
+def _submit_default(key: str) -> str | None:
+    """The value that spark-submit's properties files give ``key``: a
+    ``--properties-file`` in PYSPARK_SUBMIT_ARGS first, then
+    spark-defaults.conf in SPARK_CONF_DIR (or the Spark home's conf)
+    unless a properties file replaced it. Parses ``key value``,
+    ``key=value`` and ``key: value`` lines, as java.util.Properties does
+    without escapes or continuations."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    files = [b for a, b in zip(args, args[1:]) if a == "--properties-file"]
+    files += [a.split("=", 1)[1] for a in args if a.startswith("--properties-file=")]
+    if not files or "--load-spark-defaults" in args:
+        conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+        files.append(os.path.join(conf_dir, "spark-defaults.conf"))
+    for path in files:
+        if not os.path.isfile(path):
+            continue
+        with open(path, encoding="utf-8") as f:
+            found = [m[2].strip() for m in map(_PROPERTY.match, f) if m and m[1] == key]
+        if found:
+            return found[-1]
+    return None
 
 
 def _fork_free_local_fs(conf: dict[str, str]) -> dict[str, str]:
     """The confs that install the fork-free ``file://`` in a session.
 
     Launches the JVM with ``conf`` and the jar on its class path when no
-    JVM runs yet. Returns no conf for a JVM that cannot load the class:
-    one other code started, or one whose class path a user's
-    ``--driver-class-path`` replaced. That JVM keeps Hadoop's own
-    ``file://``. A JVM this function launched keeps the jar after
-    ``spark.stop()``, so the next session in it gets the confs again."""
+    JVM runs yet. The jar goes on through
+    ``spark.driver.defaultExtraClassPath``, which the launcher appends to
+    ``spark.driver.extraClassPath`` (from ``--driver-class-path``, a
+    ``--conf`` or spark-defaults.conf), joined to any value spark-defaults
+    already gives it, so no class path a user configured is replaced.
+    Returns no conf for a JVM that cannot load the class: one other code
+    started. That JVM keeps Hadoop's own ``file://``. A JVM this function
+    launched keeps the jar after ``spark.stop()``, so the next session in
+    it gets the confs again."""
     from pyspark import SparkConf, SparkContext
 
-    cp = {"spark.driver.extraClassPath": _LOCAL_FS_JAR}
     if SparkContext._gateway is None:
-        SparkContext._ensure_initialized(conf=SparkConf().setAll({**conf, **cp}.items()))
+        key = "spark.driver.defaultExtraClassPath"
+        cp = os.pathsep.join(filter(None, [_submit_default(key), _LOCAL_FS_JAR]))
+        SparkContext._ensure_initialized(conf=SparkConf().setAll([*conf.items(), (key, cp)]))
     try:
         SparkContext._jvm.java.lang.Class.forName(_LOCAL_FS)
     except Exception:  # noqa: BLE001 — py4j's wrapped ClassNotFoundException
         return {}
     return {
-        **cp,
         "spark.hadoop.fs.file.impl": _LOCAL_FS + "$Checksummed",
+        # FileContext, which the streaming checkpoint manager renames through.
+        # Spark's FileSystem-based manager would avoid FileContext with one
+        # conf, but for every scheme, and where a rename does not replace
+        # (HDFS) it returns without error from an overwriting commit.
         "spark.hadoop.fs.AbstractFileSystem.file.impl": _LOCAL_FS + "$Context",
     }
 

@@ -28,9 +28,11 @@ from langchain_callback_parquet_logger_spark.plans import session
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SOURCE = os.path.join(os.path.dirname(session._LOCAL_FS_JAR), "ForkFreeLocalFs.java")
 DAYS, PARTS, ROWS, BATCHES = 10, 24, 3000, 6
+PROBES = ("localfs-probe-extra.txt", "localfs-probe-default.txt")
 
-# Writes ROWS log rows over DAYS dates in PARTS partitions (DAYS * PARTS
-# data files), then drains BATCHES json files through a checkpointed
+# Starts the session (code may start a JVM before get_spark does) and
+# reports which class path entries the JVM can see; writes ROWS log rows
+# over DAYS dates in PARTS partitions (DAYS * PARTS data files), then drains BATCHES json files through a checkpointed
 # stream one file a micro-batch; prints the file system classes, the
 # JVM's reaped-children ticks around each step and Hadoop's mode bits,
 # then stops the session and reports the FileContext file system of a
@@ -45,8 +47,11 @@ from langchain_callback_parquet_logger_spark.streaming.ingest import (
     read_event_stream, stream_to_log)
 
 out = {out!r}
+{first}
 spark = get_spark("localfs")
 jvm = spark.sparkContext._jvm
+loader = jvm.java.lang.ClassLoader.getSystemClassLoader()
+resources = [n for n in {probes!r} if loader.getResource(n) is not None]
 conf = spark._jsc.hadoopConfiguration()
 uri = jvm.java.net.URI("file:///")
 pid = jvm.java.lang.ProcessHandle.current().pid()
@@ -90,6 +95,7 @@ def afs(conf):
 perm = jvm.org.apache.hadoop.fs.permission.FsPermission
 umask = perm.getUMask(conf)
 res = {{
+    "resources": resources,
     "fs": jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf).getClass().getName(),
     "afs": afs(conf),
     "write_ticks": t1 - t0,
@@ -105,11 +111,11 @@ print("RESULT " + json.dumps(res))
 """
 
 
-def run_child(out: str, submit_args: str = "pyspark-shell") -> dict:
+def run_child(out: str, first: str = "", **env: str) -> dict:
     script = CHILD.format(root=ROOT, out=out, rows=ROWS, days=DAYS, parts=PARTS,
-                          batches=BATCHES)
-    env = {**os.environ, "PYSPARK_SUBMIT_ARGS": submit_args,
-           "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "512m"}
+                          batches=BATCHES, first=first, probes=list(PROBES))
+    env = {**os.environ, "PYSPARK_SUBMIT_ARGS": "pyspark-shell",
+           "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "512m", **env}
     proc = subprocess.run([sys.executable, "-c", script], env=env, cwd=ROOT,
                           capture_output=True, text=True, timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
@@ -119,16 +125,31 @@ def run_child(out: str, submit_args: str = "pyspark-shell") -> dict:
 
 @pytest.fixture(scope="module")
 def shim_run(tmp_path_factory):
+    """A deployment's spark-defaults.conf puts its own entries on the
+    driver's class path, through both keys the launcher joins."""
     out = str(tmp_path_factory.mktemp("shim"))
-    return out, run_child(out)
+    entries = {}
+    for key, probe in zip(("extra", "default"), PROBES):
+        entries[key] = os.path.join(out, "cp-" + key)
+        os.makedirs(entries[key])
+        open(os.path.join(entries[key], probe), "w").close()
+    conf_dir = os.path.join(out, "conf")
+    os.makedirs(conf_dir)
+    with open(os.path.join(conf_dir, "spark-defaults.conf"), "w") as f:
+        f.write(f"spark.driver.extraClassPath   {entries['extra']}\n"
+                f"spark.driver.defaultExtraClassPath={entries['default']}\n")
+    return out, run_child(out, SPARK_CONF_DIR=conf_dir)
 
 
 @pytest.fixture(scope="module")
 def stock_run(tmp_path_factory):
-    """A user's ``--driver-class-path`` replaces the jar's class path, so
-    the JVM cannot load the shim."""
+    """A JVM other code started before ``get_spark`` holds no jar, so it
+    cannot load the shim."""
     out = str(tmp_path_factory.mktemp("stock"))
-    return out, run_child(out, f"--driver-class-path {out} pyspark-shell")
+    first = ('from pyspark.sql import SparkSession\n'
+             'SparkSession.builder.master("local[2]").config("spark.driver.memory", "512m")'
+             '.getOrCreate()')
+    return out, run_child(out, first)
 
 
 def modes(root: str) -> dict[tuple[bool, str], set[int]]:
@@ -183,6 +204,16 @@ def test_a_session_restarted_in_the_same_jvm_keeps_the_shim(shim_run, stock_run)
     JVM without the jar stays on Hadoop's."""
     assert shim_run[1]["restart_afs"] == session._LOCAL_FS + "$Context"
     assert session._LOCAL_FS not in stock_run[1]["restart_afs"]
+
+
+def test_the_jar_joins_the_class_path_a_user_configured(shim_run):
+    """The entries that spark-defaults.conf gives
+    ``spark.driver.extraClassPath`` and ``spark.driver.defaultExtraClassPath``
+    stay on the class path beside the jar. (``--driver-class-path`` sets
+    the first key, so it keeps the jar too.)"""
+    res = shim_run[1]
+    assert res["resources"] == list(PROBES)
+    assert res["fs"] == session._LOCAL_FS + "$Checksummed"
 
 
 def test_a_jvm_without_the_jar_keeps_hadoops_file_system_and_writes(shim_run, stock_run):

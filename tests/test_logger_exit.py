@@ -128,14 +128,30 @@ def test_down_sink_under_continue_loses_only_its_batches(tmp_path):
     assert rows == N - BUFFER
 
 
-def test_dropped_logger_writes_its_buffer_when_collected(tmp_path):
-    """The exit hooks hold loggers weakly; a logger dropped with rows in
-    its buffer writes them when it is collected, before any exit hook."""
+def test_dropped_logger_writes_its_buffer_at_exit(tmp_path):
+    """The exit hooks hold every open logger; one dropped with rows in
+    its buffer is kept alive and flushed at exit."""
     proc, rows = run_child(tmp_path, end="""
         del logger
         import gc
         gc.collect()
-        os._exit(0)
+    """)
+    assert proc.returncode == 0, proc.stderr
+    assert rows == N
+
+
+def test_terminated_forked_workers_write_no_rows_of_the_parent(tmp_path):
+    """A forked multiprocessing worker starts with a copy of the parent's
+    buffered rows and SIGTERM's default action, not the parent's hook.
+    ``Pool.terminate()`` ends each worker by SIGTERM; the worker writes
+    none of the copy, and the parent writes its rows once at exit."""
+    proc, rows = run_child(tmp_path, end="""
+        import multiprocessing
+        pool = multiprocessing.get_context("fork").Pool(2)
+        assert pool.map(abs, range(-4, 0)) == [4, 3, 2, 1]
+        assert pool.apply(signal.getsignal, (signal.SIGTERM,)) == signal.SIG_DFL
+        pool.terminate()
+        pool.join()
     """)
     assert proc.returncode == 0, proc.stderr
     assert rows == N
